@@ -274,12 +274,13 @@ def run_warc_ingest(spark, root: str) -> float:
     *.warc.gz → archive explode (gunzip members, HTTP payload decode) →
     2xx/clean filter → container-sniffed byte-stream parse."""
     from pdf_extractor_scripts_spark.sources.spans import parse_binary_to_spans
-    from pdf_extractor_scripts_spark.sources.warcparse import read_warc_docs
+    from pdf_extractor_scripts_spark.sources.warcparse import (
+        CLEAN_RECORD,
+        read_warc_docs,
+    )
 
     t0 = time.time()
-    docs = read_warc_docs(spark, root).filter(
-        "archive_error IS NULL AND revisit_of IS NULL AND "
-        "(http_status IS NULL OR http_status BETWEEN 200 AND 299)")
+    docs = read_warc_docs(spark, root).filter(CLEAN_RECORD)
     _force(parse_binary_to_spans(docs, container="auto"))
     return time.time() - t0
 
@@ -949,6 +950,7 @@ def scaling_warc() -> None:
         read_binary_docs,
     )
     from pdf_extractor_scripts_spark.sources.warcparse import (
+        CLEAN_RECORD,
         docs_from_warc_ranges,
         docs_from_warcs,
         index_warc_archives,
@@ -968,12 +970,9 @@ def scaling_warc() -> None:
     ).localCheckpoint(eager=True)
     n_archives = archives.count()
 
-    clean = ("archive_error IS NULL AND revisit_of IS NULL AND "
-             "(http_status IS NULL OR http_status BETWEEN 200 AND 299)")
-
     def run(n: int) -> float:
         t0 = time.time()
-        docs = docs_from_warcs(archives.coalesce(n)).filter(clean)
+        docs = docs_from_warcs(archives.coalesce(n)).filter(CLEAN_RECORD)
         _force(parse_binary_to_spans(docs, container="auto"))
         return time.time() - t0
 
@@ -987,7 +986,7 @@ def scaling_warc() -> None:
     def run_split(n: int) -> float:
         t0 = time.time()
         docs = docs_from_warc_ranges(
-            ranges.repartition(n, "warc_file", "offset")).filter(clean)
+            ranges.repartition(n, "warc_file", "offset")).filter(CLEAN_RECORD)
         _force(parse_binary_to_spans(docs, container="auto"))
         return time.time() - t0
 
@@ -1622,6 +1621,7 @@ def skew_warc() -> None:
         read_binary_docs,
     )
     from pdf_extractor_scripts_spark.sources.warcparse import (
+        CLEAN_RECORD,
         index_warc_archives,
         read_warc_docs,
         read_warc_docs_split,
@@ -1638,13 +1638,10 @@ def skew_warc() -> None:
     spark, log_dir = _eventlog_session("bench-warc-skew")
     app_id = spark.sparkContext.applicationId
 
-    clean = ("archive_error IS NULL AND revisit_of IS NULL AND "
-             "(http_status IS NULL OR http_status BETWEEN 200 AND 299)")
-
     def run(split: bool) -> float:
         docs = (read_warc_docs_split(spark, root, target_bytes=target,
                                      max_members=max_members)
-                if split else read_warc_docs(spark, root)).filter(clean)
+                if split else read_warc_docs(spark, root)).filter(CLEAN_RECORD)
         t0 = time.time()
         _force(parse_binary_to_spans(docs, container="auto"))
         return time.time() - t0

@@ -80,6 +80,8 @@ def _session(app: str):
 
 
 def main(argv: list[str] | None = None) -> int:
+    from .sources.spans import FORMATS, read_binary_docs, read_documents
+
     p = argparse.ArgumentParser(prog="pdf_extractor_scripts_spark")
     p.add_argument("--mode", choices=["batch", "analyze", "single-doc",
                                       "synthetic", "media"],
@@ -87,10 +89,7 @@ def main(argv: list[str] | None = None) -> int:
     p.add_argument("--input", help="spans table path (parquet/Iceberg) or, "
                    "with --input-format pdf/html/web, a directory of raw "
                    "documents")
-    p.add_argument("--input-format",
-                   choices=["spans", "pdf", "html", "docx", "xlsx", "odt",
-                            "rtf", "pptx", "epub", "text", "md", "csv", "feed", "mime",
-                            "web", "warc"],
+    p.add_argument("--input-format", choices=["spans", *FORMATS, "warc"],
                    default="spans",
                    help="web = a mixed crawl directory: every file, "
                    "container sniffed per document (PDF or HTML); "
@@ -121,7 +120,6 @@ def main(argv: list[str] | None = None) -> int:
         if not args.input:
             p.error("--input (a directory of PDF files) required")
         from .operators.multimodal import decode_pdf_media, media_from_pdfs
-        from .sources.spans import read_binary_docs
 
         feats = decode_pdf_media(
             media_from_pdfs(read_binary_docs(spark, args.input, glob="*"))
@@ -134,6 +132,7 @@ def main(argv: list[str] | None = None) -> int:
         spark.stop()
         return 0
 
+    parse_fallbacks = warc_errors = None
     if args.mode == "synthetic":
         from .fixtures import corpus_df_dist
 
@@ -141,85 +140,13 @@ def main(argv: list[str] | None = None) -> int:
     else:
         if not args.input:
             p.error("--input required")
+        if args.input_format != "spans":
+            parse_fallbacks = spark.sparkContext.accumulator(0)
         if args.input_format == "warc":
-            from .sources.spans import parse_binary_to_spans
-            from .sources.warcparse import read_warc_docs
-
             warc_errors = spark.sparkContext.accumulator(0)
-            exploded = read_warc_docs(spark, args.input,
-                                      error_acc=warc_errors)
-            # classic crawl-processing filter: framed-clean archives,
-            # 2xx responses and bare resource/conversion payloads —
-            # column predicates, no re-parse; revisit records are
-            # payload-less dedup pointers, not documents
-            clean = exploded.filter(
-                "archive_error IS NULL AND revisit_of IS NULL AND "
-                "(http_status IS NULL OR http_status BETWEEN 200 AND 299)")
-            parse_fallbacks = spark.sparkContext.accumulator(0)
-            # doc_id is already the WARC-Target-URI — no path stripping;
-            # the HTTP Content-Type charset rides along as the
-            # transport-layer decode hint for HTML documents
-            docs = parse_binary_to_spans(clean, fallback_acc=parse_fallbacks,
-                                         container="auto",
-                                         ctype_col="content_type")
-        elif args.input_format in ("pdf", "html", "docx", "xlsx", "odt",
-                                   "rtf", "pptx", "epub", "text", "md",
-                                   "csv", "feed", "mime", "web"):
-            import pyspark.sql.functions as F
-
-            from .sources.spans import read_binary_docs, parse_binary_to_spans
-
-            glob, container = {
-                "pdf": ("*.pdf", "pdf"),
-                "html": ("*.htm*", "html"),
-                "docx": ("*.docx", "docx"),
-                "xlsx": ("*.xlsx", "xlsx"),
-                "odt": ("*.{odt,ods}", "odt"),
-                "rtf": ("*.rtf", "rtf"),
-                "pptx": ("*.pptx", "pptx"),
-                "epub": ("*.epub", "epub"),
-                "text": ("*.txt", "text"),
-                "md": ("*.md", "md"),
-                "csv": ("*.{csv,tsv}", "csv"),
-                "feed": ("*.{xml,rss,atom}", "feed"),
-                "mime": ("*.{mht,mhtml,eml}", "mime"),
-                "web": ("*", "auto"),
-            }[args.input_format]
-            binary = read_binary_docs(spark, args.input, glob=glob)
-            parse_fallbacks = spark.sparkContext.accumulator(0)
-            parsed = parse_binary_to_spans(binary, fallback_acc=parse_fallbacks,
-                                           container=container)
-            # logical doc_id = path relative to --input (P1 filename
-            # detection runs on it, so vendor path prefixes survive).
-            # binaryFile reports URIs (file:/..., hdfs://nn/..., s3a://...)
-            # with %20-style escapes; decode, drop the scheme from BOTH the
-            # reported path and the resolved base, then strip the base
-            # prefix with length arithmetic — no user path ever enters a
-            # regex, so metacharacters in --input can't mis-match or throw.
-            import os
-            import re as _re
-
-            _scheme = r"^[A-Za-z][A-Za-z0-9+.\-]*:(//)?"
-            base = args.input.rstrip("/")
-            if not _re.match(_scheme, base):
-                base = os.path.abspath(base)  # relative local path → file URI path
-            prefix = _re.sub(_scheme, "", base) + "/"
-            # url_decode is form-decoding (`+` → space); URIs from binaryFile
-            # percent-escape everything else, so protect literal `+` first to
-            # get pure percent-decoding
-            decoded = F.url_decode(F.regexp_replace("doc_id", r"\+", "%2B"))
-            path = F.regexp_replace(decoded, _scheme, "")
-            docs = parsed.withColumn(
-                "doc_id",
-                F.when(
-                    F.startswith(path, F.lit(prefix)),
-                    F.substring(path, len(prefix) + 1, 2**31 - 1),
-                ).otherwise(path),
-            )
-        else:
-            from .sources.spans import read_spans
-
-            docs = read_spans(spark, args.input)
+        docs = read_documents(spark, args.input, args.input_format,
+                              fallback_acc=parse_fallbacks,
+                              error_acc=warc_errors)
 
     if args.mode == "analyze":
         out = with_route(with_vendor(with_assembled_text(docs))).select(
@@ -252,11 +179,12 @@ def main(argv: list[str] | None = None) -> int:
             res = run_pipeline(docs, salt=args.salt)
             res.write.format("noop").mode("overwrite").save()
             print("pipeline completed (no --output: dry run)")
-    if args.mode in ("batch", "analyze") and args.input_format in (
-            "pdf", "html", "web", "warc"):
-        print(f"parse fallbacks (degraded to empty page): "
-              f"{parse_fallbacks.value}")
-        if args.input_format == "warc":
+        # only here has every document been parsed: analyze's show(50)
+        # evaluates just the rows it prints
+        if parse_fallbacks is not None:
+            print(f"parse fallbacks (degraded to empty page): "
+                  f"{parse_fallbacks.value}")
+        if warc_errors is not None:
             print(f"archives with framing errors (prefix salvaged): "
                   f"{warc_errors.value}")
     spark.stop()

@@ -24,10 +24,6 @@ from __future__ import annotations
 import random
 
 
-def _span(kind: str, text: str = "", media_ref: str = "") -> dict:
-    return {"kind": kind, "text": text, "media_ref": media_ref}
-
-
 def _money(rng: random.Random, lo: float, hi: float) -> str:
     v = round(rng.uniform(lo, hi), 2)
     return f"{v:,.2f}"

@@ -26,23 +26,34 @@ from __future__ import annotations
 import os
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
+
+from ..schemas import CHECKPOINT_SCHEMA, METRICS_SCHEMA
+
+_COMMIT_KEY = ["run_id", "partition_key", "attempt_id"]
+
+
+def _committed(spark: SparkSession, ckpt_dir: str) -> DataFrame:
+    """The manifest: checkpoint rows of committed attempts, keyed by
+    (run_id, partition_key, attempt_id). Read with the known schema, so a
+    table whose first commit failed (an empty directory, or one holding only
+    ``_temporary/``) is an empty manifest rather than a schema error."""
+    ck = spark.read.schema(CHECKPOINT_SCHEMA).parquet(os.path.join(ckpt_dir, "checkpoints"))
+    return ck.filter(F.col("status") == "done")
+
+
+def _only_committed(df: DataFrame, spark: SparkSession, ckpt_dir: str) -> DataFrame:
+    """Semi-join ``df`` against the manifest on the commit key: rows of
+    attempts that crashed before their checkpoint write are excluded."""
+    committed = _committed(spark, ckpt_dir).select(*_COMMIT_KEY).distinct()
+    return df.join(F.broadcast(committed), _COMMIT_KEY, "left_semi")
 
 
 def committed_outputs(spark: SparkSession, ckpt_dir: str) -> DataFrame:
-    """out_spans restricted to COMMITTED attempts: semi-join against the
-    checkpoint manifest on (run_id, partition_key, attempt_id). Orphan rows
-    from attempts that crashed before their checkpoint write are excluded —
-    this is the read side of the manifest commit protocol."""
-    out = spark.read.parquet(os.path.join(ckpt_dir, "out_spans"))
-    ck = spark.read.parquet(os.path.join(ckpt_dir, "checkpoints"))
-    committed = (
-        ck.filter(F.col("status") == "done")
-        .select("run_id", "partition_key", "attempt_id")
-        .distinct()
-    )
-    return out.join(
-        F.broadcast(committed), ["run_id", "partition_key", "attempt_id"], "left_semi"
+    """out_spans restricted to COMMITTED attempts — the read side of the
+    manifest commit protocol."""
+    return _only_committed(
+        spark.read.parquet(os.path.join(ckpt_dir, "out_spans")), spark, ckpt_dir
     )
 
 
@@ -62,8 +73,7 @@ def backup_outputs(
     committed_outputs(spark, ckpt_dir).write.mode("errorifexists").partitionBy(
         "partition_key"
     ).parquet(os.path.join(dest, "out_spans"))
-    ck = spark.read.parquet(os.path.join(ckpt_dir, "checkpoints"))
-    ck.filter(F.col("status") == "done").write.mode("errorifexists").parquet(
+    _committed(spark, ckpt_dir).write.mode("errorifexists").parquet(
         os.path.join(dest, "manifest")
     )
     return dest
@@ -77,15 +87,8 @@ def restore_backup(spark: SparkSession, backup_path: str) -> DataFrame:
 def committed_metrics(spark: SparkSession, ckpt_dir: str) -> DataFrame:
     """metrics restricted to committed attempts (same manifest semi-join as
     committed_outputs) — uncommitted attempts must not double-count."""
-    mx = spark.read.parquet(os.path.join(ckpt_dir, "metrics"))
-    ck = spark.read.parquet(os.path.join(ckpt_dir, "checkpoints"))
-    committed = (
-        ck.filter(F.col("status") == "done")
-        .select("run_id", "partition_key", "attempt_id")
-        .distinct()
-    )
-    return mx.join(
-        F.broadcast(committed), ["run_id", "partition_key", "attempt_id"], "left_semi"
+    return _only_committed(
+        spark.read.parquet(os.path.join(ckpt_dir, "metrics")), spark, ckpt_dir
     )
 
 
@@ -158,23 +161,29 @@ def quality_report(spark: SparkSession, ckpt_dir: str) -> DataFrame:
     )
 
 
+def doc_bucket(n_buckets: int = 64) -> Column:
+    """The stable bucket of ``doc_id``: partition_key here, the partition
+    column of sources.spans.write_spans."""
+    return F.pmod(F.xxhash64("doc_id"), F.lit(n_buckets)).cast("int")
+
+
 def with_partition_key(df: DataFrame, n_buckets: int = 64) -> DataFrame:
-    return df.withColumn(
-        "partition_key", F.pmod(F.xxhash64("doc_id"), F.lit(n_buckets)).cast("int")
-    )
+    return df.withColumn("partition_key", doc_bucket(n_buckets))
 
 
 def completed_buckets(spark: SparkSession, ckpt_dir: str, run_id: str) -> DataFrame | None:
-    path = os.path.join(ckpt_dir, "checkpoints")
+    """Buckets committed for ``run_id``; None when there is no checkpoint
+    table yet. An unreadable table raises: treating it as missing would
+    commit every bucket a second time."""
+    from pyspark.errors import AnalysisException
+
     try:
-        ck = spark.read.parquet(path)
-    except Exception:
-        return None
-    return (
-        ck.filter((F.col("run_id") == run_id) & (F.col("status") == "done"))
-        .select("partition_key")
-        .distinct()
-    )
+        done = _committed(spark, ckpt_dir)
+    except AnalysisException as e:
+        if e.getCondition() == "PATH_NOT_FOUND":
+            return None
+        raise
+    return done.filter(F.col("run_id") == run_id).select("partition_key").distinct()
 
 
 def resume_filter(df: DataFrame, spark: SparkSession, ckpt_dir: str, run_id: str) -> DataFrame:
@@ -191,31 +200,23 @@ def write_outputs(
     ckpt_dir: str,
     run_id: str,
     attempt_id: str | None = None,
-) -> str:
+) -> int:
     """Write extracted spans partitioned by bucket, then per-bucket metrics
     rows, then the checkpoint rows — the checkpoint write is the COMMIT (see
-    module docstring). Returns the attempt_id used."""
+    module docstring). Returns the number of documents committed; an empty
+    ``result`` writes nothing."""
+    import datetime
     import uuid
 
-    attempt_id = attempt_id or uuid.uuid4().hex
     out_path = os.path.join(ckpt_dir, "out_spans")
     ck_path = os.path.join(ckpt_dir, "checkpoints")
     mx_path = os.path.join(ckpt_dir, "metrics")
-
-    result.select(
-        "partition_key", "doc_id", "vendor", "route", "out_spans",
-        "validation_failed", "ocr_used", "n_pages", "extraction_confidence",
-    ).withColumn("run_id", F.lit(run_id)).withColumn(
-        "attempt_id", F.lit(attempt_id)
-    ).write.mode("append").partitionBy("partition_key").parquet(out_path)
 
     # Materialize the per-bucket stats on the driver (one tiny row per
     # bucket) and write checkpoint + metrics from FRESH DataFrames. Writing
     # them lazily would re-evaluate a lineage that (on a resumed run) reads
     # the checkpoint table this very call appends to — a self-referential
     # plan that silently yields zero rows on recompute.
-    import datetime
-
     stat_rows = (
         result.groupBy("partition_key")
         .agg(
@@ -226,8 +227,17 @@ def write_outputs(
         )
         .collect()
     )
+    if not stat_rows:
+        return 0
+    attempt_id = attempt_id or uuid.uuid4().hex
+    result.select(
+        "partition_key", "doc_id", "vendor", "route", "out_spans",
+        "validation_failed", "ocr_used", "n_pages", "extraction_confidence",
+    ).withColumn("run_id", F.lit(run_id)).withColumn(
+        "attempt_id", F.lit(attempt_id)
+    ).write.mode("append").partitionBy("partition_key").parquet(out_path)
+
     now = datetime.datetime.now()
-    from ..schemas import CHECKPOINT_SCHEMA, METRICS_SCHEMA
 
     # metrics BEFORE checkpoints: the checkpoint append is the commit point,
     # so a crash anywhere earlier leaves only uncommitted (orphan) rows.
@@ -244,4 +254,4 @@ def write_outputs(
         for r in stat_rows
     ]
     spark.createDataFrame(ck_rows, schema=CHECKPOINT_SCHEMA).write.mode("append").parquet(ck_path)
-    return attempt_id
+    return sum(r["docs"] for r in stat_rows)

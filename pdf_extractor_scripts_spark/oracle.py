@@ -680,11 +680,6 @@ def _schlage_section(lines: list[str], name: str) -> dict[str, str]:
     return out
 
 
-# backwards-compat alias used by the Arrow kernel before generalization
-def _schlage_address_blocks(text: str, fields: dict[str, str]) -> None:
-    _address_blocks("schlage", text, fields)
-
-
 def _money(s: str) -> float:
     try:
         return float(s.replace(",", "").replace("$", ""))

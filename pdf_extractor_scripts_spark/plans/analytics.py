@@ -20,7 +20,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
-from .registry import register, load_table, spread, _utc
+from .registry import register, load_table, _utc
 
 
 # --------------------------------------------------------------------------

@@ -77,10 +77,7 @@ def run_with_checkpoint(
     # localCheckpoint truncates lineage: the writes below must NOT be able to
     # re-evaluate a plan that reads the checkpoint table they append to.
     result = result.localCheckpoint(eager=True)
-    n = result.count()
-    if n > 0:
-        write_outputs(result, spark, ckpt_dir, run_id)
-    return n
+    return write_outputs(result, spark, ckpt_dir, run_id)
 
 
 def flagship(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -279,11 +279,6 @@ def aes_ecb_encrypt_block(key: bytes, block: bytes) -> bytes:
     return _aes_encrypt_block(rks, nr, block)
 
 
-def aes_ecb_decrypt_block(key: bytes, block: bytes) -> bytes:
-    rks, nr = _expand_key(key)
-    return _aes_decrypt_block(rks, nr, block)
-
-
 def aes_cbc_encrypt(key: bytes, iv: bytes, data: bytes,
                     pad: bool = True) -> bytes:
     """AES-CBC; PKCS#7 padding when ``pad`` (the PDF stream convention)."""

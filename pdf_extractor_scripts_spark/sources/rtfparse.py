@@ -209,10 +209,6 @@ def parse_rtf_spans(data: bytes, doc_id: str) -> list[dict]:
     return spans
 
 
-def sniff_rtf(content: bytes) -> bool:
-    return content.lstrip()[:5].startswith(b"{\\rtf")
-
-
 # ---------------------------------------------------------------------------
 # fixture writer
 

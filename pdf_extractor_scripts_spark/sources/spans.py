@@ -26,12 +26,12 @@ N_BUCKETS_DEFAULT = 64
 
 def write_spans(docs: DataFrame, path: str, n_buckets: int = N_BUCKETS_DEFAULT) -> None:
     """Write the corpus partitioned by a stable doc_id hash bucket — the
-    same bucket function the checkpoint table keys on, so resume and scan
+    bucket function the checkpoint table keys on, so resume and scan
     pruning agree (operators/checkpoint.py)."""
+    from ..operators.checkpoint import doc_bucket
+
     (
-        docs.withColumn(
-            "bucket", F.pmod(F.xxhash64("doc_id"), F.lit(n_buckets)).cast("int")
-        )
+        docs.withColumn("bucket", doc_bucket(n_buckets))
         .write.mode("overwrite")
         .partitionBy("bucket")
         .parquet(path)
@@ -231,3 +231,82 @@ def parse_binary_to_spans(binary_docs: DataFrame, fallback_acc=None,
 
     cols = ["doc_id", "content"] + ([ctype_col] if ctype_col else [])
     return binary_docs.select(*cols).mapInPandas(parse, out_schema)
+
+
+# --input-format → (binaryFile glob, parse_binary_to_spans container) for
+# directories of raw documents; "spans" (a bucketed spans table) and "warc"
+# (web archives, exploded record-wise) are read_documents' other two forms
+FORMATS = {
+    "pdf": ("*.pdf", "pdf"),
+    "html": ("*.htm*", "html"),
+    "docx": ("*.docx", "docx"),
+    "xlsx": ("*.xlsx", "xlsx"),
+    "odt": ("*.{odt,ods}", "odt"),
+    "rtf": ("*.rtf", "rtf"),
+    "pptx": ("*.pptx", "pptx"),
+    "epub": ("*.epub", "epub"),
+    "text": ("*.txt", "text"),
+    "md": ("*.md", "md"),
+    "csv": ("*.{csv,tsv}", "csv"),
+    "feed": ("*.{xml,rss,atom}", "feed"),
+    "mime": ("*.{mht,mhtml,eml}", "mime"),
+    "web": ("*", "auto"),
+}
+
+_SCHEME = r"^[A-Za-z][A-Za-z0-9+.\-]*:(//)?"
+
+
+def relative_doc_id(docs: DataFrame, base: str) -> DataFrame:
+    """Rewrite ``doc_id`` from the URI binaryFile reports to the path
+    relative to ``base`` (P1 filename detection runs on it, so vendor path
+    prefixes survive). binaryFile reports URIs (file:/..., hdfs://nn/...,
+    s3a://...) with %20-style escapes; decode, drop the scheme from BOTH the
+    reported path and the resolved base, then strip the base prefix with
+    length arithmetic — no user path ever enters a regex, so metacharacters
+    in ``base`` can't mis-match or throw. A path outside ``base`` keeps its
+    scheme-less decoded form."""
+    import os
+    import re
+
+    base = base.rstrip("/")
+    if not re.match(_SCHEME, base):
+        base = os.path.abspath(base)  # relative local path → file URI path
+    prefix = re.sub(_SCHEME, "", base) + "/"
+    # url_decode is form-decoding (`+` → space); URIs from binaryFile
+    # percent-escape everything else, so protect literal `+` first to get
+    # pure percent-decoding
+    decoded = F.url_decode(F.regexp_replace("doc_id", r"\+", "%2B"))
+    path = F.regexp_replace(decoded, _SCHEME, "")
+    return docs.withColumn(
+        "doc_id",
+        F.when(
+            F.startswith(path, F.lit(prefix)),
+            F.substring(path, len(prefix) + 1, 2**31 - 1),
+        ).otherwise(path),
+    )
+
+
+def read_documents(spark: SparkSession, path: str, fmt: str = "spans",
+                   fallback_acc=None, error_acc=None) -> DataFrame:
+    """The one intake: ``path`` in input format ``fmt`` → (doc_id, spans,
+    ...) rows ready for plans.pipeline. ``spans`` reads a bucketed spans
+    table; ``warc`` explodes web archives, keeps clean records
+    (warcparse.CLEAN_RECORD) and parses them with the HTTP Content-Type as
+    decode hint, doc_id = WARC-Target-URI; every FORMATS entry parses the
+    matching files under ``path``, doc_id = path relative to ``path``.
+    ``fallback_acc`` counts parse fallbacks, ``error_acc`` WARC archives
+    with framing errors."""
+    if fmt == "spans":
+        return read_spans(spark, path)
+    if fmt == "warc":
+        from .warcparse import CLEAN_RECORD, read_warc_docs
+
+        clean = read_warc_docs(spark, path, error_acc=error_acc).filter(CLEAN_RECORD)
+        return parse_binary_to_spans(clean, fallback_acc=fallback_acc,
+                                     ctype_col="content_type")
+    if fmt not in FORMATS:
+        raise ValueError(f"unknown input format {fmt!r}")
+    glob, container = FORMATS[fmt]
+    parsed = parse_binary_to_spans(read_binary_docs(spark, path, glob=glob),
+                                   fallback_acc=fallback_acc, container=container)
+    return relative_doc_id(parsed, path)

@@ -500,6 +500,14 @@ def docs_from_warcs(binary_archives, error_acc=None):
     return binary_archives.mapInPandas(explode, schema)
 
 
+# the classic crawl-processing filter over read_warc_docs rows: framed-clean
+# archives, 2xx responses and bare resource/conversion payloads — column
+# predicates, no re-parse; revisit records are payload-less dedup pointers,
+# not documents
+CLEAN_RECORD = ("archive_error IS NULL AND revisit_of IS NULL AND "
+                "(http_status IS NULL OR http_status BETWEEN 200 AND 299)")
+
+
 def read_warc_docs(spark, path: str, error_acc=None):
     """binaryFile scan over *.warc / *.warc.gz under ``path`` →
     per-document rows (docs_from_warcs)."""

@@ -17,10 +17,26 @@ streamed result of N files equals the batch run over their union).
 
 from __future__ import annotations
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 from ..schemas import DOC_SCHEMA
 from ..plans.pipeline import run_with_checkpoint
+
+
+def _start(spark: SparkSession, stream: DataFrame, out_dir: str, run_id: str,
+           stream_checkpoint: str | None):
+    """Start ``stream`` with every micro-batch committed by
+    run_with_checkpoint under run_id ``<run_id>-b<batch_id>``."""
+
+    def process(batch_df, batch_id: int) -> None:
+        run_with_checkpoint(
+            spark, batch_df, out_dir, run_id=f"{run_id}-b{batch_id}"
+        )
+
+    writer = stream.writeStream.foreachBatch(process).trigger(availableNow=True)
+    if stream_checkpoint:
+        writer = writer.option("checkpointLocation", stream_checkpoint)
+    return writer.start()
 
 
 def start_extraction_stream(
@@ -41,16 +57,7 @@ def start_extraction_stream(
         .option("maxFilesPerTrigger", max_files_per_trigger)
         .parquet(source_dir)
     )
-
-    def process(batch_df, batch_id: int) -> None:
-        run_with_checkpoint(
-            spark, batch_df, out_dir, run_id=f"{run_id}-b{batch_id}"
-        )
-
-    writer = stream.writeStream.foreachBatch(process).trigger(availableNow=True)
-    if stream_checkpoint:
-        writer = writer.option("checkpointLocation", stream_checkpoint)
-    return writer.start()
+    return _start(spark, stream, out_dir, run_id, stream_checkpoint)
 
 
 def start_pdf_ingest_stream(
@@ -69,12 +76,9 @@ def start_pdf_ingest_stream(
     up exactly once by the source checkpoint; doc_id = path relative to
     ``pdf_dir`` so P1 filename detection sees vendor prefixes (reference
     entry point A, batch_processor.py:76-112, as a continuous service)."""
-    import os
-    import re as _re
-
     import pyspark.sql.functions as F
 
-    from ..sources.spans import parse_binary_to_spans
+    from ..sources.spans import parse_binary_to_spans, relative_doc_id
 
     stream = (
         spark.readStream.format("binaryFile")
@@ -87,30 +91,5 @@ def start_pdf_ingest_stream(
         .load(pdf_dir)
         .select(F.col("path").alias("doc_id"), F.col("content"))
     )
-    parsed = parse_binary_to_spans(stream)
-    # same scheme-agnostic, regex-safe prefix strip as the batch CLI
-    _scheme = r"^[A-Za-z][A-Za-z0-9+.\-]*:(//)?"
-    base = pdf_dir.rstrip("/")
-    if not _re.match(_scheme, base):
-        base = os.path.abspath(base)
-    prefix = _re.sub(_scheme, "", base) + "/"
-    path = F.regexp_replace(
-        F.url_decode(F.regexp_replace("doc_id", r"\+", "%2B")), _scheme, ""
-    )
-    parsed = parsed.withColumn(
-        "doc_id",
-        F.when(
-            F.startswith(path, F.lit(prefix)),
-            F.substring(path, len(prefix) + 1, 2**31 - 1),
-        ).otherwise(path),
-    )
-
-    def process(batch_df, batch_id: int) -> None:
-        run_with_checkpoint(
-            spark, batch_df, out_dir, run_id=f"{run_id}-b{batch_id}"
-        )
-
-    writer = parsed.writeStream.foreachBatch(process).trigger(availableNow=True)
-    if stream_checkpoint:
-        writer = writer.option("checkpointLocation", stream_checkpoint)
-    return writer.start()
+    parsed = relative_doc_id(parse_binary_to_spans(stream), pdf_dir)
+    return _start(spark, parsed, out_dir, run_id, stream_checkpoint)

@@ -71,6 +71,19 @@ def test_cli_modes(spark, tmpdir):
     got = spark.read.parquet(os.path.join(out, "out_spans"))
     assert got.count() == 24
 
+    # every raw format reports its parse fallbacks in a batch run
+    from pdf_extractor_scripts_spark.sources.docxparse import build_docx
+
+    raw = os.path.join(tmpdir, "docx")
+    os.makedirs(raw)
+    with open(os.path.join(raw, "ok.docx"), "wb") as f:
+        f.write(build_docx(["Invoice paragraph"]))
+    with open(os.path.join(raw, "bad.docx"), "wb") as f:
+        f.write(b"not a zip package")
+    r = _run_cli(["--mode", "batch", "--input", raw, "--input-format", "docx"])
+    assert r.returncode == 0, r.stderr[-1500:]
+    assert "parse fallbacks (degraded to empty page): 1" in r.stdout
+
 
 def test_spark_submit_pyfiles_ship(tmpdir):
     """North-rule ship form: `spark-submit --py-files engine.zip job.py`

@@ -88,6 +88,46 @@ def test_crash_between_data_and_checkpoint_write_is_invisible(spark, ckpt_dir):
     assert mx.filter(F.col("metric") == "docs").agg(F.sum("value")).first()[0] == 20
 
 
+def test_unreadable_checkpoint_table_raises_instead_of_rerunning(spark, ckpt_dir):
+    """A checkpoint table that exists but cannot be read is not "no
+    commits": resuming as a fresh run would commit every bucket twice."""
+    import os
+
+    from py4j.protocol import Py4JJavaError
+
+    os.makedirs(f"{ckpt_dir}/checkpoints")
+    with open(f"{ckpt_dir}/checkpoints/part-00000.parquet", "wb") as f:
+        f.write(b"not a parquet file" * 8)
+    docs = corpus_df(spark, n_docs=8, seed=42)
+    with pytest.raises(Py4JJavaError):
+        run_with_checkpoint(spark, docs, ckpt_dir, run_id="r1")
+    assert not os.path.exists(f"{ckpt_dir}/out_spans")
+
+
+@pytest.mark.parametrize("leftover", ["empty", "temporary_only"])
+def test_checkpoint_table_left_by_failed_first_commit_is_no_commits(
+    spark, ckpt_dir, leftover
+):
+    """A first checkpoint write that failed leaves a directory with no data
+    file: empty after an aborted job, only ``_temporary/`` after a driver
+    crash. No bucket was committed, so the run proceeds as a fresh one and
+    commits every document once."""
+    import os
+
+    os.makedirs(f"{ckpt_dir}/checkpoints")
+    if leftover == "temporary_only":
+        # an uncommitted task attempt of the crashed job
+        attempt = f"{ckpt_dir}/checkpoints/_temporary/0/_temporary/attempt_0_0000_m_000000_0"
+        os.makedirs(attempt)
+        with open(f"{attempt}/part-00000.parquet", "wb") as f:
+            f.write(b"partial")
+    docs = corpus_df(spark, n_docs=8, seed=42)
+    assert run_with_checkpoint(spark, docs, ckpt_dir, run_id="r1") == 8
+    ids = [r["doc_id"] for r in committed_outputs(spark, ckpt_dir).select("doc_id").collect()]
+    assert sorted(ids) == sorted(r["doc_id"] for r in docs.select("doc_id").collect())
+    assert run_with_checkpoint(spark, docs, ckpt_dir, run_id="r1") == 0
+
+
 def test_backup_sink_snapshots_committed_outputs(spark, ckpt_dir):
     """S9 (output_consolidator.py:412-430): the backup is a self-contained
     snapshot of the COMMITTED outputs — orphan attempts excluded — plus the
