@@ -1,7 +1,7 @@
 #!/usr/bin/env python
-"""Extra (non-official) per-query benchmarks for optimization work — bench.py
-is FROZEN for measurement, so isolated noop-sink timings (guide §1.4) live
-here. Times each named query with df.write.format("noop") on
+"""Extra (non-official) per-query benchmarks for optimization work:
+isolated noop-sink timings (guide §1.4) of any registered query, on the
+bench.py session. Times each named query with df.write.format("noop") on
 local[$SPARK_GRAFT_CPUS] over $SPARK_GRAFT_SF_DIR, min of N cache-cleared
 passes, and prints one JSON line.
 
@@ -17,8 +17,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+from bench import CPUS, SF_DIR, _force, make_session  # noqa: E402
 
 DEFAULT = [
     "dedup_minhash_lsh",
@@ -51,29 +50,13 @@ def main() -> None:
         i += 1
     names = args or DEFAULT
 
-    from pyspark.sql import SparkSession
-
-    spark = (
-        SparkSession.builder.master(f"local[{CPUS}]")
-        .appName("bench-extra")
-        .config("spark.sql.shuffle.partitions", str(CPUS))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "1000")
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "32g"))
-        .getOrCreate()
-    )
+    spark = make_session(CPUS)
     from pdf_extractor_scripts_spark.plans.registry import all_specs
 
     specs = all_specs()
 
-    def force(df) -> None:
-        df.write.format("noop").mode("overwrite").save()
-
     # warmup: JVM/JIT + python workers
-    force(specs[names[0]].spark(spark, SF_DIR))
+    _force(specs[names[0]].spark(spark, SF_DIR))
     spark.catalog.clearCache()
 
     out: dict[str, float] = {}
@@ -85,7 +68,7 @@ def main() -> None:
             spark.catalog.clearCache()
             spark.sparkContext.setJobDescription(f"bench_extra:{name}")
             t0 = time.time()
-            force(specs[name].spark(spark, SF_DIR))
+            _force(specs[name].spark(spark, SF_DIR))
             dt = round(time.time() - t0, 3)
             samples[name].append(dt)
             best = dt if best is None else min(best, dt)

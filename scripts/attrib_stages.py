@@ -23,16 +23,13 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import pyspark.sql.functions as F  # noqa: E402
 
-
-def _force(df) -> None:
-    df.write.format("noop").mode("overwrite").save()
+from bench import CPUS, _force, make_session  # noqa: E402
 
 
 def main() -> None:
     n_docs = int(sys.argv[1]) if len(sys.argv) > 1 else 100_000
     rounds = int(sys.argv[2]) if len(sys.argv) > 2 else 3
 
-    from bench import make_session
     from pdf_extractor_scripts_spark.fixtures import corpus_df_dist
     from pdf_extractor_scripts_spark.operators.detect import (
         _joined_expr,
@@ -84,7 +81,7 @@ def main() -> None:
         "full_primary_only": full_primary_only,
     }
 
-    spark = make_session(int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
+    spark = make_session(CPUS)
     w = corpus_df_dist(spark, 20_000, seed=7).localCheckpoint(eager=True)
     for _ in range(2):
         _force(run_pipeline(w))

@@ -190,32 +190,84 @@ def test_batch_summary_reference_shape(spark, tmpdir):
 
 
 def test_bench_best_records_per_sf(tmp_path, monkeypatch):
-    """The bench retry baseline is PER SCALE FACTOR: a smoke run at
-    sf0.001 must never clobber the sf0.1 rolling-min table (it did
-    once), and the legacy single-sf file shape still reads."""
+    """The bench retry baseline is PER SCALE FACTOR AND CORE COUNT: a
+    smoke run at sf0.001 must never clobber the sf0.1 rolling-min table
+    (it did once), a 4-core run must neither retry against nor overwrite
+    the 32-core records, and both legacy file shapes still read (as
+    32-core tables)."""
     import json
 
     import bench
 
     monkeypatch.setattr(bench, "__file__", str(tmp_path / "bench.py"))
+    monkeypatch.setattr(bench, "CPUS", 32)
     os.makedirs(tmp_path / "BENCH")
     legacy = {"sf": "sf0.1", "queries": {"q1": 1.5, "q2": 2.0}}
     with open(tmp_path / "BENCH" / "best_records.json", "w") as f:
         json.dump(legacy, f)
 
-    assert bench._stored_records() == {"sf0.1": {"q1": 1.5, "q2": 2.0}}
+    assert bench._stored_records() == {("sf0.1", 32): {"q1": 1.5, "q2": 2.0}}
 
     # an sf0.001 update adds its own table without touching sf0.1
     monkeypatch.setattr(bench, "SF_DIR", "/x/sf0.001")
     bench._update_best_records({}, {"q1": 0.1})
     t = bench._stored_records()
-    assert t["sf0.1"] == {"q1": 1.5, "q2": 2.0}
-    assert t["sf0.001"] == {"q1": 0.1}
+    assert t[("sf0.1", 32)] == {"q1": 1.5, "q2": 2.0}
+    assert t[("sf0.001", 32)] == {"q1": 0.1}
 
     # an sf0.1 run reads its own records and only improves downward
     monkeypatch.setattr(bench, "SF_DIR", "/x/sf0.1")
     assert bench._best_records() == {"q1": 1.5, "q2": 2.0}
     bench._update_best_records(bench._best_records(), {"q1": 1.8, "q2": 1.2})
     t = bench._stored_records()
-    assert t["sf0.1"] == {"q1": 1.5, "q2": 1.2}
-    assert t["sf0.001"] == {"q1": 0.1}
+    assert t[("sf0.1", 32)] == {"q1": 1.5, "q2": 1.2}
+    assert t[("sf0.001", 32)] == {"q1": 0.1}
+
+    # the sf-keyed shape written before records kept cpus reads as 32-core
+    with open(tmp_path / "BENCH" / "best_records.json", "w") as f:
+        json.dump({"sf0.1": {"q1": 1.5, "q2": 1.2}}, f)
+    assert bench._stored_records() == {("sf0.1", 32): {"q1": 1.5, "q2": 1.2}}
+
+    # a 4-core run sees no 32-core record, neither stored nor round-written,
+    # and its update leaves the 32-core table intact
+    with open(tmp_path / "BENCH_r07.json", "w") as f:
+        json.dump({"parsed": {"sf": "sf0.1", "cpus": 32,
+                              "queries": {"q1": 0.9}}}, f)
+    assert bench._best_records() == {"q1": 0.9, "q2": 1.2}
+    assert bench._prev_round_queries() == {"round": 7, "queries": {"q1": 0.9}}
+    monkeypatch.setattr(bench, "CPUS", 4)
+    assert bench._best_records() == {}
+    assert bench._prev_round_queries() == {}
+    bench._update_best_records(bench._best_records(), {"q1": 3.0})
+    t = bench._stored_records()
+    assert t[("sf0.1", 4)] == {"q1": 3.0}
+    assert t[("sf0.1", 32)] == {"q1": 1.5, "q2": 1.2}
+    assert bench._best_records() == {"q1": 3.0}
+
+
+def test_bench_scaling_pairs_fit_the_host():
+    """N→4N pairs come from the core count: today's (4,16),(8,32) at 32
+    cores, never more slots than cores."""
+    import bench
+
+    assert bench.scaling_pairs(32) == [(4, 16), (8, 32)]
+    assert bench.scaling_pairs(8) == [(1, 4), (2, 8)]
+    assert bench.scaling_pairs(4) == [(1, 4)]
+
+
+def test_bench_ingest_table_reads_every_tree(spark, tmp_path, monkeypatch):
+    """Every INGESTS entry's scan + parse over its own generated tree
+    yields one parsed document per generated one: a wrong glob or
+    container in the table shows up as a missing, fallback or raw-bytes
+    document. n=14 cycles the office tree through all seven forms twice."""
+    import bench
+
+    monkeypatch.setattr(bench, "TREE_ROOT", str(tmp_path))
+    n = 14
+    for name, ing in bench.INGESTS.items():
+        rows = ing.parse(ing.scan(spark, ing.tree(n, 1))).select(
+            "parse_ok",
+            F.expr("concat_ws(' ', transform(spans, s -> s.text))").alias("text"),
+        ).collect()
+        assert len(rows) == n, (name, len(rows))
+        assert all(r["parse_ok"] and "%PDF" not in r["text"] for r in rows), name
