@@ -27,6 +27,7 @@ import os
 
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 from ..schemas import CHECKPOINT_SCHEMA, METRICS_SCHEMA
 
@@ -237,21 +238,37 @@ def write_outputs(
         "attempt_id", F.lit(attempt_id)
     ).write.mode("append").partitionBy("partition_key").parquet(out_path)
 
-    now = datetime.datetime.now()
+    # aware UTC: Arrow would read a naive datetime in the session time zone
+    now = datetime.datetime.now(datetime.timezone.utc)
 
     # metrics BEFORE checkpoints: the checkpoint append is the commit point,
     # so a crash anywhere earlier leaves only uncommitted (orphan) rows.
     mx_rows = [
-        (run_id, attempt_id, "extract", r["partition_key"], metric, int(r[metric]))
+        {"run_id": run_id, "attempt_id": attempt_id, "stage": "extract",
+         "partition_key": r["partition_key"], "metric": metric, "value": r[metric]}
         for r in stat_rows
         for metric in ("docs", "pages", "ocr_fallbacks", "validation_failures")
     ]
-    spark.createDataFrame(mx_rows, schema=METRICS_SCHEMA).write.mode("append").parquet(mx_path)
+    _local_rows(spark, mx_rows, METRICS_SCHEMA).write.mode("append").parquet(mx_path)
 
     ck_rows = [
-        (run_id, r["partition_key"], attempt_id, "done", r["docs"], r["pages"],
-         r["ocr_fallbacks"], r["validation_failures"], now)
+        {**r.asDict(), "run_id": run_id, "attempt_id": attempt_id,
+         "status": "done", "updated_at": now}
         for r in stat_rows
     ]
-    spark.createDataFrame(ck_rows, schema=CHECKPOINT_SCHEMA).write.mode("append").parquet(ck_path)
+    _local_rows(spark, ck_rows, CHECKPOINT_SCHEMA).write.mode("append").parquet(ck_path)
     return sum(r["docs"] for r in stat_rows)
+
+
+def _local_rows(spark: SparkSession, rows: list[dict], schema: StructType) -> DataFrame:
+    """Driver-side ``rows`` as a one-partition relation that writes one file.
+
+    An Arrow table becomes a JVM ``LocalTableScan`` whatever the Arrow
+    session conf says; ``createDataFrame(list)`` would parallelize the list
+    into ``defaultParallelism`` Python tasks, each paying the Python
+    worker's fixed start-up cost, and write one file per slice."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    table = pa.Table.from_pylist(rows, schema=to_arrow_schema(schema))
+    return spark.createDataFrame(table, schema).coalesce(1)

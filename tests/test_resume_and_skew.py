@@ -163,6 +163,63 @@ def test_backup_sink_snapshots_committed_outputs(spark, ckpt_dir):
         backup_outputs(spark, ckpt_dir, label="snap_0001")
 
 
+def test_commit_appends_one_file_per_bookkeeping_table(spark, ckpt_dir):
+    """One commit appends exactly one parquet file to ``checkpoints/`` and
+    one to ``metrics/``, however many task slots the session has, and the
+    rows read back are exactly the commit's."""
+    import glob
+    from collections import Counter
+
+    from pdf_extractor_scripts_spark.schemas import CHECKPOINT_SCHEMA, METRICS_SCHEMA
+
+    docs = corpus_df(spark, n_docs=N_DOCS, seed=42)
+    n = run_with_checkpoint(spark, docs, ckpt_dir, run_id="r1")
+    assert n == N_DOCS
+    for table in ("checkpoints", "metrics"):
+        assert len(glob.glob(f"{ckpt_dir}/{table}/part-*.parquet")) == 1, table
+
+    ck = spark.read.parquet(f"{ckpt_dir}/checkpoints")
+    mx = spark.read.parquet(f"{ckpt_dir}/metrics")
+    for df, schema in ((ck, CHECKPOINT_SCHEMA), (mx, METRICS_SCHEMA)):
+        assert [(f.name, f.dataType) for f in df.schema] == [
+            (f.name, f.dataType) for f in schema]
+
+    buckets = sorted(r["partition_key"] for r in
+                     with_partition_key(docs).select("partition_key").distinct().collect())
+    ck_rows = ck.collect()
+    assert sorted(r["partition_key"] for r in ck_rows) == buckets
+    assert sum(r["docs"] for r in ck_rows) == n
+    assert {(r["run_id"], r["status"]) for r in ck_rows} == {("r1", "done")}
+    assert len({r["attempt_id"] for r in ck_rows}) == 1
+
+    metrics = ("docs", "pages", "ocr_fallbacks", "validation_failures")
+    mx_rows = mx.collect()
+    assert Counter(r["partition_key"] for r in mx_rows) == {b: 4 for b in buckets}
+    assert {(r["partition_key"], r["metric"], r["value"]) for r in mx_rows} == {
+        (r["partition_key"], m, r[m]) for r in ck_rows for m in metrics}
+    assert {(r["run_id"], r["attempt_id"], r["stage"]) for r in mx_rows} == {
+        ("r1", ck_rows[0]["attempt_id"], "extract")}
+
+
+def test_checkpoint_updated_at_is_the_commit_instant_in_any_session_zone(spark, ckpt_dir):
+    """``updated_at`` is the commit's instant, not a wall-clock reading
+    shifted by the session time zone."""
+    import time
+
+    key = "spark.sql.session.timeZone"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "Asia/Kathmandu")  # UTC+05:45
+    try:
+        before = time.time_ns() // 1000
+        run_with_checkpoint(spark, corpus_df(spark, n_docs=8, seed=42), ckpt_dir, run_id="r1")
+        after = time.time_ns() // 1000
+        got = [r[0] for r in spark.read.parquet(f"{ckpt_dir}/checkpoints")
+               .selectExpr("unix_micros(updated_at)").collect()]
+    finally:
+        spark.conf.set(key, old)
+    assert got and all(before <= us <= after for us in got), (before, got, after)
+
+
 def test_checkpoint_key_stable_across_parallelism(spark):
     """Bucket ids must not depend on physical partitioning (SURVEY.md
     §7.3(4)) — same doc_id → same partition_key at any parallelism."""
