@@ -5,59 +5,20 @@ processors — SURVEY.md §3) collapse into one job:
 
     spark-submit --py-files pdf_extractor_scripts_spark.zip \
         -m pdf_extractor_scripts_spark \
-        --mode batch --input /data/spans --output /data/out \
-        --run-id r42 [--salt] [--n-buckets 64]
+        --mode batch --input /data/spans --output /data/out --run-id r42
 
     --mode analyze     detection + routing columns only (no extraction)
     --mode batch       full pipeline + checkpoint/lineage/metrics + resume
     --mode single-doc  one document's extracted spans to stdout (--doc-id)
     --mode synthetic   run over the deterministic fixture corpus (--n-docs)
     --mode media       distributed media decode audit over a document
-                       tree (PDF/DOCX/MHTML, container-sniffed): per-codec
-                       real pixel decode (DCT/CCITT/JBIG2/JPX/PNG) with
-                       decoded/undecoded accounting; --output writes the
-                       feature rows as parquet
+                       tree (every container form with media, sniffed):
+                       per-codec real pixel decode (DCT/CCITT/JBIG2/JPX/
+                       PNG) with decoded/undecoded accounting; --output
+                       writes the feature rows as parquet
 
-    --input-format spans   (default) bucketed spans parquet table
-    --input-format pdf     a directory of *.pdf files: binaryFile scan →
-                           byte-stream parse (sources/pdfparse.py) → spans;
-                           doc_id = path relative to --input
-    --input-format html    a directory of *.htm(l) files: boilerplate-strip
-                           main-content extraction (sources/htmlparse.py)
-    --input-format docx    a directory of *.docx office documents: OOXML
-                           package parse (sources/docxparse.py), headers/
-                           footers excluded as page chrome
-    --input-format xlsx    a directory of *.xlsx spreadsheets: one page per
-                           worksheet, one text span per row (sources/
-                           xlsxparse.py — spreadsheet invoices)
-    --input-format odt     a directory of *.odt/*.ods OpenDocument files
-                           (sources/odtparse.py — text and spreadsheets)
-    --input-format rtf     a directory of *.rtf legacy office documents
-                           (sources/rtfparse.py)
-    --input-format pptx    a directory of *.pptx slide decks: one page per
-                           slide, notes/masters excluded (sources/pptxparse.py)
-    --input-format epub    a directory of *.epub books: one page per spine
-                           chapter, classifier-off block extraction
-                           (sources/epubparse.py)
-    --input-format text    a directory of *.txt plain-text documents (the
-                           WET-extract form): blank-line paragraphs
-    --input-format md      a directory of *.md markdown documents (READMEs,
-                           docs sites); images become media spans
-    --input-format csv     a directory of *.csv/*.tsv delimited records:
-                           one row-coherent span per record
-    --input-format feed    a directory of RSS/Atom feeds (*.xml/*.rss/
-                           *.atom): one page per entry, escaped-HTML
-                           bodies through the block extractor
-    --input-format mime    a directory of *.mht(ml) / *.eml MIME documents:
-                           MHTML saved pages and mail with document
-                           attachments (sources/mimeparse.py)
-    --input-format web     a mixed crawl directory: every file, container
-                           sniffed per document (PDF, HTML, DOCX or MIME)
-    --input-format warc    a directory of *.warc / *.warc.gz web archives
-                           (ISO 28500 — the format a crawl corpus ships
-                           in): archives explode into per-document rows
-                           (sources/warcparse.py), 2xx payloads flow
-                           through the same container-sniffed parse
+``--help`` lists every ``--input-format``; the raw-document forms come from
+``sources.containers.CONTAINERS``.
 """
 
 from __future__ import annotations
@@ -80,28 +41,35 @@ def _session(app: str):
 
 
 def main(argv: list[str] | None = None) -> int:
+    from .sources.containers import CONTAINERS
     from .sources.spans import FORMATS, read_binary_docs, read_documents
 
-    p = argparse.ArgumentParser(prog="pdf_extractor_scripts_spark")
+    formats = [
+        ("spans", "(default) a bucketed spans parquet table"),
+        *((name, c.about) for name, c in CONTAINERS.items()),
+        ("web", "a mixed crawl directory: every file, container sniffed"),
+        ("warc", "*.warc(.gz) web archives, exploded record-wise, then "
+                 "container-sniffed"),
+    ]
+    p = argparse.ArgumentParser(
+        prog="pdf_extractor_scripts_spark",
+        formatter_class=argparse.RawDescriptionHelpFormatter,
+        epilog="input formats:\n"
+        + "".join(f"  {name:<6} {about}\n" for name, about in formats)
+        + "raw documents are read recursively; doc_id = the path relative\n"
+        "to --input (warc: the WARC-Target-URI)")
     p.add_argument("--mode", choices=["batch", "analyze", "single-doc",
                                       "synthetic", "media"],
                    default="batch")
     p.add_argument("--input", help="spans table path (parquet/Iceberg) or, "
-                   "with --input-format pdf/html/web, a directory of raw "
-                   "documents")
+                   "with any other --input-format, a directory of raw "
+                   "documents or web archives")
     p.add_argument("--input-format", choices=["spans", *FORMATS, "warc"],
-                   default="spans",
-                   help="web = a mixed crawl directory: every file, "
-                   "container sniffed per document (PDF or HTML); "
-                   "warc = a directory of *.warc(.gz) web archives, "
-                   "exploded record-wise then container-sniffed")
+                   default="spans", help="see 'input formats' below")
     p.add_argument("--output", help="output/checkpoint directory")
     p.add_argument("--run-id", default="run0")
     p.add_argument("--doc-id", help="single-doc mode: which document")
     p.add_argument("--n-docs", type=int, default=1000, help="synthetic mode size")
-    p.add_argument("--salt", action="store_true",
-                   help="enable weight-aware salted repartition (skewed inputs)")
-    p.add_argument("--n-buckets", type=int, default=64)
     p.add_argument("--unified-json", metavar="DIR",
                    help="batch mode: also project the COMMITTED results to "
                         "the reference's UnifiedJSONSchema (json_schema.py) "
@@ -156,7 +124,7 @@ def main(argv: list[str] | None = None) -> int:
     elif args.mode == "single-doc":
         if not args.doc_id:
             p.error("--doc-id required for single-doc mode")
-        res = run_pipeline(docs.filter(docs.doc_id == args.doc_id), salt=False)
+        res = run_pipeline(docs.filter(docs.doc_id == args.doc_id))
         for row in res.collect():
             for s in row["out_spans"]:
                 print((s["kind"], s["text"], s["media_ref"], s["order"]))
@@ -176,7 +144,7 @@ def main(argv: list[str] | None = None) -> int:
                 )
                 print(f"unified JSON written to {args.unified_json}")
         else:
-            res = run_pipeline(docs, salt=args.salt)
+            res = run_pipeline(docs)
             res.write.format("noop").mode("overwrite").save()
             print("pipeline completed (no --output: dry run)")
         # only here has every document been parsed: analyze's show(50)

@@ -1,13 +1,14 @@
-"""The vectorized extraction stage: one Arrow pandas UDF per route.
+"""The vectorized extraction stage: one Arrow pandas UDF for both routes.
 
 The reference runs ~30 regex fields + vendor line-item scans per document in
 a Python loop (fallback_processor.py:196-242 dispatch); here one UDF call
 extracts everything for an Arrow batch of documents (SURVEY.md §2.10 UDF
-surface #3/#4). The UDF is applied twice — once over the text-route assembly,
-once over the stub-OCR assembly — each masked to the rows whose route needs
-it, so the expensive path only ever sees its own subset
-(fallback_processor.py:218-235 expensive-path gating, expressed as column
-masking instead of control flow).
+surface #3/#4). ``with_extraction`` applies the UDF once (``res_both``) with
+both the text-route and the stub-OCR assembly as arguments; the kernel
+resolves each row to one input by its route, so the expensive path only sees
+the rows whose route needs it (fallback_processor.py:218-235 expensive-path
+gating, expressed as a per-row pick instead of control flow). The other
+side's assembly is there for the step-3b fallback.
 """
 
 from __future__ import annotations
@@ -95,9 +96,8 @@ def _make_extract_udf(field_banks: dict, field_order: dict):
 
 
 def with_extraction(df: DataFrame) -> DataFrame:
-    """Adds res_t / res_o struct columns. Input text columns are nulled out
-    for routes that don't need them so the kernel skips those rows
-    (expensive-path gating as column masking). Hybrid schlage rows get the
+    """Adds res_t / res_o struct columns from one UDF call per batch; the
+    kernel picks each row's input by its route. Hybrid schlage rows get the
     all-pages stub-OCR assembly as their OCR candidate (the reference's
     multi-OCR renders every page — audit §21) plus the engine-confidence
     scalar the O6 pick compares on the reference's 0-1 scale."""

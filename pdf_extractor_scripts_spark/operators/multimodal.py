@@ -166,24 +166,14 @@ def media_from_pdfs(binary_docs: DataFrame) -> DataFrame:
     terminal codec name, and the /DecodeParms that non-self-describing
     codecs (CCITT G4) need — the distributed form of
     ``pdfparse.pdf_media_payloads``. Container-sniffed per document:
-    DOCX packages route through ``docxparse.docx_media_payloads`` and
-    MHTML/EML through ``mimeparse.mime_media_payloads`` (same output
-    contract), so one media audit covers the interleaved corpus.
+    every form with a media extractor in ``containers.CONTAINERS``
+    (DOCX, MHTML/EML, ODT, PPTX, EPUB — same output contract) routes
+    through it, so one media audit covers the interleaved corpus.
     A zero-shuffle Arrow map stage; docs that fail to parse contribute
     no rows (the SPAN ingest path counts those fallbacks — this stage
     is payload extraction only)."""
     from ..sources.compress import maybe_decompress
-    from ..sources.docxparse import docx_media_payloads
-    from ..sources.htmlparse import sniff_container
-    from ..sources.mimeparse import mime_media_payloads
-    from ..sources.odtparse import odt_media_payloads
-    from ..sources.pdfparse import pdf_media_payloads
-    from ..sources.epubparse import epub_media_payloads
-    from ..sources.pptxparse import pptx_media_payloads
-
-    extractors = {"docx": docx_media_payloads, "mime": mime_media_payloads,
-                  "odt": odt_media_payloads, "pptx": pptx_media_payloads,
-                  "epub": epub_media_payloads, "pdf": pdf_media_payloads}
+    from ..sources.containers import CONTAINERS, sniff
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
@@ -193,8 +183,8 @@ def media_from_pdfs(binary_docs: DataFrame) -> DataFrame:
                     # same unwrap as the span ingest path, so .pdf.gz
                     # docs appear in BOTH the spans and the media audit
                     raw = maybe_decompress(bytes(data))
-                    extract = extractors.get(sniff_container(raw))
-                    if extract is None:  # HTML: refs only, no payloads
+                    extract = CONTAINERS[sniff(raw)].media
+                    if extract is None:  # no payloads (HTML: refs only)
                         continue
                     rows = extract(raw, doc_id)
                 except Exception:

@@ -146,6 +146,8 @@ def _parse(data: bytes, doc_id: str) -> tuple[list[dict], list[dict]]:
     """One traversal → (spans, media payload descriptors), the shared
     core of parse_docx_spans and docx_media_payloads so span/payload
     media_refs can never drift apart."""
+    from .containers import image_filter
+
     try:
         zf = zipfile.ZipFile(io.BytesIO(data))
     except zipfile.BadZipFile as e:
@@ -198,7 +200,7 @@ def _parse(data: bytes, doc_id: str) -> tuple[list[dict], list[dict]]:
                 part = "/".join(norm)
                 raw = zf.read(part) if target and part in names else b""
                 payloads.append({"media_ref": ref, "payload": raw,
-                                 "filter": _image_filter(raw, target),
+                                 "filter": image_filter(raw, target),
                                  "params": {}})
                 img_i += 1
             spans.append({"kind": "media", "text": "", "media_ref": ref,
@@ -227,26 +229,6 @@ def _parse(data: bytes, doc_id: str) -> tuple[list[dict], list[dict]]:
     return spans, payloads
 
 
-def _image_filter(raw: bytes, target: str) -> str:
-    """Codec label from payload magic (extension only as fallback) —
-    DCTDecode for JPEG keeps the multimodal stage's PDF-side dispatch
-    working unchanged on DOCX media."""
-    if raw.startswith(b"\xff\xd8\xff"):
-        return "DCTDecode"
-    if raw.startswith(b"\x89PNG\r\n\x1a\n"):
-        return "PNG"
-    if raw.startswith((b"GIF87a", b"GIF89a")):
-        return "GIF"
-    if raw.startswith(b"BM"):
-        return "BMP"
-    if raw.startswith((b"II*\x00", b"MM\x00*")):
-        return "TIFF"
-    ext = target.rsplit(".", 1)[-1].lower() if "." in target else ""
-    return {"jpg": "DCTDecode", "jpeg": "DCTDecode", "png": "PNG",
-            "gif": "GIF", "bmp": "BMP", "tif": "TIFF",
-            "tiff": "TIFF", "emf": "EMF", "wmf": "WMF"}.get(ext, "Unknown")
-
-
 def parse_docx_spans(data: bytes, doc_id: str) -> list[dict]:
     """DOCX bytes → ordered (kind, text, media_ref, offset) spans in
     the corpus span grammar — the container triplet of
@@ -259,38 +241,6 @@ def docx_media_payloads(data: bytes, doc_id: str) -> list[dict]:
     media_refs aligned with parse_docx_spans' media spans (same shared
     traversal) — the DOCX twin of ``pdf_media_payloads``."""
     return _parse(data, doc_id)[1]
-
-
-def zip_container_form(content: bytes) -> str | None:
-    """'docx' | 'xlsx' | 'pptx' | 'epub' | 'odt' from the ZIP
-    package's main part, else None (plain archives: no parser — the
-    caller routes them to the PDF fallback chain, which rejects them
-    LOUDLY as a counted parse fallback rather than misparsing)."""
-    try:
-        with zipfile.ZipFile(io.BytesIO(content)) as zf:
-            names = set(zf.namelist())
-            if MAIN_PART in names:
-                return "docx"
-            if "xl/workbook.xml" in names:
-                return "xlsx"
-            if "ppt/presentation.xml" in names:
-                return "pptx"
-            if "META-INF/container.xml" in names:
-                mt = (zf.read("mimetype").decode("ascii", "replace").strip()
-                      if "mimetype" in names else "")
-                if mt == "application/epub+zip" or (
-                        not mt and "content.xml" not in names):
-                    return "epub"
-            if "content.xml" in names:
-                from .odtparse import MIMETYPE, MIMETYPE_ODS
-
-                mt = (zf.read("mimetype").decode("ascii", "replace").strip()
-                      if "mimetype" in names else "")
-                if mt in (MIMETYPE, MIMETYPE_ODS) or not mt:
-                    return "odt"  # the ODT parser handles both bodies
-    except Exception:
-        return None
-    return None
 
 
 # ---------------------------------------------------------------------------

@@ -47,7 +47,7 @@ def _opf_path(zf: zipfile.ZipFile) -> str:
 
 
 def _parse(data: bytes, doc_id: str) -> tuple[list[dict], list[dict]]:
-    from .docxparse import _image_filter
+    from .containers import image_filter
     from .htmlparse import extract_main_blocks
 
     try:
@@ -107,7 +107,7 @@ def _parse(data: bytes, doc_id: str) -> tuple[list[dict], list[dict]]:
                     ref = f"img://{doc_id}/{page}/{img_i}"
                     raw = zf.read(target)
                     payloads.append({"media_ref": ref, "payload": raw,
-                                     "filter": _image_filter(raw, target),
+                                     "filter": image_filter(raw, target),
                                      "params": {}})
                     img_i += 1
                 else:

@@ -408,59 +408,6 @@ def parse_html_spans(data: bytes | str, doc_id: str,
     return spans
 
 
-def sniff_container(content: bytes) -> str:
-    """'pdf' | 'html' | 'docx' | 'xlsx' | 'odt' | 'mime' from the
-    document bytes — the interleaved-crawl dispatch: a 100-TB web
-    corpus carries all the container forms in one table, so the parse
-    stage sniffs per document. ZIP packages are probed for their
-    office main part (word/document.xml, xl/workbook.xml,
-    content.xml); non-office ZIPs fall through to the PDF chain, which
-    rejects them as a COUNTED parse fallback instead of misparsing.
-    MIME (MHTML/EML) wins only for header-shaped leading bytes, so
-    HTML quoting mail headers stays HTML."""
-    if content[:3] == b"\xef\xbb\xbf":
-        # a UTF-8 BOM wraps any text-family form (Windows-generated
-        # feeds/markdown/csv); every text parser strips it itself, so
-        # sniff the content BEHIND it
-        content = content[3:]
-    head = content[:4096].lstrip()
-    if head.startswith(b"%PDF"):
-        return "pdf"
-    if head.startswith(b"{\\rtf"):
-        return "rtf"
-    if content[:4] == b"PK\x03\x04":
-        from .docxparse import zip_container_form
-
-        return zip_container_form(content) or "pdf"
-    if not head.startswith(b"<"):
-        from .mimeparse import looks_like_mime
-
-        if looks_like_mime(content):
-            return "mime"
-    if head.startswith(b"<"):
-        from .feedparse import looks_like_feed
-
-        if looks_like_feed(content):
-            return "feed"  # root-element match only: <rss/<feed/<rdf:RDF
-    low = head[:2048].lower()
-    if (low.startswith(b"<!doctype html") or b"<html" in low
-            or b"<head" in low or b"<body" in low):
-        return "html"
-    # BOM-prefixed or fragment HTML: any tag soup with no PDF header
-    if low.startswith(b"\xef\xbb\xbf<") or low.startswith(b"<"):
-        return "html"
-    from .mdparse import looks_like_csv, looks_like_markdown
-    from .textparse import looks_like_text
-
-    if looks_like_markdown(content):
-        return "md"  # README/docs-site corpora
-    if looks_like_csv(content):
-        return "csv"  # delimiter-consistent records
-    if looks_like_text(content):
-        return "text"  # WET conversion records, bare .txt — documents
-    return "pdf"
-
-
 def build_html(paragraphs: list[str], title: str = "Page",
                nav_items: tuple = ("Home", "Products", "About"),
                sidebar_items: tuple = ("Deals", "Newsletter"),

@@ -99,12 +99,6 @@ def _decode_text(part) -> str:
         return raw.decode("utf-8", errors="replace")
 
 
-def _image_filter(raw: bytes, name: str) -> str:
-    from .docxparse import _image_filter as f
-
-    return f(raw, name)
-
-
 def _plain_spans(text: str) -> list[dict]:
     """text/plain body → one text span per blank-line paragraph."""
     spans = [{"kind": "page_break", "text": "=== PAGE 1 ===",
@@ -143,6 +137,7 @@ def _parse(data: bytes, doc_id: str,
            depth: int = 0) -> tuple[list[dict], list[dict]]:
     """Shared traversal → (spans, media payload descriptors), refs
     aligned by construction (the docxparse pattern)."""
+    from .containers import image_filter
     from .docxparse import parse_docx_spans
     from .htmlparse import parse_html_spans
     from .pdfparse import parse_pdf_spans, pdf_media_payloads
@@ -212,7 +207,7 @@ def _parse(data: bytes, doc_id: str,
         if hit is not None:
             raw, name = hit
             payloads.append({"media_ref": ref, "payload": raw,
-                             "filter": _image_filter(raw, name),
+                             "filter": image_filter(raw, name),
                              "params": {}})
         else:
             payloads.append({"media_ref": ref, "payload": b"",

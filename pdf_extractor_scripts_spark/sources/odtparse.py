@@ -110,10 +110,10 @@ def _parse(data: bytes, doc_id: str) -> tuple[list[dict], list[dict]]:
             if internal:
                 ref = f"img://{doc_id}/1/{img_i}"
                 raw = zf.read(href if href in names else cand)
-                from .docxparse import _image_filter
+                from .containers import image_filter
 
                 payloads.append({"media_ref": ref, "payload": raw,
-                                 "filter": _image_filter(raw, href),
+                                 "filter": image_filter(raw, href),
                                  "params": {}})
                 img_i += 1
             else:

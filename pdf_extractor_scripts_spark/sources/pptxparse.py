@@ -117,7 +117,7 @@ def _shape_events(el):
 
 
 def _parse(data: bytes, doc_id: str) -> tuple[list[dict], list[dict]]:
-    from .docxparse import _image_filter
+    from .containers import image_filter
 
     try:
         zf = zipfile.ZipFile(io.BytesIO(data))
@@ -157,7 +157,7 @@ def _parse(data: bytes, doc_id: str) -> tuple[list[dict], list[dict]]:
                 ref = f"img://{doc_id}/{page}/{img_i}"
                 raw = zf.read(target) if target in names else b""
                 payloads.append({"media_ref": ref, "payload": raw,
-                                 "filter": _image_filter(raw, target),
+                                 "filter": image_filter(raw, target),
                                  "params": {}})
                 img_i += 1
             spans.append({"kind": "media", "text": "", "media_ref": ref,

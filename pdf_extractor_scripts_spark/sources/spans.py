@@ -20,6 +20,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from ..schemas import DOC_SCHEMA
+from .containers import CONTAINERS, sniff
 
 N_BUCKETS_DEFAULT = 64
 
@@ -92,16 +93,15 @@ def _coalesce_tiny_file_scan(df: DataFrame, path: str) -> DataFrame:
     return df.coalesce(target) if target < n else df
 
 
-def read_binary_docs(
-    spark: SparkSession, path: str, glob: str = "*.pdf", recursive: bool = True
-) -> DataFrame:
-    """S2-S5 ingestion shape: binaryFile source → (doc_id, content, length);
-    recurses into vendor subdirectories by default. Tiny-file trees are
-    coalesced to a sane task count (see _coalesce_tiny_file_scan)."""
+def read_binary_docs(spark: SparkSession, path: str,
+                     glob: str = "*.pdf") -> DataFrame:
+    """S2-S5 ingestion shape: binaryFile source → (doc_id, content, length),
+    recursing into vendor subdirectories. Tiny-file trees are coalesced to
+    a sane task count (see _coalesce_tiny_file_scan)."""
     df = (
         spark.read.format("binaryFile")
         .option("pathGlobFilter", glob)
-        .option("recursiveFileLookup", "true" if recursive else "false")
+        .option("recursiveFileLookup", "true")
         .load(path)
         .select(
             F.col("path").alias("doc_id"),
@@ -117,15 +117,14 @@ def parse_binary_to_spans(binary_docs: DataFrame, fallback_acc=None,
                           container: str = "auto",
                           ctype_col: str | None = None) -> DataFrame:
     """S2-S4 for real: batched byte-stream parsing as an Arrow
-    mapInPandas over ``content`` — for PDFs the xref walk, page-tree
-    traversal, FlateDecode and content-stream tokenization
-    (sources/pdfparse.py, pure stdlib; reference parse branches:
-    text_pdf_processor.py:661-670, pdf_text_detector.py:171-204); for
-    HTML the boilerplate-strip main-content extraction
-    (sources/htmlparse.py — the north rule's other container form).
-    ``container``: "auto" (default) sniffs per document — the
-    interleaved-crawl shape, where one 100-TB table carries both forms;
-    "pdf"/"html" pin the parser.
+    mapInPandas over ``content``, each document through its container's
+    parser (sources/containers.py — for PDFs the xref walk, page-tree
+    traversal, FlateDecode and content-stream tokenization; reference
+    parse branches: text_pdf_processor.py:661-670,
+    pdf_text_detector.py:171-204). ``container``: "auto" (default)
+    sniffs per document — the interleaved-crawl shape, where one 100-TB
+    table carries every form; a ``containers.CONTAINERS`` key pins that
+    form's parser.
 
     One output row per input document: (doc_id, spans, parse_ok,
     parse_error) in the corpus span grammar, directly consumable by
@@ -142,33 +141,17 @@ def parse_binary_to_spans(binary_docs: DataFrame, fallback_acc=None,
 
     ``ctype_col``: optional column holding each document's HTTP
     Content-Type (a WARC crawl delivers one per response) — its charset
-    parameter becomes the transport-layer encoding hint for HTML decode,
-    ranked per the WHATWG sniffing order (BOM > transport > meta).
+    parameter becomes the transport-layer encoding hint for the parsers
+    that take one, ranked per the WHATWG sniffing order (BOM > transport
+    > meta), and a text/plain type informs the sniff.
     """
     from pyspark.sql.types import BooleanType, StringType, StructField, StructType
 
     from ..schemas import DOC_SCHEMA
     from .compress import maybe_decompress
-    from .docxparse import parse_docx_spans
-    from .epubparse import parse_epub_spans
-    from .feedparse import parse_feed_spans
-    from .htmlparse import charset_of, parse_html_spans, sniff_container
-    from .mdparse import parse_csv_spans, parse_md_spans
-    from .mimeparse import parse_mime_spans
-    from .odtparse import parse_odt_spans
-    from .pdfparse import parse_pdf_spans
-    from .pptxparse import parse_pptx_spans
-    from .rtfparse import parse_rtf_spans
-    from .textparse import parse_text_spans, plausible_declared_text
-    from .xlsxparse import parse_xlsx_spans
+    from .htmlparse import charset_of
 
-    forms = {"html": None, "docx": parse_docx_spans,
-             "mime": parse_mime_spans, "xlsx": parse_xlsx_spans,
-             "odt": parse_odt_spans, "rtf": parse_rtf_spans,
-             "pptx": parse_pptx_spans, "epub": parse_epub_spans,
-             "feed": parse_feed_spans,
-             "md": None, "csv": None, "text": None, "pdf": None}
-    if container != "auto" and container not in forms:
+    if container != "auto" and container not in CONTAINERS:
         raise ValueError(f"unknown container {container!r}")
 
     out_schema = StructType(
@@ -191,34 +174,10 @@ def parse_binary_to_spans(binary_docs: DataFrame, fallback_acc=None,
                     # single-document compression wrappers (.pdf.gz,
                     # .txt.xz ...) unwrap before sniffing, bomb-capped
                     raw = maybe_decompress(bytes(content))
-                    form = container if container != "auto" \
-                        else sniff_container(raw)
-                    if (form == "pdf" and container == "auto"
-                            and not raw.lstrip()[:5].startswith(b"%PDF-")
-                            and (ctype or "").split(";")[0].strip().lower()
-                            == "text/plain"
-                            and plausible_declared_text(raw)):
-                        # transport-declared plain text in a legacy charset
-                        # (windows-1252 WET records fail the UTF-8 sniff);
-                        # binary served as text/plain fails the control-
-                        # byte floor and stays a counted fallback
-                        form = "text"
-                    if form == "html":
-                        spans = parse_html_spans(raw, doc_id,
-                                                 charset=charset_of(ctype))
-                    elif form == "text":
-                        spans = parse_text_spans(raw, doc_id,
-                                                 charset=charset_of(ctype))
-                    elif form == "md":
-                        spans = parse_md_spans(raw, doc_id,
-                                               charset=charset_of(ctype))
-                    elif form == "csv":
-                        spans = parse_csv_spans(raw, doc_id,
-                                                charset=charset_of(ctype))
-                    elif forms.get(form) is not None:
-                        spans = forms[form](raw, doc_id)
-                    else:
-                        spans = parse_pdf_spans(raw, doc_id)
+                    form = CONTAINERS[container if container != "auto"
+                                      else sniff(raw, ctype)]
+                    spans = (form.parse(raw, doc_id, charset=charset_of(ctype))
+                             if form.charset else form.parse(raw, doc_id))
                 except Exception as e:  # fallback-chain terminal: empty page
                     err = f"{type(e).__name__}: {e}"
                     spans = [{"kind": "page_break", "text": "=== PAGE 1 ===",
@@ -234,24 +193,11 @@ def parse_binary_to_spans(binary_docs: DataFrame, fallback_acc=None,
 
 
 # --input-format → (binaryFile glob, parse_binary_to_spans container) for
-# directories of raw documents; "spans" (a bucketed spans table) and "warc"
-# (web archives, exploded record-wise) are read_documents' other two forms
-FORMATS = {
-    "pdf": ("*.pdf", "pdf"),
-    "html": ("*.htm*", "html"),
-    "docx": ("*.docx", "docx"),
-    "xlsx": ("*.xlsx", "xlsx"),
-    "odt": ("*.{odt,ods}", "odt"),
-    "rtf": ("*.rtf", "rtf"),
-    "pptx": ("*.pptx", "pptx"),
-    "epub": ("*.epub", "epub"),
-    "text": ("*.txt", "text"),
-    "md": ("*.md", "md"),
-    "csv": ("*.{csv,tsv}", "csv"),
-    "feed": ("*.{xml,rss,atom}", "feed"),
-    "mime": ("*.{mht,mhtml,eml}", "mime"),
-    "web": ("*", "auto"),
-}
+# directories of raw documents: one entry per container form, plus "web"
+# (every file, sniffed). "spans" (a bucketed spans table) and "warc" (web
+# archives, exploded record-wise) are read_documents' other two forms
+FORMATS = {**{name: (c.glob, name) for name, c in CONTAINERS.items()},
+           "web": ("*", "auto")}
 
 _SCHEME = r"^[A-Za-z][A-Za-z0-9+.\-]*:(//)?"
 

@@ -19,7 +19,6 @@ from pdf_extractor_scripts_spark.sources.docxparse import (
     build_docx,
     docx_media_payloads,
     parse_docx_spans,
-    zip_container_form,
 )
 
 PNG_MAGIC = b"\x89PNG\r\n\x1a\n" + b"\x00" * 24
@@ -176,15 +175,14 @@ def test_nested_table_text_is_reached():
 def test_sniffer_dispatches_docx_and_rejects_plain_zip():
     import io
 
-    from pdf_extractor_scripts_spark.sources.htmlparse import sniff_container
+    from pdf_extractor_scripts_spark.sources.containers import sniff
 
-    assert sniff_container(build_docx(["x"])) == "docx"
-    assert zip_container_form(build_docx(["x"])) == "docx"
+    assert sniff(build_docx(["x"])) == "docx"
     buf = io.BytesIO()
     with zipfile.ZipFile(buf, "w") as zf:
         zf.writestr("a.txt", "plain archive")
     # non-office zip → PDF chain (which rejects it as a counted fallback)
-    assert sniff_container(buf.getvalue()) == "pdf"
+    assert sniff(buf.getvalue()) == "pdf"
 
 
 def _write(path, data):

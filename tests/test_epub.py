@@ -79,16 +79,14 @@ def test_corrupt_rejects():
 
 
 def test_sniffs_and_parses_through_auto(spark, tmp_path):
-    from pdf_extractor_scripts_spark.sources.docxparse import (
-        zip_container_form,
-    )
+    from pdf_extractor_scripts_spark.sources.containers import sniff
     from pdf_extractor_scripts_spark.sources.spans import (
         parse_binary_to_spans,
         read_binary_docs,
     )
 
     blob = build_epub([{"title": "T", "paragraphs": ["book body text"]}])
-    assert zip_container_form(blob) == "epub"
+    assert sniff(blob) == "epub"
     with open(tmp_path / "book.epub", "wb") as f:
         f.write(blob)
     rows = parse_binary_to_spans(

@@ -54,7 +54,7 @@ def test_short_feed_bodies_survive_classifier_off():
 
 
 def test_rejects_and_sniffer_boundaries():
-    from pdf_extractor_scripts_spark.sources.htmlparse import sniff_container
+    from pdf_extractor_scripts_spark.sources.containers import sniff
 
     with pytest.raises(FeedError):
         parse_feed_spans(b"<rss version='2.0'><channel></channel></rss>",
@@ -63,7 +63,7 @@ def test_rejects_and_sniffer_boundaries():
         parse_feed_spans(b"<rss><channel><item>", "f")  # malformed
     assert looks_like_feed(build_rss("t", [{"title": "x"}]))
     assert looks_like_feed(build_atom("t", [{"title": "x"}]))
-    assert sniff_container(build_rss("t", [{"title": "x"}])) == "feed"
+    assert sniff(build_rss("t", [{"title": "x"}])) == "feed"
     # XML prolog + comments before the root still match
     assert looks_like_feed(
         b'<?xml version="1.0"?><!-- c --><feed xmlns="http://www.w3.org/'
@@ -71,7 +71,7 @@ def test_rejects_and_sniffer_boundaries():
     # an HTML page MENTIONING <rss stays html
     html = b"<html><body><p>about &lt;rss&gt; and <rss> tags</p></body></html>"
     assert not looks_like_feed(html)
-    assert sniff_container(html) == "html"
+    assert sniff(html) == "html"
     # generic XML is not a feed (falls to the loud pdf chain)
     assert not looks_like_feed(b"<?xml version='1.0'?><config><a/></config>")
 

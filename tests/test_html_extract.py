@@ -7,11 +7,11 @@ import os
 
 import pytest
 
+from pdf_extractor_scripts_spark.sources.containers import sniff
 from pdf_extractor_scripts_spark.sources.htmlparse import (
     build_html,
     extract_main_blocks,
     parse_html_spans,
-    sniff_container,
 )
 
 _LONG = ("The quarterly reconciliation pipeline processes every vendor "
@@ -268,14 +268,14 @@ def test_images_in_skip_content_ignored():
 
 
 def test_sniff_container():
-    assert sniff_container(b"%PDF-1.7\n...") == "pdf"
-    assert sniff_container(b"  \n<!DOCTYPE html><html>") == "html"
-    assert sniff_container(b"<HTML><BODY>x</BODY>") == "html"
-    assert sniff_container(b"\xef\xbb\xbf<div>frag</div>") == "html"
+    assert sniff(b"%PDF-1.7\n...") == "pdf"
+    assert sniff(b"  \n<!DOCTYPE html><html>") == "html"
+    assert sniff(b"<HTML><BODY>x</BODY>") == "html"
+    assert sniff(b"\xef\xbb\xbf<div>frag</div>") == "html"
     # printable bytes with no structure are plain TEXT documents (the
     # WET-record form); binary garbage still falls to the PDF chain
-    assert sniff_container(b"random bytes") == "text"
-    assert sniff_container(b"\x01\x02 binary junk \x03") == "pdf"
+    assert sniff(b"random bytes") == "text"
+    assert sniff(b"\x01\x02 binary junk \x03") == "pdf"
 
 
 def test_auto_dispatch_and_pipeline(spark, tmpdir):

@@ -5,7 +5,7 @@ from __future__ import annotations
 
 import pytest
 
-from pdf_extractor_scripts_spark.sources.htmlparse import sniff_container
+from pdf_extractor_scripts_spark.sources.containers import sniff
 from pdf_extractor_scripts_spark.sources.mdparse import (
     looks_like_csv,
     looks_like_markdown,
@@ -100,19 +100,19 @@ def test_csv_rejects_structureless_text():
 
 
 def test_sniffer_boundaries():
-    assert sniff_container(MD) == "md"
+    assert sniff(MD) == "md"
     assert looks_like_markdown(MD)
     csv_doc = b"a,b,c\n1,2,3\n4,5,6\n7,8,9\n"
-    assert sniff_container(csv_doc) == "csv" and looks_like_csv(csv_doc)
+    assert sniff(csv_doc) == "csv" and looks_like_csv(csv_doc)
     # prose with commas does NOT csv-sniff (field counts disagree)
     prose = (b"One sentence, with a comma.\n"
              b"Another, with, two commas here.\n"
              b"And a third line, different again, and more, here.\n")
-    assert sniff_container(prose) == "text"
+    assert sniff(prose) == "text"
     # plain text without md structure stays text
-    assert sniff_container(b"plain words\n\nmore words") == "text"
+    assert sniff(b"plain words\n\nmore words") == "text"
     # binary stays on the pdf chain
-    assert sniff_container(b"\x01\x02\x03") == "pdf"
+    assert sniff(b"\x01\x02\x03") == "pdf"
 
 
 def test_interleaved_auto_covers_md_and_csv(spark, tmp_path):

@@ -134,18 +134,18 @@ def test_non_mime_bytes_raise():
 
 
 def test_sniffer_boundaries():
-    from pdf_extractor_scripts_spark.sources.htmlparse import sniff_container
+    from pdf_extractor_scripts_spark.sources.containers import sniff
 
-    assert sniff_container(build_mhtml(html=_page_html([PARA]))) == "mime"
+    assert sniff(build_mhtml(html=_page_html([PARA]))) == "mime"
     eml = (b"From: a@b.test\r\nMIME-Version: 1.0\r\n"
            b"Content-Type: text/plain\r\n\r\nhi there\r\n")
-    assert looks_like_mime(eml) and sniff_container(eml) == "mime"
+    assert looks_like_mime(eml) and sniff(eml) == "mime"
     # mbox leading "From " line
     assert looks_like_mime(b"From a@b Mon Jan 1\n" + eml)
     # HTML that QUOTES mail headers is still HTML
     html = (b"<html><body><pre>MIME-Version: 1.0\n"
             b"Content-Type: multipart/related</pre></body></html>")
-    assert sniff_container(html) == "html"
+    assert sniff(html) == "html"
     # header-shaped but not MIME (an HTTP response dump) stays non-mime
     assert not looks_like_mime(b"HTTP/1.1 200 OK\r\nServer: x\r\n\r\nbody")
 

@@ -67,11 +67,11 @@ def test_mailed_pdf_invoice_extracts_fields(spark, tmp_path):
 @settings(max_examples=200, deadline=None)
 @given(st.binary(min_size=0, max_size=512))
 def test_sniffer_never_crashes_on_random_bytes(data):
-    from pdf_extractor_scripts_spark.sources.htmlparse import sniff_container
+    from pdf_extractor_scripts_spark.sources.containers import sniff
 
-    assert sniff_container(data) in ("pdf", "html", "docx", "xlsx",
-                                     "odt", "rtf", "pptx", "epub", "mime", "text",
-                                     "md", "csv", "feed")
+    assert sniff(data) in ("pdf", "html", "docx", "xlsx",
+                           "odt", "rtf", "pptx", "epub", "mime", "text",
+                           "md", "csv", "feed")
 
 
 @settings(max_examples=40, deadline=None)
@@ -83,9 +83,7 @@ def test_truncated_containers_sniff_and_reject_cleanly(data):
     from pdf_extractor_scripts_spark.sources.docxparse import (
         parse_docx_spans,
     )
-    from pdf_extractor_scripts_spark.sources.htmlparse import (
-        sniff_container,
-    )
+    from pdf_extractor_scripts_spark.sources.containers import sniff
     from pdf_extractor_scripts_spark.sources.mimeparse import (
         parse_mime_spans,
     )
@@ -109,7 +107,7 @@ def test_truncated_containers_sniff_and_reject_cleanly(data):
     blob = whole[form]
     cut = data.draw(st.integers(min_value=0, max_value=len(blob)))
     prefix = blob[:cut]
-    sniffed = sniff_container(prefix)  # must not raise
+    sniffed = sniff(prefix)  # must not raise
     if sniffed in parsers:
         try:
             spans = parsers[sniffed](prefix, "t")

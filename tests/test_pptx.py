@@ -74,16 +74,14 @@ def test_corrupt_rejects():
 
 
 def test_sniffs_and_parses_through_auto(spark, tmp_path):
-    from pdf_extractor_scripts_spark.sources.docxparse import (
-        zip_container_form,
-    )
+    from pdf_extractor_scripts_spark.sources.containers import sniff
     from pdf_extractor_scripts_spark.sources.spans import (
         parse_binary_to_spans,
         read_binary_docs,
     )
 
     blob = build_pptx([{"title": "deck title", "bullets": ["point one"]}])
-    assert zip_container_form(blob) == "pptx"
+    assert sniff(blob) == "pptx"
     with open(tmp_path / "deck.pptx", "wb") as f:
         f.write(blob)
     rows = parse_binary_to_spans(

@@ -282,18 +282,16 @@ def test_bom_prefixed_feeds_and_text_sniff_correctly():
         build_rss,
         parse_feed_spans,
     )
-    from pdf_extractor_scripts_spark.sources.htmlparse import (
-        sniff_container,
-    )
+    from pdf_extractor_scripts_spark.sources.containers import sniff
 
     bom_feed = b"\xef\xbb\xbf" + build_rss("T", [
         {"title": "P", "html": "<p>body</p>"}])
-    assert sniff_container(bom_feed) == "feed"
+    assert sniff(bom_feed) == "feed"
     texts = [s["text"] for s in parse_feed_spans(bom_feed, "f")
              if s["kind"] == "text"]
     assert texts[0] == "T"
-    assert sniff_container(b"\xef\xbb\xbf# Title\n\nbody") == "md"
-    assert sniff_container(b"\xef\xbb\xbfa,b\n1,2\n3,4\n") == "csv"
+    assert sniff(b"\xef\xbb\xbf# Title\n\nbody") == "md"
+    assert sniff(b"\xef\xbb\xbfa,b\n1,2\n3,4\n") == "csv"
 
 
 def test_fixture_writers_escape_attribute_urls():

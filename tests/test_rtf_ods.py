@@ -88,9 +88,9 @@ def test_rtf_rejects_non_rtf():
 
 
 def test_rtf_sniffs():
-    from pdf_extractor_scripts_spark.sources.htmlparse import sniff_container
+    from pdf_extractor_scripts_spark.sources.containers import sniff
 
-    assert sniff_container(build_rtf(["x"])) == "rtf"
+    assert sniff(build_rtf(["x"])) == "rtf"
 
 
 # ------------------------------------------------------------------ ODS
@@ -115,14 +115,10 @@ def test_ods_repeated_cells_capped():
 
 
 def test_ods_sniffs_as_odt_family():
-    from pdf_extractor_scripts_spark.sources.docxparse import (
-        zip_container_form,
-    )
-    from pdf_extractor_scripts_spark.sources.htmlparse import sniff_container
+    from pdf_extractor_scripts_spark.sources.containers import sniff
 
     blob = build_ods({"S": [["x"]]})
-    assert zip_container_form(blob) == "odt"
-    assert sniff_container(blob) == "odt"
+    assert sniff(blob) == "odt"
 
 
 def test_ods_empty_rejects():

@@ -4,7 +4,7 @@ the WET-style WARC conversion-record path end-to-end."""
 
 from __future__ import annotations
 
-from pdf_extractor_scripts_spark.sources.htmlparse import sniff_container
+from pdf_extractor_scripts_spark.sources.containers import sniff
 from pdf_extractor_scripts_spark.sources.textparse import (
     looks_like_text,
     parse_text_spans,
@@ -34,14 +34,14 @@ def test_bom_and_charsets():
 
 
 def test_sniffer_is_conservative():
-    assert sniff_container(b"plain english words\n\nand more") == "text"
-    assert sniff_container("utf-8 é text".encode()) == "text"
+    assert sniff(b"plain english words\n\nand more") == "text"
+    assert sniff("utf-8 é text".encode()) == "text"
     assert looks_like_text(b"ok text")
     assert not looks_like_text(b"")
     assert not looks_like_text(b"   \n  ")
     assert not looks_like_text(b"has \x00 nul")
     assert not looks_like_text(b"\xe9 latin-1 only")  # not UTF-8 → pdf chain
-    assert sniff_container(b"\xe9 latin-1 only") == "pdf"
+    assert sniff(b"\xe9 latin-1 only") == "pdf"
     # truncated multibyte tail doesn't flip the verdict
     long = ("x" * 4090).encode() + "é".encode()  # é split at the 4096 cut
     assert looks_like_text(long + b"more")

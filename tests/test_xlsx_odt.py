@@ -136,14 +136,12 @@ def test_odt_corrupt_rejects():
 
 
 def test_zip_sniffer_separates_the_office_family():
-    from pdf_extractor_scripts_spark.sources.docxparse import (
-        build_docx,
-        zip_container_form,
-    )
+    from pdf_extractor_scripts_spark.sources.containers import sniff
+    from pdf_extractor_scripts_spark.sources.docxparse import build_docx
 
-    assert zip_container_form(build_docx(["x"])) == "docx"
-    assert zip_container_form(build_xlsx({"S": [["x"]]})) == "xlsx"
-    assert zip_container_form(build_odt(["x"])) == "odt"
+    assert sniff(build_docx(["x"])) == "docx"
+    assert sniff(build_xlsx({"S": [["x"]]})) == "xlsx"
+    assert sniff(build_odt(["x"])) == "odt"
 
 
 def test_interleaved_auto_parse_all_office_forms(spark, tmp_path):
