@@ -17,4 +17,8 @@ Everything here derives only from public knowledge: the Apache Spark API and
 the behavior of the reference repo (cited by file:line in docstrings).
 """
 
+from . import _zipcache
+
+_zipcache.install()
+
 __version__ = "0.1.0"

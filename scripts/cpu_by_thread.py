@@ -7,13 +7,15 @@ Run from the root of a checkout. Builds the workload's inputs and a
 perfbench session in this process, runs its untimed warm-up job, then runs
 ``--jobs`` jobs, reading CPU time from /proc just before and after each
 job (each job's output is checked afterwards, outside the reading). Prints
-one line per group: CPU seconds over all jobs and per job.
+one line per group: CPU seconds over all jobs, per job, and each job's
+figure in order.
 
     jit              JVM C1/C2 compiler threads
     gc               JVM garbage-collector threads
     executor-tasks   JVM "Executor task launch worker" threads
     jvm-other        every other JVM thread, and JVM threads that exited
-    python-workers   the pyspark daemon and its forked workers, reaped ones included
+    python-workers   the JVM's live descendants (the pyspark daemon and its
+                     forked workers) and the children they reaped
     reaped-children  JVM children that exited and were reaped by the JVM
     driver           this Python process (py4j calls, result conversion)
 
@@ -60,6 +62,25 @@ def _reaped(fields: list[str]) -> int:
     return int(fields[13]) + int(fields[14])
 
 
+def _descendants(root: int) -> list[int]:
+    """Live processes below ``root``, from the parent pids in /proc."""
+    children: dict[int, list[int]] = collections.defaultdict(list)
+    for name in os.listdir("/proc"):
+        if not name.isdigit():
+            continue
+        try:
+            _, f = _stat(f"/proc/{name}/stat")
+        except (OSError, ValueError):  # exited while listed
+            continue
+        children[int(f[1])].append(int(name))
+    out, todo = [], [root]
+    while todo:
+        kids = children.get(todo.pop(), [])
+        out += kids
+        todo += kids
+    return out
+
+
 def snapshot(jvm: int) -> collections.Counter:
     """CPU seconds used so far, by group. They sum to ``host.cpu_s``, the
     benchmark's own CPU reading (this process plus the JVM tree)."""
@@ -78,10 +99,14 @@ def snapshot(jvm: int) -> collections.Counter:
             threads += _own(tf)
     out["jvm-other"] = (_own(jf) - threads) / hz
     out["reaped-children"] = _reaped(jf) / hz
+    for pid in _descendants(jvm):
+        try:
+            _, pf = _stat(f"/proc/{pid}/stat")
+        except (OSError, ValueError):  # exited since listed; its parent reaps its CPU
+            continue
+        out["python-workers"] += (_own(pf) + _reaped(pf)) / hz
     t = os.times()
     out["driver"] = t.user + t.system
-    # the rest of the tree: the JVM's live descendants and what they reaped
-    out["python-workers"] = host.cpu_s(jvm) - sum(out.values())
     return out
 
 
@@ -100,7 +125,7 @@ def main(argv=None) -> int:
     wl = WORKLOADS[args.workload](work, args.seed)
     off = Tracer(False, "cpu_by_thread")
     spark = None
-    total: collections.Counter = collections.Counter()
+    per_job: list[collections.Counter] = []
     failed = 0
     try:
         wl.prepare()
@@ -111,7 +136,8 @@ def main(argv=None) -> int:
             before = snapshot(jvm)
             wl.iterate(spark, off, k)
             after = snapshot(jvm)
-            total.update({g: after[g] - before[g] for g in GROUPS})
+            per_job.append(collections.Counter(
+                {g: after[g] - before[g] for g in GROUPS}))
             failed += wl.check(spark, k)[1]
             wl.cleanup(k)
     finally:
@@ -119,11 +145,14 @@ def main(argv=None) -> int:
             spark.stop()
         host.shutdown_jvm()
         wl.close()
+    for job in per_job:
+        job["total"] = sum(job[g] for g in GROUPS)
     print(f"{args.workload}: {args.jobs} jobs, {failed} failed checks")
-    print(f"{'group':<16} {'cpu_s':>8} {'per_job_s':>10}")
+    print(f"{'group':<16} {'cpu_s':>8} {'per_job_s':>10}  per job, in order")
     for g in (*GROUPS, "total"):
-        v = sum(total.values()) if g == "total" else total[g]
-        print(f"{g:<16} {v:8.2f} {v / args.jobs:10.2f}")
+        v = sum(job[g] for job in per_job)
+        series = " ".join(f"{job[g]:.2f}" for job in per_job)
+        print(f"{g:<16} {v:8.2f} {v / args.jobs:10.2f}  {series}")
     return 1 if failed else 0
 
 

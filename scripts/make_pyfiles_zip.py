@@ -1,6 +1,8 @@
 #!/usr/bin/env python
 """Package the engine for `spark-submit --py-files` (north-rule ship form):
-zips pdf_extractor_scripts_spark/ (sources only) into dist/engine.zip."""
+zips pdf_extractor_scripts_spark/ (sources only) into dist/engine.zip.
+The same sources give the same bytes: entries go in sorted path order and
+carry a fixed timestamp, not the files' mtimes."""
 
 from __future__ import annotations
 
@@ -9,6 +11,7 @@ import sys
 import zipfile
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+EPOCH = (1980, 1, 1, 0, 0, 0)  # the earliest time a zip entry can carry
 
 
 def main(out: str | None = None) -> str:
@@ -16,13 +19,15 @@ def main(out: str | None = None) -> str:
     os.makedirs(os.path.dirname(out), exist_ok=True)
     pkg = os.path.join(ROOT, "pdf_extractor_scripts_spark")
     with zipfile.ZipFile(out, "w", zipfile.ZIP_DEFLATED) as z:
-        for dirpath, _dirs, files in os.walk(pkg):
-            if "__pycache__" in dirpath:
-                continue
+        for dirpath, dirs, files in os.walk(pkg):
+            dirs[:] = sorted(d for d in dirs if d != "__pycache__")
             for f in sorted(files):
                 if f.endswith(".py"):
                     full = os.path.join(dirpath, f)
-                    z.write(full, os.path.relpath(full, ROOT))
+                    entry = zipfile.ZipInfo(os.path.relpath(full, ROOT), EPOCH)
+                    entry.external_attr = 0o644 << 16
+                    with open(full, "rb") as src:
+                        z.writestr(entry, src.read(), zipfile.ZIP_DEFLATED)
     print(f"wrote {out}")
     return out
 

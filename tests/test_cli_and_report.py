@@ -117,6 +117,15 @@ def test_spark_submit_pyfiles_ship(tmpdir):
             "docs = corpus_df(spark, n_docs=16, seed=42)\n"
             "n = run_with_checkpoint(spark, docs, sys.argv[1], run_id='submit')\n"
             "print(f'SUBMIT_OK processed={n}')\n"
+            "def probe(_):\n"
+            "    import importlib, zipimport, pdf_extractor_scripts_spark as e\n"
+            "    archive = e.__file__.split('.zip')[0] + '.zip'\n"
+            "    importlib.invalidate_caches()\n"
+            "    seen = zipimport._zip_directory_cache.get(archive)\n"
+            "    importlib.invalidate_caches()\n"
+            "    guarded = seen is not None and zipimport._zip_directory_cache.get(archive) is seen\n"
+            "    yield archive.rsplit('/', 1)[-1], guarded\n"
+            "print('WORKER_ENGINE', *spark.sparkContext.parallelize([0], 1).mapPartitions(probe).collect())\n"
             "spark.stop()\n"
         )
     out_dir = os.path.join(str(tmpdir), "out")
@@ -127,6 +136,33 @@ def test_spark_submit_pyfiles_ship(tmpdir):
         env={**os.environ, "PYTHONPATH": ""},
     )
     assert "SUBMIT_OK processed=16" in r.stdout, r.stderr[-2000:]
+    # a worker importing the engine from engine.zip refreshes that archive's
+    # directory only when it changed
+    assert "WORKER_ENGINE ('engine.zip', True)" in r.stdout, r.stdout[-2000:]
+
+
+def test_pyfiles_zip_is_reproducible(tmp_path):
+    """make_pyfiles_zip.py writes the same bytes for the same sources,
+    whatever their mtimes."""
+    import hashlib
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    pkg = tmp_path / "pdf_extractor_scripts_spark"
+    shutil.copytree(os.path.join(repo, "pdf_extractor_scripts_spark"), pkg,
+                    ignore=shutil.ignore_patterns("__pycache__"))
+    (tmp_path / "scripts").mkdir()
+    script = shutil.copy(os.path.join(repo, "scripts", "make_pyfiles_zip.py"),
+                         tmp_path / "scripts")
+    digests = []
+    for stamp in (1_000_000_000, 1_600_000_000):
+        for dirpath, _dirs, files in os.walk(pkg):
+            for f in files:
+                os.utime(os.path.join(dirpath, f), (stamp, stamp))
+        out = tmp_path / f"engine-{stamp}.zip"
+        subprocess.run([sys.executable, script, str(out)], check=True,
+                       capture_output=True)
+        digests.append(hashlib.sha256(out.read_bytes()).hexdigest())
+    assert digests[0] == digests[1]
 
 
 def test_cli_pdf_ingestion_end_to_end(spark, tmpdir):

@@ -1,8 +1,20 @@
 """Plan-audit tier: assert the physical plans are the ones we designed —
 filters pushed to the parquet scan, columns pruned, zero shuffles in the
-extraction mapper chain, whole-stage codegen on the hot scan paths."""
+extraction mapper chain, whole-stage codegen on the hot scan paths — and
+that a reused Python worker does not re-read ``pyspark.zip`` per task."""
 
 from __future__ import annotations
+
+import importlib
+import os
+import sys
+import uuid
+import zipfile
+import zipimport
+
+import pytest
+
+import pyspark.sql.functions as F
 
 from pdf_extractor_scripts_spark.fixtures import corpus_df
 from pdf_extractor_scripts_spark.plans.pipeline import run_pipeline
@@ -203,3 +215,161 @@ def test_ngram_jaccard_array_volume_guard(spark, monkeypatch):
     slow_rows = {tuple(r) for r in df.collect()}
     spark.catalog.clearCache()
     assert slow_rows == fast_rows
+
+
+# --- the stat-guarded zipimporter refresh (pdf_extractor_scripts_spark/_zipcache.py)
+
+
+def _write_zip(path: str, modules: dict[str, str]) -> None:
+    with zipfile.ZipFile(path, "w") as z:
+        for name, src in modules.items():
+            z.writestr(f"{name}.py", src)
+
+
+@pytest.fixture
+def zip_on_path(tmp_path, monkeypatch):
+    """A zip holding module ``zc_probe_a``, first on ``sys.path``, and the
+    list of archives whose directory zipimport reads from then on."""
+    from pdf_extractor_scripts_spark import _zipcache
+
+    archive = str(tmp_path / "mods.zip")
+    _write_zip(archive, {"zc_probe_a": "VALUE = 'a'\n"})
+    reads: list[str] = []
+    stdlib_read = zipimport._read_directory
+
+    def counting_read(path):
+        reads.append(path)
+        return stdlib_read(path)
+
+    monkeypatch.setattr(zipimport, "_read_directory", counting_read)
+    monkeypatch.syspath_prepend(archive)
+    yield archive, reads
+    for name in ("zc_probe_a", "zc_probe_b"):
+        sys.modules.pop(name, None)
+    sys.path_importer_cache.pop(archive, None)
+    zipimport._zip_directory_cache.pop(archive, None)
+    _zipcache._seen.pop(archive, None)
+
+
+def test_unchanged_zip_directory_is_read_at_most_once(zip_on_path):
+    archive, reads = zip_on_path
+    assert importlib.import_module("zc_probe_a").VALUE == "a"
+    reads.clear()
+    for _ in range(5):
+        importlib.invalidate_caches()
+    assert reads.count(archive) <= 1
+    sys.modules.pop("zc_probe_a")
+    assert importlib.import_module("zc_probe_a").VALUE == "a"
+
+
+def test_zip_rewritten_in_place_is_read_again(zip_on_path):
+    archive, reads = zip_on_path
+    importlib.import_module("zc_probe_a")
+    importlib.invalidate_caches()
+    reads.clear()
+    _write_zip(archive, {"zc_probe_a": "VALUE = 'a'\n",
+                         "zc_probe_b": "VALUE = 'b' * 64\n"})
+    importlib.invalidate_caches()
+    assert reads.count(archive) >= 1
+    assert importlib.import_module("zc_probe_b").VALUE == "b" * 64
+    # an archive that can no longer be stat'ed gets the stdlib refresh
+    os.remove(archive)
+    importlib.invalidate_caches()
+    assert archive not in zipimport._zip_directory_cache
+
+
+def test_zipcache_install_twice_wraps_once():
+    from pdf_extractor_scripts_spark import _zipcache
+
+    _zipcache.install()
+    guarded = zipimport.zipimporter.invalidate_caches
+    _zipcache.install()
+    assert zipimport.zipimporter.invalidate_caches is guarded
+    stdlib_refresh = guarded.__wrapped__
+    assert stdlib_refresh.__module__ == "zipimport"
+    assert not hasattr(stdlib_refresh, "__wrapped__")
+
+
+def _first_value(batches):
+    """The first row's first column, after reading every batch: a Python
+    worker whose input is left unread is not reused."""
+    values = [b.column(0)[0].as_py() for b in batches if b.num_rows]
+    return values[0]
+
+
+_PYSPARK_ZIP_SEEN: dict = {}  # worker side: (job token, pid) -> directory
+
+
+def _pyspark_zip_rereads(batches):
+    """mapInArrow body: this worker's pid, whether it is the job's first
+    task in this worker, whether ``pyspark.zip`` is on its import path, and
+    whether that archive's cached directory changed since the job's
+    previous task here (every stdlib refresh stores a new one)."""
+    import pyarrow as pa
+
+    token = _first_value(batches)
+    archive = next((f.archive for f in sys.path_importer_cache.values()
+                    if isinstance(f, zipimport.zipimporter)
+                    and os.path.basename(f.archive) == "pyspark.zip"), None)
+    files = zipimport._zip_directory_cache.get(archive)
+    key = (token, os.getpid())
+    first = key not in _PYSPARK_ZIP_SEEN
+    reread = not first and _PYSPARK_ZIP_SEEN[key] is not files
+    _PYSPARK_ZIP_SEEN[key] = files
+    yield pa.RecordBatch.from_pydict({
+        "pid": [os.getpid()], "first": [first],
+        "zipped": [archive is not None], "reread": [reread],
+    })
+
+
+def test_reused_worker_does_not_reread_pyspark_zip(spark):
+    """Every task after a worker's first in one multi-task job finds the
+    same cached directory of the unchanged ``pyspark.zip``: no task
+    re-reads it."""
+    token = uuid.uuid4().hex
+    rows = (spark.range(0, 32, 1, 32).select(F.lit(token).alias("token"))
+            .mapInArrow(_pyspark_zip_rereads,
+                        "pid long, first boolean, zipped boolean, reread boolean")
+            .collect())
+    assert len(rows) == 32
+    if not any(r.zipped for r in rows):
+        pytest.skip("the Python workers import pyspark from a directory, not pyspark.zip")
+    later = [r for r in rows if not r.first]
+    assert later, "no worker ran two tasks of the job"
+    assert [r.pid for r in later if r.reread] == []
+
+
+def _import_probe(batches):
+    """mapInArrow body: this worker's pid, whether the zipimporter refresh
+    is guarded here, and ``VALUE`` of the module named in the input (null
+    when it cannot be imported)."""
+    import pyarrow as pa
+
+    name = _first_value(batches)
+    try:
+        value = importlib.import_module(name).VALUE
+    except ImportError:
+        value = None
+    yield pa.RecordBatch.from_pydict({
+        "pid": [os.getpid()],
+        "guarded": [hasattr(zipimport.zipimporter.invalidate_caches, "__wrapped__")],
+        "value": [value],
+    })
+
+
+def test_addpyfile_zip_imports_in_a_worker_that_ran_engine_tasks(spark, tmp_path):
+    name = f"zc_added_{uuid.uuid4().hex[:12]}"
+    df = spark.range(0, 16, 1, 16).select(F.lit(name).alias("name"))
+
+    def run():
+        return df.mapInArrow(_import_probe, "pid long, guarded boolean, value string").collect()
+
+    before = run()
+    assert all(r.guarded and r.value is None for r in before)
+    archive = str(tmp_path / f"{name}.zip")
+    _write_zip(archive, {name: f"VALUE = {name!r}\n"})
+    spark.sparkContext.addPyFile(archive)
+    after = run()
+    assert [r.value for r in after] == [name] * 16
+    assert {r.pid for r in before} & {r.pid for r in after}, \
+        "no worker ran tasks both before and after addPyFile"
