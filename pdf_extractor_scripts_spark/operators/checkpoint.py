@@ -7,8 +7,13 @@ parallelism; this is what lets N- and 4N-executor runs share checkpoints
 keyed on path+mtime (pdf_text_detector.py:131-135); here resumability is a
 first-class table (FIXTURES.md §4) written once per completed bucket.
 
-Resume = anti-join the input against completed (run_id, partition_key) rows —
-a broadcast anti-join (the checkpoint side is tiny: one row per bucket).
+Resume = a literal predicate ``NOT partition_key IN (<completed buckets>)``
+on the extracted frame: the completed buckets of a run_id are at most
+``n_buckets`` ints, collected in one job. ``partition_key`` is a function of
+``doc_id``, which every pipeline layer passes through, so over a plan that
+holds the extraction Catalyst pushes the predicate down to the scan, below
+the extraction UDF, and the committed plan does not read the checkpoint
+table it appends to.
 
 Output commit protocol (manifest pattern — what Iceberg snapshot commits give
 you natively in production): every physical write of out_spans/metrics rows
@@ -188,11 +193,12 @@ def completed_buckets(spark: SparkSession, ckpt_dir: str, run_id: str) -> DataFr
 
 
 def resume_filter(df: DataFrame, spark: SparkSession, ckpt_dir: str, run_id: str) -> DataFrame:
-    """Drop documents in buckets already completed for this run_id."""
+    """Drop rows in buckets already completed for this run_id."""
     done = completed_buckets(spark, ckpt_dir, run_id)
-    if done is None:
+    keys = sorted(r["partition_key"] for r in done.collect()) if done is not None else []
+    if not keys:
         return df
-    return df.join(F.broadcast(done), "partition_key", "left_anti")
+    return df.filter(~F.col("partition_key").isin(keys))
 
 
 def write_outputs(
@@ -215,9 +221,9 @@ def write_outputs(
 
     # Materialize the per-bucket stats on the driver (one tiny row per
     # bucket) and write checkpoint + metrics from FRESH DataFrames. Writing
-    # them lazily would re-evaluate a lineage that (on a resumed run) reads
-    # the checkpoint table this very call appends to — a self-referential
-    # plan that silently yields zero rows on recompute.
+    # them lazily would re-evaluate ``result``'s lineage, which may read the
+    # checkpoint table this very call appends to — a self-referential plan
+    # that silently yields zero rows on recompute.
     stat_rows = (
         result.groupBy("partition_key")
         .agg(

@@ -405,7 +405,11 @@ def decode_tiff(data: bytes) -> tuple[int, int, bytes]:
             dec = strip[:need]
         elif comp == 5:
             # max_out caps the LZW expansion at the strip's geometry (r7,
-            # ADVICE: unbounded decode could balloon ~2700x before slicing)
+            # ADVICE: unbounded decode could balloon ~2700x before slicing).
+            # Decoding stops once ``need`` bytes are out, so a strip that is
+            # corrupt only after its first ``need`` decoded bytes decodes to
+            # that valid prefix instead of raising: the codes past it would
+            # only have made bytes the strip's rows have no room for.
             dec = _lzw_decode(strip, max_out=need)
         elif comp == 32773:
             dec = _tiff_packbits(strip, need)

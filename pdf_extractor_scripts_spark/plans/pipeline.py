@@ -61,6 +61,22 @@ def run_pipeline(
     return df.select(*RESULT_COLS)
 
 
+def commit(spark: SparkSession, extracted: DataFrame, ckpt_dir: str, run_id: str) -> int:
+    """Commit extracted rows (``with_partition_key(run_pipeline(...))``) under
+    ``run_id``: skip buckets already committed, write spans + checkpoint +
+    metrics for the rest. Returns the number of docs committed.
+
+    Resume is a literal predicate on ``partition_key``, so over a plan that
+    still holds the extraction Catalyst pushes it below the UDF: committed
+    buckets are never extracted again. A ``foreachBatch`` micro-batch
+    arrives as an already-planned RDD, so there it filters extracted rows."""
+    todo = resume_filter(extracted, spark, ckpt_dir, run_id)
+    # localCheckpoint materializes the extraction once: the stats collect and
+    # the out_spans write below then read it instead of each re-running the UDF.
+    todo = todo.localCheckpoint(eager=True)
+    return write_outputs(todo, spark, ckpt_dir, run_id)
+
+
 def run_with_checkpoint(
     spark: SparkSession,
     docs: DataFrame,
@@ -70,14 +86,8 @@ def run_with_checkpoint(
 ) -> int:
     """Idempotent checkpointed run: skips completed buckets, writes spans +
     checkpoint + metrics for the rest. Returns number of docs processed."""
-    keyed = with_partition_key(docs)
-    todo = resume_filter(keyed, spark, ckpt_dir, run_id)
-    result = run_pipeline(todo.drop("partition_key"), n_partitions)
-    result = with_partition_key(result)
-    # localCheckpoint truncates lineage: the writes below must NOT be able to
-    # re-evaluate a plan that reads the checkpoint table they append to.
-    result = result.localCheckpoint(eager=True)
-    return write_outputs(result, spark, ckpt_dir, run_id)
+    extracted = with_partition_key(run_pipeline(docs, n_partitions))
+    return commit(spark, extracted, ckpt_dir, run_id)
 
 
 def flagship(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -1,14 +1,20 @@
 """Incremental extraction: the batch pipeline wired to a streaming source.
 
-A production corpus is not static — new documents land continuously. This
-runs the SAME ``run_pipeline`` (identical semantics, identical span-equality
-contract) inside ``foreachBatch`` over a file/Iceberg-CDC stream:
+A production corpus is not static — new documents land continuously. The
+streaming query carries the SAME ``run_pipeline`` (identical semantics,
+identical span-equality contract): it is applied to the streaming DataFrame
+once, when the query starts, so each micro-batch arrives in ``foreachBatch``
+already extracted and is only committed there (``plans.pipeline.commit``):
 
 * Structured Streaming's source checkpoint gives exactly-once batch
   delivery (each input file processed once);
 * within a micro-batch the engine's own bucket checkpoint (operators/
   checkpoint.py) records lineage + metrics, so a crashed micro-batch
   resumes idempotently at bucket granularity when the stream restarts.
+  ``foreachBatch`` hands the commit the micro-batch as an already-planned
+  RDD, so on a replayed micro-batch the resume predicate filters the
+  extracted rows: the replay re-runs the UDF over the whole micro-batch and
+  commits only the buckets the crashed attempt did not.
 
 This composition — streaming for ingestion bookkeeping, the deterministic
 batch plan for semantics — keeps the correctness contract testable (the
@@ -20,20 +26,20 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from ..schemas import DOC_SCHEMA
-from ..plans.pipeline import run_with_checkpoint
+from ..operators.checkpoint import with_partition_key
+from ..plans.pipeline import commit, run_pipeline
 
 
 def _start(spark: SparkSession, stream: DataFrame, out_dir: str, run_id: str,
            stream_checkpoint: str | None):
-    """Start ``stream`` with every micro-batch committed by
-    run_with_checkpoint under run_id ``<run_id>-b<batch_id>``."""
+    """Start ``stream`` extracted by run_pipeline, built once here, with
+    every micro-batch committed under run_id ``<run_id>-b<batch_id>``."""
+    extracted = with_partition_key(run_pipeline(stream))
 
     def process(batch_df, batch_id: int) -> None:
-        run_with_checkpoint(
-            spark, batch_df, out_dir, run_id=f"{run_id}-b{batch_id}"
-        )
+        commit(spark, batch_df, out_dir, run_id=f"{run_id}-b{batch_id}")
 
-    writer = stream.writeStream.foreachBatch(process).trigger(availableNow=True)
+    writer = extracted.writeStream.foreachBatch(process).trigger(availableNow=True)
     if stream_checkpoint:
         writer = writer.option("checkpointLocation", stream_checkpoint)
     return writer.start()

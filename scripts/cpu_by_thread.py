@@ -6,14 +6,15 @@
 Run from the root of a checkout. Builds the workload's inputs and a
 perfbench session in this process, runs its untimed warm-up job, then runs
 ``--jobs`` jobs, reading CPU time from /proc just before and after each
-job (each job's output is checked afterwards, outside the reading). Prints
-one line per group: CPU seconds over all jobs, per job, and each job's
-figure in order.
+job (each job's output is checked afterwards, outside the reading). A
+background thread also reads every JVM thread's CPU about every 100 ms
+throughout. Prints one line per group: CPU seconds over all jobs, per job,
+and each job's figure in order.
 
     jit              JVM C1/C2 compiler threads
     gc               JVM garbage-collector threads
     executor-tasks   JVM "Executor task launch worker" threads
-    jvm-other        every other JVM thread, and JVM threads that exited
+    jvm-other        every other JVM thread
     python-workers   the JVM's live descendants (the pyspark daemon and its
                      forked workers) and the children they reaped
     reaped-children  JVM children that exited and were reaped by the JVM
@@ -21,8 +22,11 @@ figure in order.
 
 The Spark event log reports task run and CPU time of JVM task threads
 only; Python-worker and JIT CPU are invisible to it, and so is the fixed
-start-up cost every Python task pays. A thread that exits during a job
-moves its CPU to ``jvm-other``.
+start-up cost every Python task pays. HotSpot starts and stops compiler
+threads as the JIT queue grows and drains, so many exit within a job: a
+thread that exits stays in its group at its last-seen CPU, and only what it
+used after its last reading (under 100 ms of wall) lands in ``jvm-other``.
+The polling thread's own CPU is left out of ``driver``.
 """
 
 from __future__ import annotations
@@ -31,6 +35,8 @@ import argparse
 import collections
 import os
 import sys
+import threading
+import time
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, ROOT)
@@ -81,23 +87,69 @@ def _descendants(root: int) -> list[int]:
     return out
 
 
-def snapshot(jvm: int) -> collections.Counter:
+POLL_S = 0.1
+
+
+class ThreadPoller:
+    """CPU ticks of the JVM's grouped threads, read every ``POLL_S``
+    seconds from a background thread. Keyed by (tid, start time), so a
+    thread that exited keeps its last-seen ticks and a reused tid is a new
+    thread."""
+
+    def __init__(self, jvm: int):
+        self.jvm = jvm
+        self.seen: dict[tuple[str, str], tuple[str, int]] = {}
+        self.own_cpu = 0.0  # the polling thread's CPU seconds so far
+        self.lock = threading.Lock()
+        self.done = threading.Event()
+        self.thread = threading.Thread(target=self._run, daemon=True)
+
+    def poll(self) -> None:
+        # one poll at a time, so an older reading never overwrites a newer one
+        with self.lock:
+            for tid in os.listdir(f"/proc/{self.jvm}/task"):
+                try:
+                    comm, tf = _stat(f"/proc/{self.jvm}/task/{tid}/stat")
+                except (OSError, ValueError):  # exited while listed
+                    continue
+                group = next((g for p, g in THREAD_GROUPS if comm.startswith(p)), None)
+                if group:  # stat field 22 is the thread's start time
+                    self.seen[(tid, tf[19])] = (group, _own(tf))
+
+    def _run(self) -> None:
+        while not self.done.wait(POLL_S):
+            self.poll()
+            self.own_cpu = time.thread_time()
+
+    def ticks(self) -> collections.Counter:
+        """Ticks by group of every grouped thread seen, live or exited."""
+        self.poll()
+        out: collections.Counter = collections.Counter()
+        with self.lock:
+            for group, t in self.seen.values():
+                out[group] += t
+        return out
+
+    def __enter__(self) -> "ThreadPoller":
+        self.thread.start()
+        return self
+
+    def __exit__(self, *exc) -> None:
+        self.done.set()
+        self.thread.join()
+
+
+def snapshot(jvm: int, poller: ThreadPoller) -> collections.Counter:
     """CPU seconds used so far, by group. They sum to ``host.cpu_s``, the
-    benchmark's own CPU reading (this process plus the JVM tree)."""
+    benchmark's own CPU reading (this process plus the JVM tree), less the
+    polling thread's CPU."""
     hz = os.sysconf("SC_CLK_TCK")
     out: collections.Counter = collections.Counter()
+    threads = poller.ticks()
     _, jf = _stat(f"/proc/{jvm}/stat")
-    threads = 0
-    for tid in os.listdir(f"/proc/{jvm}/task"):
-        try:
-            comm, tf = _stat(f"/proc/{jvm}/task/{tid}/stat")
-        except OSError:
-            continue
-        group = next((g for p, g in THREAD_GROUPS if comm.startswith(p)), None)
-        if group:
-            out[group] += _own(tf) / hz
-            threads += _own(tf)
-    out["jvm-other"] = (_own(jf) - threads) / hz
+    for group, t in threads.items():
+        out[group] = t / hz
+    out["jvm-other"] = (_own(jf) - sum(threads.values())) / hz
     out["reaped-children"] = _reaped(jf) / hz
     for pid in _descendants(jvm):
         try:
@@ -106,7 +158,7 @@ def snapshot(jvm: int) -> collections.Counter:
             continue
         out["python-workers"] += (_own(pf) + _reaped(pf)) / hz
     t = os.times()
-    out["driver"] = t.user + t.system
+    out["driver"] = t.user + t.system - poller.own_cpu
     return out
 
 
@@ -132,14 +184,15 @@ def main(argv=None) -> int:
         spark = host.build_session(ROOT, work)
         wl.warmup(spark)
         jvm = host.jvm_pid()
-        for k in range(args.jobs):
-            before = snapshot(jvm)
-            wl.iterate(spark, off, k)
-            after = snapshot(jvm)
-            per_job.append(collections.Counter(
-                {g: after[g] - before[g] for g in GROUPS}))
-            failed += wl.check(spark, k)[1]
-            wl.cleanup(k)
+        with ThreadPoller(jvm) as poller:
+            for k in range(args.jobs):
+                before = snapshot(jvm, poller)
+                wl.iterate(spark, off, k)
+                after = snapshot(jvm, poller)
+                per_job.append(collections.Counter(
+                    {g: after[g] - before[g] for g in GROUPS}))
+                failed += wl.check(spark, k)[1]
+                wl.cleanup(k)
     finally:
         if spark is not None:
             spark.stop()

@@ -1,7 +1,8 @@
 """Plan-audit tier: assert the physical plans are the ones we designed —
 filters pushed to the parquet scan, columns pruned, zero shuffles in the
-extraction mapper chain, whole-stage codegen on the hot scan paths — and
-that a reused Python worker does not re-read ``pyspark.zip`` per task."""
+extraction mapper chain, the resume predicate below the extraction UDF,
+whole-stage codegen on the hot scan paths — and that a reused Python worker
+does not re-read ``pyspark.zip`` per task."""
 
 from __future__ import annotations
 
@@ -61,6 +62,42 @@ def test_pipeline_salted_has_single_shuffle(spark):
         if l.strip().startswith("(") and l.strip().endswith("Exchange")
     ]
     assert len(exchanges) == 1, exchanges
+
+
+def test_resume_predicate_is_pushed_below_the_extraction_udf(spark, tmp_path):
+    """On an extracted frame, resume is a literal ``NOT partition_key IN
+    (...)`` over the run's distinct committed buckets, and Catalyst pushes it
+    below ArrowEvalPython: committed buckets are never extracted again."""
+    import datetime
+
+    from pdf_extractor_scripts_spark.operators.checkpoint import (
+        _local_rows,
+        resume_filter,
+        with_partition_key,
+    )
+    from pdf_extractor_scripts_spark.schemas import CHECKPOINT_SCHEMA
+
+    docs = corpus_df(spark, n_docs=16, seed=42)
+    keys = sorted({r[0] for r in with_partition_key(docs).select("partition_key").collect()})
+    done = keys[: len(keys) // 2]
+    now = datetime.datetime.now(datetime.timezone.utc)
+    rows = [{"run_id": run_id, "partition_key": b, "attempt_id": attempt,
+             "status": "done", "docs": 1, "pages": 1, "ocr_fallbacks": 0,
+             "validation_failures": 0, "updated_at": now}
+            for run_id, attempt, buckets in (("r", "a1", done), ("r", "a2", done[:2]),
+                                             ("other", "a3", keys))
+            for b in buckets]
+    ckpt = str(tmp_path)
+    _local_rows(spark, rows, CHECKPOINT_SCHEMA).write.parquet(f"{ckpt}/checkpoints")
+
+    todo = resume_filter(with_partition_key(run_pipeline(docs)), spark, ckpt, "r")
+    tree = todo._jdf.queryExecution().executedPlan().toString().splitlines()
+    udf = next(i for i, l in enumerate(tree) if "ArrowEvalPython" in l)
+    resume = [i for i, l in enumerate(tree) if "Filter" in l and "xxhash64" in l]
+    assert resume and all(i > udf for i in resume), (udf, resume)
+    assert f"IN ({','.join(map(str, done))})" in tree[resume[0]]
+    left = {r[0] for r in with_partition_key(todo).select("partition_key").collect()}
+    assert left == set(keys) - set(done)
 
 
 def test_commit_rows_are_a_one_partition_local_relation(spark):

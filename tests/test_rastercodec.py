@@ -227,3 +227,23 @@ def test_tiff_lzw_decode_is_capped():
     succeeds for well-formed input (cap == exact need)."""
     w, h, px = decode_tiff(encode_tiff(GRAY4, 4, 3, compression=5))
     assert (w, h, bytes(px)) == (4, 3, GRAY4)
+
+
+def test_tiff_lzw_strip_corrupt_past_its_rows_decodes_the_valid_prefix(monkeypatch):
+    """A strip whose LZW codes turn corrupt only after the strip's ``need``
+    bytes decodes to those bytes: the decode stops at ``need`` and never
+    reads the corrupt codes, which raise when decoded in full."""
+    from pdf_extractor_scripts_spark.sources import pdfparse
+
+    def pack9(codes):  # MSB-first 9-bit codes: few enough to never widen
+        bits = "".join(f"{c:09b}" for c in codes)
+        bits += "0" * (-len(bits) % 8)
+        return bytes(int(bits[i:i + 8], 2) for i in range(0, len(bits), 8))
+
+    # clear, the 12 pixels as literals, then clear + an undefined code
+    strip = pack9([256, *GRAY4, 256, 300, 257])
+    with pytest.raises(KeyError):
+        pdfparse._lzw_decode(strip)
+    monkeypatch.setattr(pdfparse, "_lzw_encode", lambda rows: strip)
+    data = encode_tiff(GRAY4, 4, 3, compression=5)
+    assert decode_tiff(data) == (4, 3, GRAY4)
