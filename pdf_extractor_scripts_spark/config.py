@@ -17,7 +17,6 @@ spec.
 from __future__ import annotations
 
 import re
-from dataclasses import dataclass, field
 
 
 # ---------------------------------------------------------------------------
@@ -858,20 +857,3 @@ def restore_overrides(inverse: dict) -> None:
             else:
                 FIELD_BANKS[vendor][field_key] = patterns
 
-
-@dataclass(frozen=True)
-class EngineConfig:
-    """Broadcastable bundle of all banks + knobs."""
-
-    n_checkpoint_buckets: int = 64
-    heavy_span_threshold: int = 400  # spans per doc above which a doc is "heavy" (skew salting)
-    filename_patterns: dict = field(default_factory=lambda: FILENAME_PATTERNS)
-    content_patterns: dict = field(default_factory=lambda: CONTENT_PATTERNS)
-    content_keywords: dict = field(default_factory=lambda: CONTENT_KEYWORDS)
-    text_thresholds: dict = field(default_factory=lambda: TEXT_THRESHOLDS)
-    min_text_ratio: dict = field(default_factory=lambda: MIN_TEXT_RATIO)
-    field_banks: dict = field(default_factory=lambda: FIELD_BANKS)
-    field_order: dict = field(default_factory=lambda: FIELD_ORDER)
-
-
-DEFAULT_CONFIG = EngineConfig()

@@ -16,14 +16,18 @@ the extraction UDF, and the committed plan does not read the checkpoint
 table it appends to.
 
 Output commit protocol (manifest pattern — what Iceberg snapshot commits give
-you natively in production): every physical write of out_spans/metrics rows
-carries an ``attempt_id``; the checkpoint row recording that attempt is
-written LAST and is the commit point. A crash between the data write and the
-checkpoint write leaves orphan rows whose attempt_id no checkpoint mentions —
-invisible to readers, because committed_outputs()/quality_report() semi-join
-outputs against committed (partition_key, attempt_id) pairs. Physical writes
-are therefore at-least-once, but the VISIBLE table is exactly-once, and
-resume can safely re-process any bucket whose commit row is missing.
+you natively in production): every out_spans row carries an ``attempt_id``;
+the checkpoint row recording that attempt is written LAST and is the commit
+point. It is the only bookkeeping record: it carries the bucket's extraction
+metrics, and committed_metrics() is its long form. A crash between the data
+write and the checkpoint write leaves orphan rows whose attempt_id no
+checkpoint mentions — invisible to readers, because
+committed_outputs()/quality_report() semi-join outputs against committed
+(partition_key, attempt_id) pairs. Physical writes are therefore
+at-least-once, but the VISIBLE table is exactly-once, and resume can safely
+re-process any bucket whose commit row is missing. A ``metrics/`` table
+beside ``checkpoints/`` comes from an older layout; it repeats the checkpoint
+rows' numbers and no reader opens it.
 """
 
 from __future__ import annotations
@@ -34,9 +38,10 @@ import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
-from ..schemas import CHECKPOINT_SCHEMA, METRICS_SCHEMA
+from ..schemas import CHECKPOINT_SCHEMA
 
 _COMMIT_KEY = ["run_id", "partition_key", "attempt_id"]
+_METRICS = ("docs", "pages", "ocr_fallbacks", "validation_failures")
 
 
 def _committed(spark: SparkSession, ckpt_dir: str) -> DataFrame:
@@ -48,19 +53,13 @@ def _committed(spark: SparkSession, ckpt_dir: str) -> DataFrame:
     return ck.filter(F.col("status") == "done")
 
 
-def _only_committed(df: DataFrame, spark: SparkSession, ckpt_dir: str) -> DataFrame:
-    """Semi-join ``df`` against the manifest on the commit key: rows of
-    attempts that crashed before their checkpoint write are excluded."""
-    committed = _committed(spark, ckpt_dir).select(*_COMMIT_KEY).distinct()
-    return df.join(F.broadcast(committed), _COMMIT_KEY, "left_semi")
-
-
 def committed_outputs(spark: SparkSession, ckpt_dir: str) -> DataFrame:
     """out_spans restricted to COMMITTED attempts — the read side of the
-    manifest commit protocol."""
-    return _only_committed(
-        spark.read.parquet(os.path.join(ckpt_dir, "out_spans")), spark, ckpt_dir
-    )
+    manifest commit protocol: a semi-join on the commit key drops the rows of
+    attempts that crashed before their checkpoint write."""
+    committed = _committed(spark, ckpt_dir).select(*_COMMIT_KEY).distinct()
+    out = spark.read.parquet(os.path.join(ckpt_dir, "out_spans"))
+    return out.join(F.broadcast(committed), _COMMIT_KEY, "left_semi")
 
 
 def backup_outputs(
@@ -91,10 +90,14 @@ def restore_backup(spark: SparkSession, backup_path: str) -> DataFrame:
 
 
 def committed_metrics(spark: SparkSession, ckpt_dir: str) -> DataFrame:
-    """metrics restricted to committed attempts (same manifest semi-join as
-    committed_outputs) — uncommitted attempts must not double-count."""
-    return _only_committed(
-        spark.read.parquet(os.path.join(ckpt_dir, "metrics")), spark, ckpt_dir
+    """Per-bucket extraction metrics of committed attempts
+    (``METRICS_SCHEMA``): one (metric, value) row per counter of each
+    checkpoint row — the long form of the manifest, so an uncommitted
+    attempt cannot double-count."""
+    pairs = ", ".join(f"'{m}', {m}" for m in _METRICS)
+    return _committed(spark, ckpt_dir).selectExpr(
+        "run_id", "attempt_id", "'extract' AS stage", "partition_key",
+        f"stack({len(_METRICS)}, {pairs}) AS (metric, value)",
     )
 
 
@@ -177,39 +180,28 @@ def with_partition_key(df: DataFrame, n_buckets: int = 64) -> DataFrame:
     return df.withColumn("partition_key", doc_bucket(n_buckets))
 
 
-def completed_buckets(spark: SparkSession, ckpt_dir: str, run_id: str) -> DataFrame | None:
-    """Buckets committed for ``run_id``; None when there is no checkpoint
-    table yet. An unreadable table raises: treating it as missing would
-    commit every bucket a second time."""
+def resume_filter(df: DataFrame, spark: SparkSession, ckpt_dir: str, run_id: str) -> DataFrame:
+    """Drop rows in buckets already completed for ``run_id``. No checkpoint
+    table yet is a fresh run; an unreadable table raises: treating it as
+    missing would commit every bucket a second time."""
     from pyspark.errors import AnalysisException
 
     try:
         done = _committed(spark, ckpt_dir)
     except AnalysisException as e:
         if e.getCondition() == "PATH_NOT_FOUND":
-            return None
+            return df
         raise
-    return done.filter(F.col("run_id") == run_id).select("partition_key").distinct()
-
-
-def resume_filter(df: DataFrame, spark: SparkSession, ckpt_dir: str, run_id: str) -> DataFrame:
-    """Drop rows in buckets already completed for this run_id."""
-    done = completed_buckets(spark, ckpt_dir, run_id)
-    keys = sorted(r["partition_key"] for r in done.collect()) if done is not None else []
+    done = done.filter(F.col("run_id") == run_id).select("partition_key").distinct()
+    keys = sorted(r["partition_key"] for r in done.collect())
     if not keys:
         return df
     return df.filter(~F.col("partition_key").isin(keys))
 
 
-def write_outputs(
-    result: DataFrame,
-    spark: SparkSession,
-    ckpt_dir: str,
-    run_id: str,
-    attempt_id: str | None = None,
-) -> int:
-    """Write extracted spans partitioned by bucket, then per-bucket metrics
-    rows, then the checkpoint rows — the checkpoint write is the COMMIT (see
+def write_outputs(result: DataFrame, spark: SparkSession, ckpt_dir: str, run_id: str) -> int:
+    """Write extracted spans partitioned by bucket, then the checkpoint rows
+    with their per-bucket metrics — the checkpoint write is the COMMIT (see
     module docstring). Returns the number of documents committed; an empty
     ``result`` writes nothing."""
     import datetime
@@ -217,10 +209,9 @@ def write_outputs(
 
     out_path = os.path.join(ckpt_dir, "out_spans")
     ck_path = os.path.join(ckpt_dir, "checkpoints")
-    mx_path = os.path.join(ckpt_dir, "metrics")
 
     # Materialize the per-bucket stats on the driver (one tiny row per
-    # bucket) and write checkpoint + metrics from FRESH DataFrames. Writing
+    # bucket) and write the checkpoint rows from a FRESH DataFrame. Writing
     # them lazily would re-evaluate ``result``'s lineage, which may read the
     # checkpoint table this very call appends to — a self-referential plan
     # that silently yields zero rows on recompute.
@@ -236,7 +227,7 @@ def write_outputs(
     )
     if not stat_rows:
         return 0
-    attempt_id = attempt_id or uuid.uuid4().hex
+    attempt_id = uuid.uuid4().hex
     result.select(
         "partition_key", "doc_id", "vendor", "route", "out_spans",
         "validation_failed", "ocr_used", "n_pages", "extraction_confidence",
@@ -246,17 +237,6 @@ def write_outputs(
 
     # aware UTC: Arrow would read a naive datetime in the session time zone
     now = datetime.datetime.now(datetime.timezone.utc)
-
-    # metrics BEFORE checkpoints: the checkpoint append is the commit point,
-    # so a crash anywhere earlier leaves only uncommitted (orphan) rows.
-    mx_rows = [
-        {"run_id": run_id, "attempt_id": attempt_id, "stage": "extract",
-         "partition_key": r["partition_key"], "metric": metric, "value": r[metric]}
-        for r in stat_rows
-        for metric in ("docs", "pages", "ocr_fallbacks", "validation_failures")
-    ]
-    _local_rows(spark, mx_rows, METRICS_SCHEMA).write.mode("append").parquet(mx_path)
-
     ck_rows = [
         {**r.asDict(), "run_id": run_id, "attempt_id": attempt_id,
          "status": "done", "updated_at": now}

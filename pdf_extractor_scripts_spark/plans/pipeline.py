@@ -33,10 +33,7 @@ RESULT_COLS = [
 
 
 def run_pipeline(
-    docs: DataFrame,
-    n_partitions: int | None = None,
-    heavy_span_threshold: int = 400,
-    salt: bool = False,
+    docs: DataFrame, n_partitions: int | None = None, salt: bool = False
 ) -> DataFrame:
     """spans table → extraction result (one row per doc).
 
@@ -50,7 +47,7 @@ def run_pipeline(
     df = with_assembled_text(docs)
     df = with_vendor(df)
     df = with_route(df)
-    df = with_weight(df, heavy_span_threshold)
+    df = with_weight(df)
     if salt:
         if n_partitions is None:
             n_partitions = docs.sparkSession.sparkContext.defaultParallelism
@@ -63,8 +60,8 @@ def run_pipeline(
 
 def commit(spark: SparkSession, extracted: DataFrame, ckpt_dir: str, run_id: str) -> int:
     """Commit extracted rows (``with_partition_key(run_pipeline(...))``) under
-    ``run_id``: skip buckets already committed, write spans + checkpoint +
-    metrics for the rest. Returns the number of docs committed.
+    ``run_id``: skip buckets already committed, write spans + checkpoint rows
+    (with their metrics) for the rest. Returns the number of docs committed.
 
     Resume is a literal predicate on ``partition_key``, so over a plan that
     still holds the extraction Catalyst pushes it below the UDF: committed
@@ -77,16 +74,10 @@ def commit(spark: SparkSession, extracted: DataFrame, ckpt_dir: str, run_id: str
     return write_outputs(todo, spark, ckpt_dir, run_id)
 
 
-def run_with_checkpoint(
-    spark: SparkSession,
-    docs: DataFrame,
-    ckpt_dir: str,
-    run_id: str,
-    n_partitions: int | None = None,
-) -> int:
+def run_with_checkpoint(spark: SparkSession, docs: DataFrame, ckpt_dir: str, run_id: str) -> int:
     """Idempotent checkpointed run: skips completed buckets, writes spans +
-    checkpoint + metrics for the rest. Returns number of docs processed."""
-    extracted = with_partition_key(run_pipeline(docs, n_partitions))
+    checkpoint rows for the rest. Returns number of docs processed."""
+    extracted = with_partition_key(run_pipeline(docs))
     return commit(spark, extracted, ckpt_dir, run_id)
 
 

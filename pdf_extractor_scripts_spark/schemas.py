@@ -1,5 +1,6 @@
 """Spark StructTypes for the interleaved-spans data model (BASELINE.json
-input_hint) and the engine's output / checkpoint / metrics tables."""
+input_hint), the engine's output and checkpoint tables, and the long-form
+metrics view of the checkpoint rows."""
 
 from __future__ import annotations
 
@@ -54,7 +55,8 @@ RESULT_SCHEMA = StructType(
 )
 
 # checkpoint table (FIXTURES.md §4): stable hash-bucket partition ids so
-# N- and 4N-executor runs share checkpoints (SURVEY.md §7.3(4)).
+# N- and 4N-executor runs share checkpoints (SURVEY.md §7.3(4)). One row per
+# committed bucket, carrying that bucket's extraction metrics.
 CHECKPOINT_SCHEMA = StructType(
     [
         StructField("run_id", StringType(), False),
@@ -69,6 +71,8 @@ CHECKPOINT_SCHEMA = StructType(
     ]
 )
 
+# operators.checkpoint.committed_metrics: the checkpoint rows' metrics in
+# long form, one (metric, value) row per counter
 METRICS_SCHEMA = StructType(
     [
         StructField("run_id", StringType(), False),

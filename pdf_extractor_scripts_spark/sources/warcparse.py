@@ -432,6 +432,36 @@ def _warc_doc_schema():
     ])
 
 
+def _sentinel_row(doc_id: str, path: str, err: str) -> dict:
+    """A zero-payload row that carries an archive error in place of the
+    documents it lost."""
+    return {"doc_id": doc_id, "content": b"", "length": 0, "content_type": "",
+            "http_status": None, "revisit_of": None, "warc_file": path,
+            "archive_error": err}
+
+
+def _doc_rows(path: str, docs: list, err: str | None, sentinel_id: str) -> list:
+    """One archive's (or byte range's) decoded records as docs_from_warcs
+    rows, in record order; ``err`` with no record framed is one sentinel row
+    with doc_id ``sentinel_id``."""
+    if err is not None and not docs:
+        return [_sentinel_row(sentinel_id, path, err)]
+    out = []
+    for d in docs:
+        payload = d["payload"]
+        out.append({
+            "doc_id": d["url"] or d["record_id"],
+            "content": payload,
+            "length": len(payload),
+            "content_type": d["content_type"],
+            "http_status": d["http_status"],
+            "revisit_of": d.get("revisit_of"),
+            "warc_file": path,
+            "archive_error": err,
+        })
+    return out
+
+
 def docs_from_warcs(binary_archives, error_acc=None):
     """Explode binaryFile rows of WARC archives (``path``/``doc_id`` +
     ``content``) into per-document rows: (doc_id=WARC-Target-URI,
@@ -467,29 +497,10 @@ def docs_from_warcs(binary_archives, error_acc=None):
             # single archive's documents instead of the whole Arrow
             # batch's (an input batch can carry several 1-GB archives)
             for path, content in zip(pdf[path_col], pdf["content"]):
-                out = []
                 docs, err = warc_documents(bytes(content))
                 if err is not None and error_acc is not None:
                     error_acc.add(1)
-                for d in docs:
-                    payload = d["payload"]
-                    out.append({
-                        "doc_id": d["url"] or d["record_id"],
-                        "content": payload,
-                        "length": len(payload),
-                        "content_type": d["content_type"],
-                        "http_status": d["http_status"],
-                        "revisit_of": d.get("revisit_of"),
-                        "warc_file": path,
-                        "archive_error": err,
-                    })
-                if err is not None and not docs:
-                    out.append({
-                        "doc_id": path, "content": b"", "length": 0,
-                        "content_type": "", "http_status": None,
-                        "revisit_of": None,
-                        "warc_file": path, "archive_error": err,
-                    })
+                out = _doc_rows(path, docs, err, path)
                 if out:
                     got_rows = True
                     yield pd.DataFrame(out)
@@ -662,12 +673,7 @@ def docs_from_warc_ranges(ranges, error_acc=None):
                     pdf["warc_file"], pdf["offset"], pdf["length"],
                     pdf["archive_error"]):
                 if pre_err is not None and "record-at-time" not in pre_err:
-                    out.append({
-                        "doc_id": path, "content": b"", "length": 0,
-                        "content_type": "", "http_status": None,
-                        "revisit_of": None, "warc_file": path,
-                        "archive_error": pre_err,
-                    })
+                    out.append(_sentinel_row(path, path, pre_err))
                     if error_acc is not None:
                         error_acc.add(1)
                     continue
@@ -677,25 +683,7 @@ def docs_from_warc_ranges(ranges, error_acc=None):
                 docs, err = warc_documents(data)
                 if err is not None and error_acc is not None:
                     error_acc.add(1)
-                for d in docs:
-                    payload = d["payload"]
-                    out.append({
-                        "doc_id": d["url"] or d["record_id"],
-                        "content": payload,
-                        "length": len(payload),
-                        "content_type": d["content_type"],
-                        "http_status": d["http_status"],
-                        "revisit_of": d.get("revisit_of"),
-                        "warc_file": path,
-                        "archive_error": err,
-                    })
-                if err is not None and not docs:
-                    out.append({
-                        "doc_id": f"{path}@{off}", "content": b"",
-                        "length": 0, "content_type": "",
-                        "http_status": None, "revisit_of": None,
-                        "warc_file": path, "archive_error": err,
-                    })
+                out += _doc_rows(path, docs, err, f"{path}@{off}")
             yield pd.DataFrame(out) if out else pd.DataFrame(
                 {f.name: pd.Series(dtype="object") for f in schema.fields})
 

@@ -160,7 +160,7 @@ def test_replayed_micro_batches_commit_exactly_once(spark, tmpdir, monkeypatch):
     commits: list[tuple[str, int]] = []
     real_commit, real_rows = extract_stream.commit, checkpoint._local_rows
 
-    def crash_before_metrics(*args):  # the metrics write follows out_spans
+    def crash_before_commit(*args):  # the checkpoint write follows out_spans
         monkeypatch.setattr(checkpoint, "_local_rows", real_rows)
         raise RuntimeError("crash after the out_spans write")
 
@@ -171,7 +171,7 @@ def test_replayed_micro_batches_commit_exactly_once(spark, tmpdir, monkeypatch):
             raise RuntimeError("crash after the commit point")
         return n
 
-    monkeypatch.setattr(checkpoint, "_local_rows", crash_before_metrics)
+    monkeypatch.setattr(checkpoint, "_local_rows", crash_before_commit)
     monkeypatch.setattr(extract_stream, "commit", commit)
 
     def drain():

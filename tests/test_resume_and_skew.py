@@ -163,26 +163,44 @@ def test_backup_sink_snapshots_committed_outputs(spark, ckpt_dir):
         backup_outputs(spark, ckpt_dir, label="snap_0001")
 
 
+_METRICS = ("docs", "pages", "ocr_fallbacks", "validation_failures")
+
+
+def _long_form(ck_rows) -> list:
+    """The checkpoint rows' metrics as sorted ``METRICS_SCHEMA`` tuples."""
+    return sorted((r["run_id"], r["attempt_id"], "extract", r["partition_key"], m, r[m])
+                  for r in ck_rows for m in _METRICS)
+
+
+def _assert_metrics_schema(df):
+    from pdf_extractor_scripts_spark.schemas import METRICS_SCHEMA
+
+    assert [(f.name, f.dataType) for f in df.schema] == [
+        (f.name, f.dataType) for f in METRICS_SCHEMA]
+
+
 def test_commit_appends_one_file_per_bookkeeping_table(spark, ckpt_dir):
-    """One commit appends exactly one parquet file to ``checkpoints/`` and
-    one to ``metrics/``, however many task slots the session has, and the
-    rows read back are exactly the commit's."""
+    """One commit appends exactly one parquet file to ``checkpoints/``,
+    however many task slots the session has, and writes no ``metrics/``
+    table: the checkpoint rows are exactly the commit's, and
+    committed_metrics is their long form."""
     import glob
+    import os
     from collections import Counter
 
-    from pdf_extractor_scripts_spark.schemas import CHECKPOINT_SCHEMA, METRICS_SCHEMA
+    from pdf_extractor_scripts_spark.schemas import CHECKPOINT_SCHEMA
 
     docs = corpus_df(spark, n_docs=N_DOCS, seed=42)
     n = run_with_checkpoint(spark, docs, ckpt_dir, run_id="r1")
     assert n == N_DOCS
-    for table in ("checkpoints", "metrics"):
-        assert len(glob.glob(f"{ckpt_dir}/{table}/part-*.parquet")) == 1, table
+    assert len(glob.glob(f"{ckpt_dir}/checkpoints/part-*.parquet")) == 1
+    assert not os.path.exists(f"{ckpt_dir}/metrics")
 
     ck = spark.read.parquet(f"{ckpt_dir}/checkpoints")
-    mx = spark.read.parquet(f"{ckpt_dir}/metrics")
-    for df, schema in ((ck, CHECKPOINT_SCHEMA), (mx, METRICS_SCHEMA)):
-        assert [(f.name, f.dataType) for f in df.schema] == [
-            (f.name, f.dataType) for f in schema]
+    mx = committed_metrics(spark, ckpt_dir)
+    assert [(f.name, f.dataType) for f in ck.schema] == [
+        (f.name, f.dataType) for f in CHECKPOINT_SCHEMA]
+    _assert_metrics_schema(mx)
 
     buckets = sorted(r["partition_key"] for r in
                      with_partition_key(docs).select("partition_key").distinct().collect())
@@ -192,13 +210,36 @@ def test_commit_appends_one_file_per_bookkeeping_table(spark, ckpt_dir):
     assert {(r["run_id"], r["status"]) for r in ck_rows} == {("r1", "done")}
     assert len({r["attempt_id"] for r in ck_rows}) == 1
 
-    metrics = ("docs", "pages", "ocr_fallbacks", "validation_failures")
     mx_rows = mx.collect()
     assert Counter(r["partition_key"] for r in mx_rows) == {b: 4 for b in buckets}
-    assert {(r["partition_key"], r["metric"], r["value"]) for r in mx_rows} == {
-        (r["partition_key"], m, r[m]) for r in ck_rows for m in metrics}
-    assert {(r["run_id"], r["attempt_id"], r["stage"]) for r in mx_rows} == {
-        ("r1", ck_rows[0]["attempt_id"], "extract")}
+    assert sorted(tuple(r) for r in mx_rows) == _long_form(ck_rows)
+
+
+def test_committed_metrics_reads_the_checkpoint_rows_of_an_old_layout(spark, ckpt_dir):
+    """A directory from when metrics also had a ``metrics/`` table of their
+    own: that table (a committed attempt's rows plus an orphan attempt's) is
+    ignored, and committed_metrics is the long form of the checkpoint rows."""
+    import datetime
+
+    from pdf_extractor_scripts_spark.operators.checkpoint import _local_rows
+    from pdf_extractor_scripts_spark.schemas import CHECKPOINT_SCHEMA, METRICS_SCHEMA
+
+    now = datetime.datetime.now(datetime.timezone.utc)
+    committed = {3: (5, 9, 1, 0), 11: (2, 2, 0, 1)}
+    orphan = {3: (5, 8, 2, 0), 20: (1, 1, 1, 1)}
+    ck_rows = [{"run_id": "r1", "partition_key": b, "attempt_id": "a1", "status": "done",
+                **dict(zip(_METRICS, vals)), "updated_at": now}
+               for b, vals in committed.items()]
+    mx_rows = [{"run_id": "r1", "attempt_id": a, "stage": "extract", "partition_key": b,
+                "metric": m, "value": v}
+               for a, stats in (("a1", committed), ("dead", orphan))
+               for b, vals in stats.items() for m, v in zip(_METRICS, vals)]
+    _local_rows(spark, ck_rows, CHECKPOINT_SCHEMA).write.parquet(f"{ckpt_dir}/checkpoints")
+    _local_rows(spark, mx_rows, METRICS_SCHEMA).write.parquet(f"{ckpt_dir}/metrics")
+
+    mx = committed_metrics(spark, ckpt_dir)
+    _assert_metrics_schema(mx)
+    assert sorted(tuple(r) for r in mx.collect()) == _long_form(ck_rows)
 
 
 def test_checkpoint_updated_at_is_the_commit_instant_in_any_session_zone(spark, ckpt_dir):
