@@ -3,12 +3,13 @@
 The reference runs ~30 regex fields + vendor line-item scans per document in
 a Python loop (fallback_processor.py:196-242 dispatch); here one UDF call
 extracts everything for an Arrow batch of documents (SURVEY.md §2.10 UDF
-surface #3/#4). ``with_extraction`` applies the UDF once (``res_both``) with
-both the text-route and the stub-OCR assembly as arguments; the kernel
-resolves each row to one input by its route, so the expensive path only sees
-the rows whose route needs it (fallback_processor.py:218-235 expensive-path
-gating, expressed as a per-row pick instead of control flow). The other
-side's assembly is there for the step-3b fallback.
+surface #3/#4). ``with_extraction`` applies the UDF once with both the
+text-route and the stub-OCR assembly as arguments; the kernel resolves each
+row to one input by its route, so the expensive path only sees the rows whose
+route needs it (fallback_processor.py:218-235 expensive-path gating,
+expressed as a per-row pick instead of control flow). The other side's
+assembly is there for the step-3b fallback. The UDF returns one
+``EXTRACT_RESULT`` per row (column ``res``), which emission reads directly.
 """
 
 from __future__ import annotations
@@ -54,11 +55,6 @@ EXTRACT_RESULT = StructType(
 )
 
 
-BOTH_RESULT = StructType(
-    [StructField("t", EXTRACT_RESULT), StructField("o", EXTRACT_RESULT)]
-)
-
-
 def _make_extract_udf(field_banks: dict, field_order: dict):
     """Build the extraction UDF with the EFFECTIVE config captured by value.
 
@@ -69,8 +65,8 @@ def _make_extract_udf(field_banks: dict, field_order: dict):
     reach every executor without a side channel.
     """
 
-    @F.pandas_udf(BOTH_RESULT)
-    def _extract_both_udf(
+    @F.pandas_udf(EXTRACT_RESULT)
+    def _extract_udf(
         vendor: pd.Series,
         route: pd.Series,
         fb_primary: pd.Series,
@@ -86,21 +82,24 @@ def _make_extract_udf(field_banks: dict, field_order: dict):
         # P10 adequacy chain) instead of extracting both sides and merging.
         from .kernel import extract_routed
 
-        t, o = extract_routed(
+        res = extract_routed(
             vendor, route, fb_primary, has1, has2, text, ocr, e1f, e2f,
             field_banks, field_order,
         )
-        return pd.DataFrame({"t": t, "o": o}, index=vendor.index)
+        return pd.DataFrame(
+            res.tolist(), index=vendor.index, columns=EXTRACT_RESULT.fieldNames()
+        )
 
-    return _extract_both_udf
+    return _extract_udf
 
 
 def with_extraction(df: DataFrame) -> DataFrame:
-    """Adds res_t / res_o struct columns from one UDF call per batch; the
-    kernel picks each row's input by its route. Hybrid schlage rows get the
-    all-pages stub-OCR assembly as their OCR candidate (the reference's
-    multi-OCR renders every page — audit §21) plus the engine-confidence
-    scalar the O6 pick compares on the reference's 0-1 scale."""
+    """Adds the ``res`` struct column (fields, items, info) from one UDF call
+    per batch; the kernel picks each row's input by its route. Hybrid schlage
+    rows get the all-pages stub-OCR assembly as their OCR candidate (the
+    reference's multi-OCR renders every page — audit §21) plus the
+    engine-confidence scalar the O6 pick compares on the reference's 0-1
+    scale."""
     from .. import config as C
     from .detect import _joined_expr
 
@@ -129,19 +128,13 @@ def with_extraction(df: DataFrame) -> DataFrame:
     has = lambda kind: F.expr(
         f"exists(spans, s -> s.kind = '{kind}' and trim(s.text) <> '')"
     )
-    from .colutil import add_cols, replace_cols
+    from .colutil import add_cols
 
-    df = add_cols(
+    return add_cols(
         df,
-        res_both=extract_udf(
+        res=extract_udf(
             F.col("vendor"), F.col("route"), F.col("fb_primary"),
             has("media_text"), has("media_text_alt"),
             text_in, ocr_in, e1f, e2f,
         ),
-    )
-    return replace_cols(
-        df,
-        drop=("res_both",),
-        res_t=F.col("res_both.t"),
-        res_o=F.col("res_both.o"),
     )

@@ -190,10 +190,12 @@ def extract_batch(
 ) -> pd.DataFrame:
     """Full extraction for one Arrow batch → DataFrame(fields, items, info).
 
-    fields: list[{key, value}] in bank order; items: list[{line, serialized,
+    fields: {key: value} in bank order; items: list[{line, serialized,
     marks}] in document order (sorting happens natively downstream); info:
     the F13 document-level additional-info harvest (schlage only — audit
     §18; sequential two-phase line walk, independent.py twin — like F5).
+    All three are None where the row has no extraction (null text, or a
+    vendor with no bank).
     """
     from .items import extract_items
 
@@ -208,8 +210,7 @@ def extract_batch(
             info_col.append(None)
             continue
         v = vendor[idx]
-        bank_order = order.get(v, [])
-        fields_col.append([{"key": k, "value": d[k]} for k in bank_order if k in d])
+        fields_col.append({k: d[k] for k in order.get(v, []) if k in d})
         items = extract_items(v, text[idx], d)
         items_col.append(
             [{"line": it["line"], "serialized": it["serialized"], "marks": it["marks"]}
@@ -236,12 +237,12 @@ def extract_routed(
     e2f: pd.Series,
     field_banks: dict | None = None,
     field_order: dict | None = None,
-) -> tuple[pd.Series, pd.Series]:
+) -> pd.Series:
     """Route-aware extraction for one Arrow batch (audit §21 — the J1
     combiner is dead code in the reference; hybrids resolve to ONE
     extraction input):
 
-    * route 'text'/'ocr': extract that side (result in the matching slot);
+    * route 'text'/'ocr': extract that side;
     * hybrid schlage: O6 comprehensive pick between the selectable text
       and the all-pages stub-OCR candidate (dual-engine selection over
       the e1f/e2f assemblies via the independent.py twin), then one
@@ -252,7 +253,9 @@ def extract_routed(
       inadequate subset;
     * hybrid ceco/steelcraft: the specialized processors are text-only.
 
-    Hybrid results ride the 't' slot; the 'o' slot is None for them.
+    Returns one EXTRACT_RESULT dict per row: fields in bank order with no
+    None value, items, info. A row with no extraction (null text, or a
+    vendor with no bank) gets empty lists.
     """
     # List-based plumbing (r5): per-row pandas access (Series.__getitem__,
     # .loc/.at) cost ~20% of the kernel wall at 1000-row batches; pull the
@@ -265,7 +268,6 @@ def extract_routed(
     tl, ol = text.tolist(), ocr.tolist()
     e1l, e2l = e1f.tolist(), e2f.tolist()
     final: list = [None] * n
-    t_slot = [True] * n
     generic_hybrid: list[int] = []
     side_of: dict = {}  # generic rows: which side the final input came from
     for i in range(n):
@@ -276,7 +278,6 @@ def extract_routed(
             side_of[i] = "text"
         elif r == "ocr":
             final[i] = ol[i]
-            t_slot[i] = False
             side_of[i] = "ocr"
         else:
             if v == "schlage":
@@ -311,8 +312,7 @@ def extract_routed(
         # the generic OCR method parses with the IMAGE processor's bank
         # family (audit §23), not the generic text bank
         f, it = I.image_route_extract(final[i] or "")
-        keys = order_map.get(vl[i], [])
-        fields_l[i] = [{"key": k, "value": f[k]} for k in keys if k in f]
+        fields_l[i] = {k: f[k] for k in order_map.get(vl[i], []) if k in f}
         items_l[i] = it
         info_l[i] = []
 
@@ -323,7 +323,7 @@ def extract_routed(
     # P10 adequacy second pass for generic hybrids (small subset)
     redo = []
     for i in generic_hybrid:
-        fields = {kv["key"]: kv["value"] for kv in (fields_l[i] or [])}
+        fields = fields_l[i] or {}
         items = items_l[i] or []
         prim = fbl[i]
         conf = (
@@ -372,31 +372,21 @@ def extract_routed(
             else:
                 prim = fbl[i]
                 method = flip[prim] if i in redo_set else prim
-        fields = {kv["key"]: kv["value"] for kv in fields_l[i]}
-        f2, i2, n2 = I.step3b(
-            v, method, fields, items_l[i] or [], info_l[i] or [],
+        fields_l[i], items_l[i], info_l[i] = I.step3b(
+            v, method, fields_l[i], items_l[i] or [], info_l[i] or [],
             tl[i] or "", ol[i] or "",
             field_banks, field_order,
         )
-        keys = order_map.get(v, [])
-        fields_l[i] = [{"key": k, "value": f2[k]} for k in keys if k in f2]
-        items_l[i] = i2
-        info_l[i] = n2
 
-    t_col, o_col = [], []
+    # emission reads this result as is: the field list is built once, here,
+    # in bank order and without None values
+    out = []
     for i in range(n):
-        cell = (
-            None
-            if fields_l[i] is None
-            else {"fields": fields_l[i], "items": items_l[i], "info": info_l[i]}
-        )
-        if t_slot[i]:
-            t_col.append(cell)
-            o_col.append(None)
-        else:
-            t_col.append(None)
-            o_col.append(cell)
-    return (
-        pd.Series(t_col, index=vendor.index, dtype=object),
-        pd.Series(o_col, index=vendor.index, dtype=object),
-    )
+        f = fields_l[i] or {}
+        keys = order_map.get(vl[i], [])
+        out.append({
+            "fields": [{"key": k, "value": f[k]} for k in keys if f.get(k) is not None],
+            "items": items_l[i] or [],
+            "info": info_l[i] or [],
+        })
+    return pd.Series(out, index=vendor.index, dtype=object)

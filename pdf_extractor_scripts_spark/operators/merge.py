@@ -1,14 +1,13 @@
-"""Route-result resolution + deterministic span emission — all native
+"""Deterministic span emission from the extraction result — all native
 Catalyst higher-order functions, no Python.
 
 AUDIT §21: the reference's J1 combiner (fallback_processor.py:518-620;
 audit §11 semantics) is DEAD CODE — its only caller sits behind an
-unreachable elif (:238). Hybrids now resolve to ONE extraction inside the
+unreachable elif (:238). Hybrids resolve to ONE extraction inside the
 kernel (O6 winner pick for schlage, the P10 adequacy chain for generic),
-so exactly one of res_t/res_o is populated per row and the section-level
-expressions below degenerate to a wholesale pass-through of that side.
-The J1 operator itself remains implemented (oracle.merge_routes) and
-gated as j1_hybrid_merge.
+so the UDF returns one ``res`` struct per row and emission reads it
+directly; there is no route merge. The J1 operator itself remains
+implemented (oracle.merge_routes) and gated as j1_hybrid_merge.
 
 Emission (the span-equality contract): fields in canonical bank order, then
 items sorted by numeric line number with a stable original-index tie-break
@@ -24,80 +23,9 @@ from pyspark.sql import DataFrame
 
 from .. import config as C
 
-_OCR_FIRST = ("totals", "shipping")  # fallback_processor.py:536-544
-
-
-def _sec_has(m: str, keys: list[str]) -> str:
-    return "(" + " OR ".join(
-        f"try_element_at({m}, '{k}') IS NOT NULL" for k in keys
-    ) + ")"
-
-
-def _merged_fields_expr() -> str:
-    """CASE over vendors → ordered SECTION-level pick between the routes:
-    per key, take the priority side's value iff that side's SECTION has any
-    key at all, else the other side's (no cross-side back-fill within a
-    section — audit §11)."""
-    branches = []
-    for v, order in C.FIELD_ORDER.items():
-        sections: dict[str, list[str]] = {}
-        for k in order:
-            sections.setdefault(k.split(".", 1)[0], []).append(k)
-        parts = []
-        for k in order:
-            sec = k.split(".", 1)[0]
-            mp, ms = ("mo", "mt") if sec in _OCR_FIRST else ("mt", "mo")
-            pick = (
-                f"CASE WHEN {_sec_has(mp, sections[sec])} "
-                f"THEN try_element_at({mp}, '{k}') "
-                f"WHEN {_sec_has(ms, sections[sec])} "
-                f"THEN try_element_at({ms}, '{k}') END"
-            )
-            parts.append(f"named_struct('key', '{k}', 'value', {pick})")
-        branches.append(
-            f"WHEN vendor = '{v}' THEN "
-            f"filter(array({', '.join(parts)}), s -> s.value IS NOT NULL)"
-        )
-    return (
-        "CASE " + " ".join(branches) + " ELSE cast(array() as "
-        "array<struct<key:string, value:string>>) END"
-    )
-
-
-def with_merge(df: DataFrame) -> DataFrame:
-    from .colutil import add_cols, replace_cols
-
-    df = add_cols(
-        df,
-        mt=F.expr("map_from_entries(coalesce(res_t.fields, array()))"),
-        mo=F.expr("map_from_entries(coalesce(res_o.fields, array()))"),
-    )
-    # F13 additional_info (audit §18/§21): document-level, schlage-only,
-    # harvested from the text the extraction settled on — hybrids resolve
-    # to ONE extraction upstream (the kernel's O6/P10 chain), so the
-    # result rides whichever slot is populated
-    return replace_cols(
-        df,
-        drop=("mt", "mo"),
-        merged_fields=F.expr(_merged_fields_expr()),
-        merged_items=F.expr(
-            "CASE WHEN res_t.items IS NOT NULL AND size(res_t.items) > 0 "
-            "THEN res_t.items "
-            "WHEN res_o.items IS NOT NULL THEN res_o.items "
-            "ELSE cast(array() as array<struct<line:string, serialized:string, "
-            "marks:array<string>>>) END"
-        ),
-        merged_info=F.expr(
-            "CASE WHEN res_t.info IS NOT NULL THEN res_t.info "
-            "WHEN res_o.info IS NOT NULL THEN res_o.info "
-            "ELSE cast(array() as array<string>) END"
-        ),
-    )
-
-
 _ITEMS_SORTED = """
 array_sort(
-  transform(merged_items, (it, i) -> named_struct(
+  transform(res.items, (it, i) -> named_struct(
     'ln', coalesce(try_cast(regexp_replace(it.line, '[^0-9]', '') as bigint), 0L),
     'idx', i,
     'serialized', it.serialized,
@@ -110,13 +38,13 @@ array_sort(
 _OUT_SPANS = f"""
 transform(
   concat(
-    transform(merged_fields, f -> named_struct(
+    transform(res.fields, f -> named_struct(
       'kind', concat('field:', f.key), 'text', f.value, 'media_ref', '')),
     flatten(transform({_ITEMS_SORTED}, it -> concat(
       array(named_struct('kind', 'item', 'text', it.serialized, 'media_ref', '')),
       transform(it.marks, m -> named_struct(
         'kind', 'mark', 'text', m, 'media_ref', ''))))),
-    transform(merged_info, t -> named_struct(
+    transform(res.info, t -> named_struct(
       'kind', 'info', 'text', t, 'media_ref', '')),
     transform(filter(spans, s -> s.kind = 'media'), s -> named_struct(
       'kind', 'media', 'text', '', 'media_ref', s.media_ref)),
@@ -134,14 +62,14 @@ def _confidence_expr() -> str:
     seven sections on every document, failures 0.0 — audit §10,
     text_pdf_processor.py:1146-1168); same spec as oracle.score_confidence."""
     def sec_count(sec: str) -> str:
-        return f"size(filter(merged_fields, f -> substring_index(f.key, '.', 1) = '{sec}'))"
+        return f"size(filter(res.fields, f -> substring_index(f.key, '.', 1) = '{sec}'))"
 
     branches = []
     for vendor, sizes in C.SECTION_SIZES.items():
         terms = []
         for sec, w in C.CONF_WEIGHTS.items():
             if sec == "items":
-                terms.append(f"{w} * (CASE WHEN size(merged_items) > 0 THEN 1.0 ELSE 0.0 END)")
+                terms.append(f"{w} * (CASE WHEN size(res.items) > 0 THEN 1.0 ELSE 0.0 END)")
             elif sizes.get(sec):
                 terms.append(f"{w} * (cast({sec_count(sec)} as double) / {sizes[sec]})")
         branches.append(
@@ -160,7 +88,7 @@ def with_emission(df: DataFrame) -> DataFrame:
         out_spans=F.expr(_OUT_SPANS),
         extraction_confidence=F.expr(_confidence_expr()),
         validation_failed=F.expr(
-            "CASE WHEN exists(merged_fields, f -> f.key = 'header.invoice_number') "
+            "CASE WHEN exists(res.fields, f -> f.key = 'header.invoice_number') "
             "THEN 0 ELSE 1 END"
         ),
         ocr_used=F.when(F.col("route").isin("ocr", "hybrid"), 1).otherwise(0),

@@ -5,8 +5,9 @@ reference's batch runner (SURVEY.md §3.1).
       → detection columns (vendor, confidence — native SQL)
       → routing columns (text density gate — native SQL)
       → weight + salted repartition (skew defense)
-      → Arrow extraction UDF per route (masked inputs)
-      → hybrid merge + deterministic span emission (native HOFs)
+      → one Arrow extraction UDF (both route assemblies in; one result
+        per doc out — the kernel resolves each route to one extraction)
+      → deterministic span emission from that result (native HOFs)
       → [optional] checkpoint/lineage/metrics writes + idempotent resume
 
 Stage boundaries (shuffles) occur ONLY at the salted repartition and any
@@ -22,7 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ..operators.detect import with_assembled_text, with_vendor, with_route
 from ..operators.extract import with_extraction
-from ..operators.merge import with_merge, with_emission
+from ..operators.merge import with_emission
 from ..operators.skew import with_weight, salted_repartition
 from ..operators.checkpoint import with_partition_key, resume_filter, write_outputs
 
@@ -53,7 +54,6 @@ def run_pipeline(
             n_partitions = docs.sparkSession.sparkContext.defaultParallelism
         df = salted_repartition(df, n_partitions)
     df = with_extraction(df)
-    df = with_merge(df)
     df = with_emission(df)
     return df.select(*RESULT_COLS)
 

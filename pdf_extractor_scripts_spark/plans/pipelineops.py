@@ -51,8 +51,9 @@ def _j1_sql(dialect: str) -> str:
     oracle=_j1_sql("duckdb"),
     doc="Hybrid route merge: full outer self-join on doc_id + per-section "
         "priority coalesce (header from text route, totals from OCR route) — "
-        "fallback_processor.py:518-620 as a genuine join. The engine's "
-        "production form is operators/merge.py.",
+        "fallback_processor.py:518-620 as a genuine join. The reference's "
+        "only caller is dead code (audit §21), so the engine has no "
+        "production merge: the kernel resolves each hybrid to one extraction.",
 )
 def j1_hybrid_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     _doc_view(spark, sf_dir)

@@ -38,7 +38,7 @@ def main() -> None:
         with_vendor,
     )
     from pdf_extractor_scripts_spark.operators.extract import with_extraction
-    from pdf_extractor_scripts_spark.operators.merge import with_emission, with_merge
+    from pdf_extractor_scripts_spark.operators.merge import with_emission
     from pdf_extractor_scripts_spark.operators.skew import with_weight
     from pdf_extractor_scripts_spark.plans.pipeline import RESULT_COLS, run_pipeline
 
@@ -66,8 +66,7 @@ def main() -> None:
 
     def full_primary_only(docs):
         df = chain(docs, assembled_primary_only, with_vendor, with_route,
-                    lambda d: with_weight(d, 400), with_extraction, with_merge,
-                    with_emission)
+                    lambda d: with_weight(d, 400), with_extraction, with_emission)
         return df.select(*RESULT_COLS)
 
     variants = {

@@ -36,7 +36,7 @@ def main():
     sections.append((
         "Extraction pipeline (default, zero-shuffle)",
         "One mapper chain: scan → codegen'd detection/routing → Arrow UDF → "
-        "codegen'd merge/emission → sink. No Exchange anywhere — extraction "
+        "codegen'd emission → sink. No Exchange anywhere — extraction "
         "is embarrassingly parallel and at 10^12 docs a repartition would "
         "itself be a full-corpus shuffle.",
         plan(run_pipeline(docs), "simple"),

@@ -52,6 +52,15 @@ def test_pipeline_is_shuffle_free_by_default(spark):
     docs = corpus_df(spark, n_docs=24, seed=42)
     plan = _plan(run_pipeline(docs))
     assert "Exchange" not in plan, "default extraction plan must not shuffle"
+    # one extraction UDF whose one result emission reads directly: no
+    # two-slot route merge between them
+    udfs = [
+        l for l in plan.splitlines()
+        if l.strip().startswith("(") and l.strip().endswith("ArrowEvalPython")
+    ]
+    assert len(udfs) == 1, udfs
+    for name in ("map_from_entries", "res_t", "res_o"):
+        assert name not in plan, name
 
 
 def test_pipeline_salted_has_single_shuffle(spark):
