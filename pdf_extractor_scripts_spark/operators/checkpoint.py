@@ -5,15 +5,17 @@ n_buckets) — NOT Spark's physical partition index, which changes with
 parallelism; this is what lets N- and 4N-executor runs share checkpoints
 (SURVEY.md §7.3(4)). The reference's closest analog is the detection cache
 keyed on path+mtime (pdf_text_detector.py:131-135); here resumability is a
-first-class table (FIXTURES.md §4) written once per completed bucket.
+first-class table (FIXTURES.md §4), ``commits/`` partitioned by ``run_id``,
+written once per completed bucket. ``out_spans/`` is plain parquet, one file
+per write task: no reader prunes on the bucket.
 
 Resume = a literal predicate ``NOT partition_key IN (<completed buckets>)``
 on the extracted frame: the completed buckets of a run_id are at most
-``n_buckets`` ints, collected in one job. ``partition_key`` is a function of
-``doc_id``, which every pipeline layer passes through, so over a plan that
-holds the extraction Catalyst pushes the predicate down to the scan, below
-the extraction UDF, and the committed plan does not read the checkpoint
-table it appends to.
+``n_buckets`` ints, collected in one job from ``commits/run_id=<id>/`` (no
+job for a fresh run_id). ``partition_key`` is a function of ``doc_id``, which
+every pipeline layer passes through, so over a plan that holds the extraction
+Catalyst pushes the predicate down to the scan, below the extraction UDF, and
+the committed plan does not read the checkpoint table it appends to.
 
 Output commit protocol (manifest pattern — what Iceberg snapshot commits give
 you natively in production): every out_spans row carries an ``attempt_id``;
@@ -23,11 +25,11 @@ metrics, and committed_metrics() is its long form. A crash between the data
 write and the checkpoint write leaves orphan rows whose attempt_id no
 checkpoint mentions — invisible to readers, because
 committed_outputs()/quality_report() semi-join outputs against committed
-(partition_key, attempt_id) pairs. Physical writes are therefore
+(run_id, partition_key, attempt_id) keys. Physical writes are therefore
 at-least-once, but the VISIBLE table is exactly-once, and resume can safely
 re-process any bucket whose commit row is missing. A ``metrics/`` table
-beside ``checkpoints/`` comes from an older layout; it repeats the checkpoint
-rows' numbers and no reader opens it.
+beside the checkpoint rows comes from an older layout; it repeats their
+numbers and no reader opens it.
 """
 
 from __future__ import annotations
@@ -44,13 +46,17 @@ _COMMIT_KEY = ["run_id", "partition_key", "attempt_id"]
 _METRICS = ("docs", "pages", "ocr_fallbacks", "validation_failures")
 
 
-def _committed(spark: SparkSession, ckpt_dir: str) -> DataFrame:
-    """The manifest: checkpoint rows of committed attempts, keyed by
-    (run_id, partition_key, attempt_id). Read with the known schema, so a
-    table whose first commit failed (an empty directory, or one holding only
-    ``_temporary/``) is an empty manifest rather than a schema error."""
-    ck = spark.read.schema(CHECKPOINT_SCHEMA).parquet(os.path.join(ckpt_dir, "checkpoints"))
-    return ck.filter(F.col("status") == "done")
+def _committed(spark: SparkSession, ckpt_dir: str, run_id: str | None = None) -> DataFrame:
+    """The manifest: checkpoint rows of committed attempts (all runs', or
+    ``run_id``'s only) in ``CHECKPOINT_SCHEMA`` order. Read with that schema,
+    so a table whose first commit failed (an empty directory, or one holding
+    only ``_temporary/``) is an empty manifest and ``007`` stays a string."""
+    path = os.path.join(ckpt_dir, "commits")
+    reader = spark.read.schema(CHECKPOINT_SCHEMA).option("basePath", path)
+    if run_id is not None:
+        utils = spark._jvm.org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+        path = os.path.join(path, utils.getPartitionPathString("run_id", run_id))
+    return reader.parquet(path).filter(F.col("status") == "done").select(*CHECKPOINT_SCHEMA.names)
 
 
 def committed_outputs(spark: SparkSession, ckpt_dir: str) -> DataFrame:
@@ -75,9 +81,8 @@ def backup_outputs(
     copy is explicit. Returns the snapshot path."""
     backup_root = backup_dir or os.path.join(ckpt_dir, "backups")
     dest = os.path.join(backup_root, label)
-    committed_outputs(spark, ckpt_dir).write.mode("errorifexists").partitionBy(
-        "partition_key"
-    ).parquet(os.path.join(dest, "out_spans"))
+    committed_outputs(spark, ckpt_dir).write.mode("errorifexists").parquet(
+        os.path.join(dest, "out_spans"))
     _committed(spark, ckpt_dir).write.mode("errorifexists").parquet(
         os.path.join(dest, "manifest")
     )
@@ -181,34 +186,38 @@ def with_partition_key(df: DataFrame, n_buckets: int = 64) -> DataFrame:
 
 
 def resume_filter(df: DataFrame, spark: SparkSession, ckpt_dir: str, run_id: str) -> DataFrame:
-    """Drop rows in buckets already completed for ``run_id``. No checkpoint
-    table yet is a fresh run; an unreadable table raises: treating it as
-    missing would commit every bucket a second time."""
+    """Drop rows in buckets already completed for ``run_id``. No run
+    directory yet is a fresh run (no Spark job); an unreadable one raises, as
+    do an old flat ``checkpoints/`` table, whose commits resume cannot see,
+    and an empty run_id, which Spark writes as a null partition value."""
     from pyspark.errors import AnalysisException
 
+    if not run_id:
+        raise ValueError("run_id must be a non-empty string")
+    old = spark._jvm.org.apache.hadoop.fs.Path(os.path.join(ckpt_dir, "checkpoints"))
+    if old.getFileSystem(spark._jsc.hadoopConfiguration()).exists(old):
+        raise FileExistsError(
+            f"{ckpt_dir} holds a checkpoints/ table of the older flat layout; "
+            "resuming it would commit every bucket again: use a new directory")
     try:
-        done = _committed(spark, ckpt_dir)
+        done = _committed(spark, ckpt_dir, run_id)
     except AnalysisException as e:
         if e.getCondition() == "PATH_NOT_FOUND":
             return df
         raise
-    done = done.filter(F.col("run_id") == run_id).select("partition_key").distinct()
-    keys = sorted(r["partition_key"] for r in done.collect())
+    keys = sorted(r[0] for r in done.select("partition_key").distinct().collect())
     if not keys:
         return df
     return df.filter(~F.col("partition_key").isin(keys))
 
 
 def write_outputs(result: DataFrame, spark: SparkSession, ckpt_dir: str, run_id: str) -> int:
-    """Write extracted spans partitioned by bucket, then the checkpoint rows
-    with their per-bucket metrics — the checkpoint write is the COMMIT (see
-    module docstring). Returns the number of documents committed; an empty
-    ``result`` writes nothing."""
+    """Write extracted spans, one file per write task, then the checkpoint
+    rows with their per-bucket metrics under ``commits/run_id=<run_id>/`` —
+    the checkpoint write is the COMMIT (see module docstring). Returns the
+    number of documents committed; an empty ``result`` writes nothing."""
     import datetime
     import uuid
-
-    out_path = os.path.join(ckpt_dir, "out_spans")
-    ck_path = os.path.join(ckpt_dir, "checkpoints")
 
     # Materialize the per-bucket stats on the driver (one tiny row per
     # bucket) and write the checkpoint rows from a FRESH DataFrame. Writing
@@ -233,7 +242,7 @@ def write_outputs(result: DataFrame, spark: SparkSession, ckpt_dir: str, run_id:
         "validation_failed", "ocr_used", "n_pages", "extraction_confidence",
     ).withColumn("run_id", F.lit(run_id)).withColumn(
         "attempt_id", F.lit(attempt_id)
-    ).write.mode("append").partitionBy("partition_key").parquet(out_path)
+    ).write.mode("append").parquet(os.path.join(ckpt_dir, "out_spans"))
 
     # aware UTC: Arrow would read a naive datetime in the session time zone
     now = datetime.datetime.now(datetime.timezone.utc)
@@ -242,7 +251,8 @@ def write_outputs(result: DataFrame, spark: SparkSession, ckpt_dir: str, run_id:
          "status": "done", "updated_at": now}
         for r in stat_rows
     ]
-    _local_rows(spark, ck_rows, CHECKPOINT_SCHEMA).write.mode("append").parquet(ck_path)
+    _local_rows(spark, ck_rows, CHECKPOINT_SCHEMA).write.mode("append").partitionBy(
+        "run_id").parquet(os.path.join(ckpt_dir, "commits"))
     return sum(r["docs"] for r in stat_rows)
 
 

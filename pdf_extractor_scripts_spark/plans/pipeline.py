@@ -60,8 +60,8 @@ def run_pipeline(
 
 def commit(spark: SparkSession, extracted: DataFrame, ckpt_dir: str, run_id: str) -> int:
     """Commit extracted rows (``with_partition_key(run_pipeline(...))``) under
-    ``run_id``: skip buckets already committed, write spans + checkpoint rows
-    (with their metrics) for the rest. Returns the number of docs committed.
+    ``run_id``: skip buckets its own checkpoint rows mark done, write spans
+    (a file per task) + checkpoint rows for the rest. Returns docs committed.
 
     Resume is a literal predicate on ``partition_key``, so over a plan that
     still holds the extraction Catalyst pushes it below the UDF: committed

@@ -97,7 +97,8 @@ def test_resume_predicate_is_pushed_below_the_extraction_udf(spark, tmp_path):
                                              ("other", "a3", keys))
             for b in buckets]
     ckpt = str(tmp_path)
-    _local_rows(spark, rows, CHECKPOINT_SCHEMA).write.parquet(f"{ckpt}/checkpoints")
+    _local_rows(spark, rows, CHECKPOINT_SCHEMA).write.partitionBy("run_id").parquet(
+        f"{ckpt}/commits")
 
     todo = resume_filter(with_partition_key(run_pipeline(docs)), spark, ckpt, "r")
     tree = todo._jdf.queryExecution().executedPlan().toString().splitlines()

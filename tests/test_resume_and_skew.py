@@ -49,7 +49,7 @@ def test_resume_is_idempotent_at_bucket_granularity(spark, ckpt_dir):
     n3 = run_with_checkpoint(spark, docs, ckpt_dir, run_id="r1")
     assert n3 == 0
 
-    ck = spark.read.parquet(f"{ckpt_dir}/checkpoints")
+    ck = spark.read.parquet(f"{ckpt_dir}/commits")
     assert ck.filter(F.col("status") != "done").count() == 0
     mx = committed_metrics(spark, ckpt_dir)
     assert mx.filter(F.col("metric") == "docs").agg(F.sum("value")).first()[0] == N_DOCS
@@ -72,7 +72,7 @@ def test_crash_between_data_and_checkpoint_write_is_invisible(spark, ckpt_dir):
         "validation_failed", "ocr_used", "n_pages", "extraction_confidence",
     ).withColumn("run_id", F.lit("r1")).withColumn(
         "attempt_id", F.lit("dead-attempt")
-    ).write.mode("append").partitionBy("partition_key").parquet(f"{ckpt_dir}/out_spans")
+    ).write.mode("append").parquet(f"{ckpt_dir}/out_spans")
 
     # retry of the same run: resume sees no completed buckets, reprocesses all
     n = run_with_checkpoint(spark, docs, ckpt_dir, run_id="r1")
@@ -89,14 +89,14 @@ def test_crash_between_data_and_checkpoint_write_is_invisible(spark, ckpt_dir):
 
 
 def test_unreadable_checkpoint_table_raises_instead_of_rerunning(spark, ckpt_dir):
-    """A checkpoint table that exists but cannot be read is not "no
+    """A run's checkpoint rows that exist but cannot be read are not "no
     commits": resuming as a fresh run would commit every bucket twice."""
     import os
 
     from py4j.protocol import Py4JJavaError
 
-    os.makedirs(f"{ckpt_dir}/checkpoints")
-    with open(f"{ckpt_dir}/checkpoints/part-00000.parquet", "wb") as f:
+    os.makedirs(f"{ckpt_dir}/commits/run_id=r1")
+    with open(f"{ckpt_dir}/commits/run_id=r1/part-00000.parquet", "wb") as f:
         f.write(b"not a parquet file" * 8)
     docs = corpus_df(spark, n_docs=8, seed=42)
     with pytest.raises(Py4JJavaError):
@@ -114,10 +114,11 @@ def test_checkpoint_table_left_by_failed_first_commit_is_no_commits(
     commits every document once."""
     import os
 
-    os.makedirs(f"{ckpt_dir}/checkpoints")
+    os.makedirs(f"{ckpt_dir}/commits")
     if leftover == "temporary_only":
         # an uncommitted task attempt of the crashed job
-        attempt = f"{ckpt_dir}/checkpoints/_temporary/0/_temporary/attempt_0_0000_m_000000_0"
+        attempt = (f"{ckpt_dir}/commits/_temporary/0/_temporary/"
+                   "attempt_0_0000_m_000000_0/run_id=r1")
         os.makedirs(attempt)
         with open(f"{attempt}/part-00000.parquet", "wb") as f:
             f.write(b"partial")
@@ -144,9 +145,8 @@ def test_backup_sink_snapshots_committed_outputs(spark, ckpt_dir):
     assert n == 16
     # plant an orphan attempt that the snapshot must exclude
     out = spark.read.parquet(f"{ckpt_dir}/out_spans")
-    out.withColumn("attempt_id", F2.lit("dead")).write.mode("append").partitionBy(
-        "partition_key"
-    ).parquet(f"{ckpt_dir}/out_spans")
+    out.withColumn("attempt_id", F2.lit("dead")).write.mode("append").parquet(
+        f"{ckpt_dir}/out_spans")
 
     dest = backup_outputs(spark, ckpt_dir, label="snap_0001")
     back = restore_backup(spark, dest)
@@ -180,9 +180,9 @@ def _assert_metrics_schema(df):
 
 
 def test_commit_appends_one_file_per_bookkeeping_table(spark, ckpt_dir):
-    """One commit appends exactly one parquet file to ``checkpoints/``,
-    however many task slots the session has, and writes no ``metrics/``
-    table: the checkpoint rows are exactly the commit's, and
+    """One commit appends exactly one parquet file to ``commits/``, in its
+    run's directory, however many task slots the session has, and writes no
+    ``metrics/`` table: the checkpoint rows are exactly the commit's, and
     committed_metrics is their long form."""
     import glob
     import os
@@ -193,13 +193,15 @@ def test_commit_appends_one_file_per_bookkeeping_table(spark, ckpt_dir):
     docs = corpus_df(spark, n_docs=N_DOCS, seed=42)
     n = run_with_checkpoint(spark, docs, ckpt_dir, run_id="r1")
     assert n == N_DOCS
-    assert len(glob.glob(f"{ckpt_dir}/checkpoints/part-*.parquet")) == 1
+    assert len(glob.glob(f"{ckpt_dir}/commits/**/part-*.parquet", recursive=True)) == 1
+    assert len(glob.glob(f"{ckpt_dir}/commits/run_id=r1/part-*.parquet")) == 1
     assert not os.path.exists(f"{ckpt_dir}/metrics")
 
-    ck = spark.read.parquet(f"{ckpt_dir}/checkpoints")
+    ck = spark.read.parquet(f"{ckpt_dir}/commits")
     mx = committed_metrics(spark, ckpt_dir)
-    assert [(f.name, f.dataType) for f in ck.schema] == [
-        (f.name, f.dataType) for f in CHECKPOINT_SCHEMA]
+    # the run_id partition column is read back last, so compare as a mapping
+    assert {f.name: f.dataType for f in ck.schema} == {
+        f.name: f.dataType for f in CHECKPOINT_SCHEMA}
     _assert_metrics_schema(mx)
 
     buckets = sorted(r["partition_key"] for r in
@@ -213,6 +215,131 @@ def test_commit_appends_one_file_per_bookkeeping_table(spark, ckpt_dir):
     mx_rows = mx.collect()
     assert Counter(r["partition_key"] for r in mx_rows) == {b: 4 for b in buckets}
     assert sorted(tuple(r) for r in mx_rows) == _long_form(ck_rows)
+
+
+def _ck_rows(run_buckets) -> list:
+    """Checkpoint rows (``CHECKPOINT_SCHEMA``) for (run_id, buckets) pairs."""
+    import datetime
+
+    now = datetime.datetime.now(datetime.timezone.utc)
+    return [{"run_id": run_id, "partition_key": b, "attempt_id": "a", "status": "done",
+             "docs": 1, "pages": 1, "ocr_fallbacks": 0, "validation_failures": 0,
+             "updated_at": now}
+            for run_id, buckets in run_buckets for b in buckets]
+
+
+def test_commit_writes_one_out_spans_file_per_write_task(spark, ckpt_dir):
+    """out_spans is not fanned out by bucket: a commit over two input
+    partitions writes at most two data files, however many buckets it
+    touches, and every row keeps its partition_key as a column."""
+    import glob
+
+    docs = corpus_df(spark, n_docs=N_DOCS, seed=42).repartition(2)
+    assert run_with_checkpoint(spark, docs, ckpt_dir, run_id="r1") == N_DOCS
+    files = glob.glob(f"{ckpt_dir}/out_spans/**/*.parquet", recursive=True)
+    assert 1 <= len(files) <= 2, files
+    keyed = with_partition_key(docs).select("doc_id", "partition_key").collect()
+    assert len({r["partition_key"] for r in keyed}) > 2
+    out = committed_outputs(spark, ckpt_dir).select("doc_id", "partition_key").collect()
+    assert sorted(map(tuple, out)) == sorted(map(tuple, keyed))
+
+
+def test_resume_reads_only_its_own_runs_checkpoint_rows(spark, ckpt_dir):
+    """Resume does not grow with history: after 200 commits of other
+    run_ids, resume for a fresh run_id runs no Spark job, and an existing
+    run's completed buckets are read from that run's one file."""
+    import time
+
+    from pdf_extractor_scripts_spark.operators.checkpoint import (
+        _committed,
+        _local_rows,
+        resume_filter,
+    )
+    from pdf_extractor_scripts_spark.schemas import CHECKPOINT_SCHEMA
+
+    docs = corpus_df(spark, n_docs=8, seed=42)
+    assert run_with_checkpoint(spark, docs, ckpt_dir, run_id="r000") == 8
+    # the checkpoint rows of 199 more commits, laid out as a commit writes them
+    history = [(f"r{i:03d}", (i % 64, (i + 7) % 64)) for i in range(1, 200)]
+    _local_rows(spark, _ck_rows(history), CHECKPOINT_SCHEMA).write.mode(
+        "append").partitionBy("run_id").parquet(f"{ckpt_dir}/commits")
+    assert len(_committed(spark, ckpt_dir).inputFiles()) == 200
+
+    sc = spark.sparkContext
+    keyed = with_partition_key(docs)
+
+    def resume(run_id: str):
+        sc.setJobGroup(f"resume-{run_id}", "resume")
+        try:
+            return resume_filter(keyed, spark, ckpt_dir, run_id)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+
+    assert resume("fresh") is keyed
+    todo = resume("r042")
+    # listener events arrive in order: once r042's resume job is seen, a job
+    # of the fresh run's resume would have been seen too
+    tracker = sc.statusTracker()
+    deadline = time.time() + 30
+    while not tracker.getJobIdsForGroup("resume-r042") and time.time() < deadline:
+        time.sleep(0.1)
+    assert tracker.getJobIdsForGroup("resume-r042")
+    assert list(tracker.getJobIdsForGroup("resume-fresh")) == []
+
+    files = _committed(spark, ckpt_dir, "r042").inputFiles()
+    assert len(files) == 1 and "/run_id=r042/" in files[0], files
+    left = {r[0] for r in todo.select("partition_key").collect()}
+    all_keys = {r[0] for r in keyed.select("partition_key").collect()}
+    assert left == all_keys - {42, 49}
+
+
+def test_run_ids_round_trip_through_the_commit_path(spark, ckpt_dir):
+    """A run_id is a path segment of its checkpoint rows: characters that
+    need escaping, and values that look like a number or a date, resume
+    their own run and read back as the exact string. An empty run_id, which
+    would read back as null, is refused."""
+    from collections import Counter
+
+    from pdf_extractor_scripts_spark.operators.checkpoint import _committed
+    from pdf_extractor_scripts_spark.schemas import CHECKPOINT_SCHEMA
+
+    run_ids = ["a/b=c %d", "007", "1e5", "2024-01-01"]
+    docs = corpus_df(spark, n_docs=6, seed=42)
+    for run_id in run_ids:
+        assert run_with_checkpoint(spark, docs, ckpt_dir, run_id=run_id) == 6
+        assert run_with_checkpoint(spark, docs, ckpt_dir, run_id=run_id) == 0, run_id
+
+    ck = _committed(spark, ckpt_dir)
+    assert ck.schema.fieldNames() == CHECKPOINT_SCHEMA.fieldNames()
+    mx = committed_metrics(spark, ckpt_dir).filter(F.col("metric") == "docs")
+    per_run = Counter()
+    for r in mx.collect():
+        per_run[r["run_id"]] += r["value"]
+    assert per_run == {r: 6 for r in run_ids}
+    out = committed_outputs(spark, ckpt_dir).select("run_id").collect()
+    assert Counter(r[0] for r in out) == {r: 6 for r in run_ids}
+    with pytest.raises(ValueError, match="run_id"):
+        run_with_checkpoint(spark, docs, ckpt_dir, run_id="")
+
+
+def test_commit_refuses_a_directory_of_the_older_flat_layout(spark, ckpt_dir):
+    """Older commits recorded their buckets in a flat ``checkpoints/``
+    table. Resume reads ``commits/`` only, so committing into such a
+    directory would make every bucket visible twice: it raises before any
+    out_spans or commit file is written."""
+    import os
+
+    from pdf_extractor_scripts_spark.operators.checkpoint import _local_rows
+    from pdf_extractor_scripts_spark.schemas import CHECKPOINT_SCHEMA
+
+    _local_rows(spark, _ck_rows([("r1", range(4))]), CHECKPOINT_SCHEMA).write.parquet(
+        f"{ckpt_dir}/checkpoints")
+    docs = corpus_df(spark, n_docs=8, seed=42)
+    with pytest.raises(FileExistsError, match="checkpoints/"):
+        run_with_checkpoint(spark, docs, ckpt_dir, run_id="r1")
+    assert not os.path.exists(f"{ckpt_dir}/out_spans")
+    assert not os.path.exists(f"{ckpt_dir}/commits")
 
 
 def test_committed_metrics_reads_the_checkpoint_rows_of_an_old_layout(spark, ckpt_dir):
@@ -234,7 +361,8 @@ def test_committed_metrics_reads_the_checkpoint_rows_of_an_old_layout(spark, ckp
                 "metric": m, "value": v}
                for a, stats in (("a1", committed), ("dead", orphan))
                for b, vals in stats.items() for m, v in zip(_METRICS, vals)]
-    _local_rows(spark, ck_rows, CHECKPOINT_SCHEMA).write.parquet(f"{ckpt_dir}/checkpoints")
+    _local_rows(spark, ck_rows, CHECKPOINT_SCHEMA).write.partitionBy("run_id").parquet(
+        f"{ckpt_dir}/commits")
     _local_rows(spark, mx_rows, METRICS_SCHEMA).write.parquet(f"{ckpt_dir}/metrics")
 
     mx = committed_metrics(spark, ckpt_dir)
@@ -254,7 +382,7 @@ def test_checkpoint_updated_at_is_the_commit_instant_in_any_session_zone(spark, 
         before = time.time_ns() // 1000
         run_with_checkpoint(spark, corpus_df(spark, n_docs=8, seed=42), ckpt_dir, run_id="r1")
         after = time.time_ns() // 1000
-        got = [r[0] for r in spark.read.parquet(f"{ckpt_dir}/checkpoints")
+        got = [r[0] for r in spark.read.parquet(f"{ckpt_dir}/commits")
                .selectExpr("unix_micros(updated_at)").collect()]
     finally:
         spark.conf.set(key, old)

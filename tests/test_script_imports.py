@@ -79,3 +79,13 @@ def test_every_engine_name_the_scripts_import_resolves():
         bad += b
     assert not bad, bad
     assert total > 100, total  # the walk really saw the imports
+
+
+def test_queries_doc_is_what_its_script_renders():
+    """docs/QUERIES.md is generated: a hand edit would be lost at the next
+    regeneration, so the file must equal what the script renders now."""
+    spec = importlib.util.spec_from_file_location(
+        "make_queries_doc", ROOT / "scripts" / "make_queries_doc.py")
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    assert mod.render() == (ROOT / "docs" / "QUERIES.md").read_text()
