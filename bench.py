@@ -1,25 +1,29 @@
 #!/usr/bin/env python
-"""Benchmark harness; every mode prints ONE JSON line.
+"""Benchmark harness; every mode prints ONE JSON line, which carries the
+host facts (``perfbench.host.host_facts``: core count, memory, CPU model,
+source revision, library versions) under ``host``.
 
-Default mode: the headline queries at $SPARK_GRAFT_SF_DIR (default
-/root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS], the end-to-end
-extraction pipeline over the deterministic synthetic spans corpus and the
-four raw-file ingests of INGESTS:
+Default mode: the headline queries at $SPARK_GRAFT_SF_DIR (default: the
+sf0.1 test tables, SF_DIR) on local[$SPARK_GRAFT_CPUS] (default: this
+host's cores), the end-to-end extraction pipeline over the deterministic
+synthetic spans corpus and the four raw-file ingests of INGESTS:
 
     {"metric": ..., "value": <docs/sec>, "unit": "docs/sec",
      "queries": {name: sec, ...}, "sf": ..., "cpus": ..., ...}
 
-Scaling modes (SCALING: --scaling, --scaling-ingest, --crawl-scaling,
---office-scaling, --warc-scaling, --media-scaling) run one job at N and 4N
-task slots on the same materialized input and report the efficiency
-thr(4N) / (4 * thr(N)). Skew modes (--skew, --warc-skew) A/B a straggler
-defence with per-task times from the Spark event log.
+``--queries NAME... [--passes N]`` times the named registered queries the
+same way (min of N cache-cleared passes, default 2). Scaling modes
+(SCALING: --scaling, --scaling-ingest, --crawl-scaling, --office-scaling,
+--warc-scaling, --media-scaling) run one job at N and 4N task slots on the
+same materialized input and report the efficiency thr(4N) / (4 * thr(N)).
+Skew modes (--skew, --warc-skew) A/B a straggler defence with per-task
+times from the Spark event log.
 
-Every mode writes under BENCH/ next to this file, wherever it runs from.
-Environment: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS, SPARK_GRAFT_DRIVER_MEM;
-scaling sizes SPARK_GRAFT_SCALE_DOCS, SPARK_GRAFT_SCALE_PDFS,
-SPARK_GRAFT_SCALE_PDF_REPEAT, SPARK_GRAFT_SCALE_ROUNDS and
-SPARK_GRAFT_MEDIA_SCALE.
+Every mode runs on ``perfbench.host.build_session`` and writes under BENCH/
+next to this file, wherever it runs from. Environment: SPARK_GRAFT_SF_DIR,
+SPARK_GRAFT_CPUS; scaling sizes SPARK_GRAFT_SCALE_DOCS,
+SPARK_GRAFT_SCALE_PDFS, SPARK_GRAFT_SCALE_PDF_REPEAT,
+SPARK_GRAFT_SCALE_ROUNDS and SPARK_GRAFT_MEDIA_SCALE.
 """
 
 from __future__ import annotations
@@ -32,8 +36,10 @@ from typing import Callable, NamedTuple
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from perfbench import host, trace  # noqa: E402
+
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", host.nproc()))
 
 # headline query subset: one per operator family, weighted toward the ones
 # with real shuffles/joins.
@@ -67,6 +73,8 @@ N_PDFS_BY_SF = {"sf0.001": 500, "sf0.01": 2000, "sf0.1": 10000}
 HTML_EVERY = 3  # every 3rd crawl document is an HTML page, the rest PDFs
 DOCS_PER_ARCHIVE = 64
 TREE_ROOT = "/tmp"  # generated input trees, reused across runs
+# session scratch (temp files, spark.local.dir, event logs), outside the repo
+WORK = os.path.join(TREE_ROOT, "spark_graft_bench")
 
 
 def _repo() -> str:
@@ -294,34 +302,13 @@ INGESTS = {
 # ---------------------------------------------------------------------------
 # sessions
 # ---------------------------------------------------------------------------
-def make_session(cores: int, event_log: bool = False):
-    """The local[cores] session every bench mode runs on. ``event_log``
-    writes a single-file uncompressed event log to a fresh temp dir
-    (``spark.eventLog.dir``), the only form _max_task_per_window can
-    parse on Spark 4."""
-    import tempfile
-
-    from pyspark.sql import SparkSession
-
-    builder = (
-        SparkSession.builder.master(f"local[{cores}]")
-        .appName(f"bench-{cores}")
-        .config("spark.sql.shuffle.partitions", str(cores))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # ~1k-row Arrow batches pipeline the JVM and Python phases within a
-        # task (a single 10k batch serializes them back-to-back)
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "1000")
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "32g"))
-    )
-    if event_log:
-        builder = (builder.config("spark.eventLog.enabled", "true")
-                   .config("spark.eventLog.dir", tempfile.mkdtemp(prefix="skewlog_"))
-                   .config("spark.eventLog.compress", "false")
-                   .config("spark.eventLog.rolling.enabled", "false"))
-    return builder.getOrCreate()
+def _session(event_log_dir: str | None = None):
+    """The local[CPUS] session every bench mode runs on."""
+    spark = host.build_session(_repo(), WORK, cores=CPUS, event_log_dir=event_log_dir)
+    # ~1k-row Arrow batches pipeline the JVM and Python phases within a
+    # task (a single 10k batch serializes them back-to-back)
+    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "1000")
+    return spark
 
 
 def _force(df) -> None:
@@ -339,7 +326,7 @@ def main() -> None:
     sf = _sf_name()
     n_docs = N_DOCS_BY_SF.get(sf, 1000)
     n_pdfs = N_PDFS_BY_SF.get(sf, 2000)
-    spark = make_session(CPUS)
+    spark = _session()
     qspecs = all_queries()
 
     # JVM/JIT + python-worker warmup (untimed): representative queries and
@@ -357,17 +344,11 @@ def main() -> None:
     for name, ing in INGESTS.items():
         files = ing.scan(spark, ing.tree(n_pdfs, 1))
         jobs[f"{name}_ingest"] = lambda ing=ing, files=files: ing.parse(files)
-    samples: dict[str, list[float]] = {name: [] for name in jobs}
+    samples, sample = _sampler(spark, jobs)
     # extraction runs mid-suite: this VM's noise comes in multi-minute
     # windows, so its samples are spread across the run
     order = [name for name in jobs if name != "extract_pipeline"]
     order.insert(len(HEADLINE) // 2, "extract_pipeline")
-
-    def sample(name: str) -> None:
-        spark.catalog.clearCache()  # every sample measures the full cold plan
-        t0 = time.time()
-        _force(jobs[name]())
-        samples[name].append(round(time.time() - t0, 3))
 
     # min of two passes; the second is UNCONDITIONAL below 10 minutes (a
     # conditional one let a noisy window through both passes). Then any
@@ -408,6 +389,7 @@ def main() -> None:
         "extract_docs": n_docs,
         "query_suite_sec": round(sum(v for k, v in timings.items() if k != "extract_pipeline"), 3),
         "cpus": CPUS,
+        "host": host.host_facts(_repo()),
         "lsh_bucket_stats": bucket_stats,
     }
     for name, ing in INGESTS.items():
@@ -434,6 +416,48 @@ def main() -> None:
     _update_best_records(best, timings)
     print(json.dumps(out))
     _append_trend_table(sf, timings, prev, docs_per_sec, bucket_stats)
+
+
+def _sampler(spark, jobs: dict[str, Callable]):
+    """(samples, sample): ``sample(name)`` forces ``jobs[name]()`` and
+    appends its wall seconds to ``samples[name]``."""
+    samples: dict[str, list[float]] = {name: [] for name in jobs}
+
+    def sample(name: str) -> None:
+        spark.catalog.clearCache()  # every sample measures the full cold plan
+        t0 = time.time()
+        _force(jobs[name]())
+        samples[name].append(round(time.time() - t0, 3))
+
+    return samples, sample
+
+
+def query_passes(argv: list[str]) -> None:
+    """``--queries NAME... [--passes N]``: min of N cache-cleared samples of
+    each named registered query, run back to back."""
+    import argparse
+
+    from pdf_extractor_scripts_spark.plans.registry import all_specs
+
+    p = argparse.ArgumentParser(prog="bench.py --queries")
+    p.add_argument("--queries", nargs="+", required=True, metavar="NAME")
+    p.add_argument("--passes", type=int, default=2)
+    args = p.parse_args(argv)
+    names = args.queries
+    specs = all_specs()
+    spark = _session()
+    _force(specs[names[0]].spark(spark, SF_DIR))  # JVM/JIT + python-worker warmup
+    samples, sample = _sampler(
+        spark, {name: (lambda name=name: specs[name].spark(spark, SF_DIR))
+                for name in names})
+    for name in names:
+        for _ in range(args.passes):
+            sample(name)
+    spark.stop()
+    print(json.dumps({"sf": _sf_name(), "cpus": CPUS,
+                      "host": host.host_facts(_repo()),
+                      "queries": {name: min(s) for name, s in samples.items()},
+                      "samples": samples}))
 
 
 def _bucket_stats(spark) -> dict:
@@ -845,7 +869,7 @@ def scaling(flag: str) -> None:
     levels = sorted({n for p in pairs for n in p})
     specs = make_specs()
 
-    spark = make_session(CPUS)
+    spark = _session()
     runs = []
     for spec in specs:
         inp, count, fields = spec.build(spark)
@@ -882,7 +906,8 @@ def scaling(flag: str) -> None:
         ]
     out = {"metric": metric, "value": blocks[0]["pairs"][0]["efficiency"],
            "unit": "efficiency", **blocks[0],
-           **{spec.name: block for spec, block in zip(specs[1:], blocks[1:])}}
+           **{spec.name: block for spec, block in zip(specs[1:], blocks[1:])},
+           "host": host.host_facts(_repo())}
     print(json.dumps(out))
     with open(_bench_path(f"{stem}_scaling.json"), "w") as f:
         json.dump(out, f, indent=1)
@@ -896,64 +921,51 @@ def scaling(flag: str) -> None:
 SKEW_LIGHT, SKEW_HEAVY, SKEW_REPEAT, SKEW_ROUNDS = 8000, 16, 250, 2
 WARC_SKEW_LIGHT, WARC_SKEW_MONSTER, WARC_SKEW_REPEAT = 1200, 1200, 18
 WARC_SKEW_TARGET, WARC_SKEW_MEMBERS = 4 << 20, 75
+MAX_TASK_NOTE = "max_task_sec: the slowest task's Executor Run Time"
 
 
-def _max_task_per_window(log_dir: str, app_id: str,
-                         windows: dict) -> dict[str, list[float]]:
-    """Parse the completed event log: max REAL task duration
-    (SparkListenerTaskEnd Launch/Finish) per timed (t0ms, t1ms, _)
-    window, keyed like ``windows``."""
-    import glob
-
-    log_path = max(
-        (q for q in glob.glob(os.path.join(log_dir, "**", "*"), recursive=True)
-         if os.path.isfile(q) and app_id in os.path.basename(q)
-         and "appstatus" not in os.path.basename(q)),
-        key=os.path.getsize)
-    tasks = []  # (launch ms, duration s)
-    with open(log_path) as f:
-        for line in f:
-            if "SparkListenerTaskEnd" not in line:
-                continue
-            try:
-                ti = json.loads(line)["Task Info"]
-                tasks.append((ti["Launch Time"],
-                              (ti["Finish Time"] - ti["Launch Time"]) / 1000.0))
-            except (ValueError, KeyError, TypeError):
-                continue
-    return {key: [max([d for lt, d in tasks if w0 <= lt <= w1] or [0.0])
-                  for w0, w1, _ in spans]
-            for key, spans in windows.items()}
+def _skew_stats(tracer, jobs: dict, stages: dict) -> dict:
+    """Per variant (a span name; the first run's order): the min over its
+    rounds of the span's wall and of its slowest task's Executor Run Time,
+    over the stages of the span's jobs in a ``trace.read_event_log`` read.
+    Ratios put the first variant over the second."""
+    att = trace.Attribution(tracer, jobs, stages)
+    walls: dict[str, list[float]] = {}
+    tasks: dict[str, list[float]] = {}
+    for s in tracer.spans:
+        ms = [t for st in att.stages_where(spans={s["id"]}) for t in st["task_ms"]]
+        walls.setdefault(s["name"], []).append(s["end"] - s["start"])
+        tasks.setdefault(s["name"], []).append(max(ms, default=0) / 1000.0)
+    wall = {k: round(min(v), 3) for k, v in walls.items()}
+    mtask = {k: round(min(v), 3) for k, v in tasks.items()}
+    a, b = wall
+    return {"wall_sec": wall, "max_task_sec": mtask,
+            "max_task_ratio": round(mtask[a] / max(mtask[b], 1e-9), 2),
+            "wall_ratio": round(wall[a] / max(wall[b], 1e-9), 2)}
 
 
 def _skew_ab(spark, stem: str, title: str, variants: dict,
              fields: dict, note: str = "") -> None:
     """Interleaved A/B over ``variants`` (key -> (BASELINE.md label, thunk
-    building the untimed plan to force)). Per variant it keeps the min
-    wall over SKEW_ROUNDS and the min over rounds of the slowest task in
-    its timed window, read from the event log after the session stops;
-    ratios put the first variant over the second. Prints the JSON line,
-    writes BENCH/<stem>.json and appends the BASELINE.md rows."""
-    app_id = spark.sparkContext.applicationId
+    building the untimed plan to force)), each forced inside a benchmark
+    span named by its key, SKEW_ROUNDS times. The session's event log is
+    read after it stops (``_skew_stats``). Prints the JSON line, writes
+    BENCH/<stem>.json and appends the BASELINE.md rows."""
     log_dir = spark.conf.get("spark.eventLog.dir")
-    windows: dict[str, list[tuple[float, float, float]]] = {k: [] for k in variants}
+    tracer = trace.Tracer(True, stem)
+    tracer.bind(spark)
     for _ in range(SKEW_ROUNDS):
         for key, (_, plan) in variants.items():
             df = plan()
-            t0 = time.time()
-            _force(df)
-            t1 = time.time()
-            windows[key].append((t0 * 1000, t1 * 1000, t1 - t0))
+            with tracer.span(key, "bench"):
+                _force(df)
     spark.stop()
 
-    max_task = _max_task_per_window(log_dir, app_id, windows)
-    wall = {k: round(min(w[2] for w in v), 3) for k, v in windows.items()}
-    mtask = {k: round(min(v), 3) for k, v in max_task.items()}
+    stats = _skew_stats(tracer, *trace.read_event_log(log_dir))
+    wall, mtask = stats["wall_sec"], stats["max_task_sec"]
     a, b = variants
-    out = {**fields, "wall_sec": wall, "max_task_sec": mtask,
-           "max_task_ratio": round(mtask[a] / max(mtask[b], 1e-9), 2),
-           "wall_ratio": round(wall[a] / max(wall[b], 1e-9), 2),
-           "rounds": SKEW_ROUNDS, "cpus": CPUS}
+    out = {**fields, **stats, "rounds": SKEW_ROUNDS, "cpus": CPUS,
+           "host": host.host_facts(_repo())}
     print(json.dumps(out))
     with open(_bench_path(f"{stem}.json"), "w") as f:
         json.dump(out, f, indent=1)
@@ -964,6 +976,16 @@ def _skew_ab(spark, stem: str, title: str, variants: dict,
             f.write(f"| {label} | {wall[key]} | {mtask[key]} |\n")
         f.write(f"\nmax-task ratio ({a}/{b}) = {out['max_task_ratio']}, "
                 f"wall ratio = {out['wall_ratio']}{note}\n")
+
+
+def _skew_log_dir(stem: str) -> str:
+    """A fresh event-log directory for one skew run (the last run's log
+    stays for inspection until the next)."""
+    import shutil
+
+    log_dir = os.path.join(WORK, f"eventlog_{stem}")
+    shutil.rmtree(log_dir, ignore_errors=True)
+    return log_dir
 
 
 def _monster_corpus(spark, n_light: int, n_heavy: int, repeat: int):
@@ -1007,7 +1029,7 @@ def skew() -> None:
     )
     from pdf_extractor_scripts_spark.plans.pipeline import run_pipeline
 
-    spark = make_session(CPUS, event_log=True)
+    spark = _session(_skew_log_dir("skew_salt"))
     docs, monster_spans = _monster_corpus(spark, SKEW_LIGHT, SKEW_HEAVY, SKEW_REPEAT)
     auto = bool(should_salt(docs))
     weights = {"nosalt": _partition_weight_stats(docs),
@@ -1020,7 +1042,8 @@ def skew() -> None:
         f"x{SKEW_REPEAT}, co-located",
         {"nosalt": ("salt=False", lambda: run_pipeline(docs, salt=False)),
          "salt": ("salt=True", lambda: run_pipeline(docs, salt=True))},
-        {"metric": "monster-doc skew: salted vs unsalted extraction",
+        {"metric": "monster-doc skew: salted vs unsalted extraction "
+                   f"({MAX_TASK_NOTE})",
          "corpus": {"light": SKEW_LIGHT, "heavy": SKEW_HEAVY,
                     "spans_per_monster": monster_spans, "repeat": SKEW_REPEAT},
          "should_salt_auto": auto, "partition_weights": weights},
@@ -1069,7 +1092,7 @@ def skew_warc() -> None:
     )
 
     root = _skewed_warc_set(WARC_SKEW_LIGHT, WARC_SKEW_MONSTER, WARC_SKEW_REPEAT)
-    spark = make_session(CPUS, event_log=True)
+    spark = _session(_skew_log_dir("warc_skew"))
 
     def parsed(split: bool):
         docs = (read_warc_docs_split(spark, root, target_bytes=WARC_SKEW_TARGET,
@@ -1096,7 +1119,8 @@ def skew_warc() -> None:
         f"{monster_chunks} monster chunks",
         {"whole": ("whole-archive", lambda: parsed(False)),
          "split": ("CDX-split", lambda: parsed(True))},
-        {"metric": "monster-archive skew: whole-archive vs CDX-split ingest",
+        {"metric": "monster-archive skew: whole-archive vs CDX-split ingest "
+                   f"({MAX_TASK_NOTE})",
          "corpus": {"light_docs": WARC_SKEW_LIGHT,
                     "monster_docs": WARC_SKEW_MONSTER,
                     "pages_repeat": WARC_SKEW_REPEAT,
@@ -1108,6 +1132,7 @@ def skew_warc() -> None:
 
 if __name__ == "__main__":
     modes = {"--skew": skew, "--warc-skew": skew_warc,
+             "--queries": lambda: query_passes(sys.argv[1:]),
              **{flag: (lambda flag=flag: scaling(flag)) for flag in SCALING}}
     flags = [a for a in sys.argv[1:] if a in modes]
     (modes[flags[0]] if flags else main)()

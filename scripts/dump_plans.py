@@ -1,5 +1,7 @@
 #!/usr/bin/env python
-"""Dump .explain("formatted") for a set of queries into plans/r07/<q>_<tag>.txt.
+"""Dump .explain("formatted") for a set of queries (default: bench.py's
+HEADLINE) into plans/r07/<q>_<tag>.txt, on the bench session at
+$SPARK_GRAFT_SF_DIR.
 
 Usage: python scripts/dump_plans.py before|after [query ...]
 """
@@ -10,50 +12,16 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "8"))
-
-DEFAULT = [
-    "dedup_minhash_lsh",
-    "dedup_ngram_jaccard",
-    "dedup_simhash",
-    "dedup_embedding_cosine",
-    "text_profile",
-    "p6_text_quality",
-    "p3_decision_combine",
-    "ann_bruteforce_topk",
-    "ann_lsh_topk",
-    "q5_region_volume",
-    "j6_order_line_grouping",
-    "q1_pricing_summary",
-    "q3_shipping_priority",
-    "j4_asof_attribution",
-    "t3_topk_orders",
-    "l4_spacing_reconstruct",
-    "l8_page_concat",
-    "f14_totals_roundtrip",
-    "stream_hourly_window",
-]
-
 
 def main() -> None:
-    tag = sys.argv[1]
-    names = sys.argv[2:] or DEFAULT
-    from pyspark.sql import SparkSession
-
-    spark = (
-        SparkSession.builder.master(f"local[{CPUS}]")
-        .appName(f"plans-{tag}")
-        .config("spark.sql.shuffle.partitions", str(CPUS))
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", "8g")
-        .getOrCreate()
-    )
+    from bench import HEADLINE, SF_DIR, _repo, _session
     from pdf_extractor_scripts_spark.plans.registry import all_specs
 
+    tag = sys.argv[1]
+    names = sys.argv[2:] or HEADLINE
+    spark = _session()
     specs = all_specs()
-    out_dir = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", "r07")
+    out_dir = os.path.join(_repo(), "plans", "r07")
     os.makedirs(out_dir, exist_ok=True)
     for name in names:
         df = specs[name].spark(spark, SF_DIR)

@@ -17,15 +17,11 @@ def plan(df, mode="formatted"):
 
 
 def main():
-    from pyspark.sql import SparkSession
+    from bench import WORK, _repo
+    from perfbench import host
 
-    spark = (
-        SparkSession.builder.master("local[4]")
-        .config("spark.sql.shuffle.partitions", "4")
-        .config("spark.sql.adaptive.enabled", "false")  # show static plans
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
+    spark = host.build_session(_repo(), WORK, cores=4)
+    spark.conf.set("spark.sql.adaptive.enabled", "false")  # show static plans
     from pdf_extractor_scripts_spark.fixtures import corpus_df
     from pdf_extractor_scripts_spark.plans.pipeline import run_pipeline
     from pdf_extractor_scripts_spark.plans.registry import all_queries

@@ -13,6 +13,8 @@ texts repeat verbatim across copies, so the dedup family sees REAL
 rows (LSH bucket occupancy x10, star-guard exercise, 10-node components).
 
 Writes BENCH/soak_sf1.json and appends a summary to BENCH/BASELINE.md.
+``peak_rss_mb`` is perfbench's peak: the summed RSS of the session's JVM and
+its descendants (the Python workers), sampled every second over the suite.
 Run with the box otherwise idle (see memory: noisy-neighbor windows).
 """
 
@@ -20,7 +22,6 @@ from __future__ import annotations
 
 import json
 import os
-import subprocess
 import sys
 import time
 
@@ -71,44 +72,28 @@ def build_data() -> None:
         f.write("ok")
 
 
-def _jvm_peak_rss_kb() -> int:
-    """VmHWM of the Spark driver JVM (child java process), in kB."""
-    try:
-        pids = subprocess.run(
-            ["pgrep", "-f", "org.apache.spark.deploy.SparkSubmit"],
-            capture_output=True, text=True,
-        ).stdout.split()
-        peak = 0
-        for pid in pids:
-            with open(f"/proc/{pid}/status") as f:
-                for line in f:
-                    if line.startswith("VmHWM"):
-                        peak = max(peak, int(line.split()[1]))
-        return peak
-    except Exception:
-        return 0
-
-
 def main() -> None:
     build_data()
-    from bench import CPUS, _force, make_session
+    from bench import CPUS, _bench_path, _force, _repo, _session
     from pdf_extractor_scripts_spark.plans.registry import all_queries
+    from perfbench import host
 
-    spark = make_session(CPUS)
+    spark = _session()
     qspecs = all_queries()
     timings: dict[str, float] = {}
     errors: dict[str, str] = {}
     t_all = time.time()
-    for name in sorted(qspecs):
-        t0 = time.time()
-        try:
-            _force(qspecs[name].spark(spark, DST))
-            timings[name] = round(time.time() - t0, 2)
-        except Exception as e:  # record, keep soaking
-            errors[name] = str(e)[:300]
-        print(f"  {name}: {timings.get(name, 'ERR')}", file=sys.stderr)
+    with host.RssSampler(host.jvm_pid()) as rss:
+        for name in sorted(qspecs):
+            t0 = time.time()
+            try:
+                _force(qspecs[name].spark(spark, DST))
+                timings[name] = round(time.time() - t0, 2)
+            except Exception as e:  # record, keep soaking
+                errors[name] = str(e)[:300]
+            print(f"  {name}: {timings.get(name, 'ERR')}", file=sys.stderr)
+        peak_rss_mb = round(rss.peak_mb())
     wall = round(time.time() - t_all, 1)
-    jvm_hwm_mb = _jvm_peak_rss_kb() // 1024
     spark.stop()
 
     import resource
@@ -119,23 +104,22 @@ def main() -> None:
         "queries_run": len(timings),
         "errors": errors,
         "total_wall_sec": wall,
-        "jvm_peak_rss_mb": jvm_hwm_mb,
+        "peak_rss_mb": peak_rss_mb,
         "python_peak_rss_mb": resource.getrusage(resource.RUSAGE_SELF).ru_maxrss // 1024,
         "cpus": CPUS,
+        "host": host.host_facts(_repo()),
         "slowest": dict(sorted(timings.items(), key=lambda kv: -kv[1])[:10]),
         "queries": timings,
     }
     print(json.dumps(out))
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    os.makedirs(os.path.join(root, "BENCH"), exist_ok=True)
-    with open(os.path.join(root, "BENCH", "soak_sf1.json"), "w") as f:
+    with open(_bench_path("soak_sf1.json"), "w") as f:
         json.dump(out, f, indent=1, sort_keys=True)
-    with open(os.path.join(root, "BENCH", "BASELINE.md"), "a") as f:
+    with open(_bench_path("BASELINE.md"), "a") as f:
         f.write(
             f"\n## sf1.0 soak ({len(timings)}/{len(qspecs)} gated queries, "
             f"10x facts with 10-member duplicate clusters)\n\n"
-            f"Total wall {wall}s on {CPUS} slots; JVM peak RSS "
-            f"{jvm_hwm_mb} MB; errors: {errors or 'none'}; slowest: "
+            f"Total wall {wall}s on {CPUS} slots; peak RSS (JVM + Python "
+            f"workers) {peak_rss_mb} MB; errors: {errors or 'none'}; slowest: "
             f"{out['slowest']}\n"
         )
 

@@ -291,6 +291,59 @@ def test_bench_scaling_pairs_fit_the_host():
     assert bench.scaling_pairs(4) == [(1, 4)]
 
 
+def test_bench_cpus_default_to_this_hosts_cores(monkeypatch):
+    """Without SPARK_GRAFT_CPUS the bench runs, picks its scaling pairs and
+    keys its records on this host's core count, never on a fixed one."""
+    import importlib
+
+    import bench
+    from perfbench import host
+
+    monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+    try:
+        assert importlib.reload(bench).CPUS == host.nproc()
+    finally:
+        monkeypatch.undo()
+        importlib.reload(bench)
+
+
+def test_bench_skew_stats_read_the_spans_jobs_from_the_event_log():
+    """The skew A/B reduction: per variant, the min over rounds of the span
+    wall and of the slowest task (Executor Run Time) among the stages of
+    the span's jobs; a job outside every span counts for none."""
+    import bench
+    from perfbench.trace import Tracer
+
+    tracer = Tracer(True, "skew")
+    for sid, (name, start, end) in enumerate(
+            [("nosalt", 0.0, 9.0), ("salt", 10.0, 14.0),
+             ("nosalt", 20.0, 27.5), ("salt", 30.0, 35.0)], 1):
+        tracer.spans.append({"id": sid, "name": name, "layer": "bench",
+                             "kind": "bench", "parent": None, "run_id": "skew",
+                             "start": start, "end": end})
+    task_ms = {  # job → (span, task run times of its two stages)
+        1: (1, [100, 6000], [50]), 2: (2, [1500, 1400], [1600]),
+        3: (3, [200, 200], [5000]), 4: (4, [1800], [700, 300]),
+        5: (None, [60000], [1]),  # outside every span: ignored
+    }
+    jobs, stages = {}, {}
+    for j, (span, *per_stage) in task_ms.items():
+        jid = (0, j)
+        jobs[jid] = {"start": 0.0, "end": 1.0, "span": span, "callsite": None,
+                     "stages": []}
+        for k, ms in enumerate(per_stage):
+            sid = (0, 10 * j + k)
+            jobs[jid]["stages"].append(sid)
+            stages[sid] = {"job": jid, "task_ms": ms}
+
+    assert bench._skew_stats(tracer, jobs, stages) == {
+        "wall_sec": {"nosalt": 7.5, "salt": 4.0},
+        "max_task_sec": {"nosalt": 5.0, "salt": 1.6},
+        "max_task_ratio": 3.12,
+        "wall_ratio": 1.88,
+    }
+
+
 def test_bench_ingest_table_reads_every_tree(spark, tmp_path, monkeypatch):
     """Every INGESTS entry's scan + parse over its own generated tree
     yields one parsed document per generated one: a wrong glob or

@@ -1,10 +1,12 @@
 """Import resolution for the code no test runs end to end: the scripts, the
-bench drivers, the driver entry and the benchmark harness. Each file is
-parsed with ``ast`` (nothing in it runs) and every engine name it imports
-must exist: ``from pdf_extractor_scripts_spark.x import name`` and the
-``alias.<name>`` uses of an imported engine module (``P.run_pipeline``).
-An engine refactor that removes or renames a name these files use then
-fails here instead of at the next manual run."""
+bench driver, the driver entry and the benchmark harness. Each file is
+parsed with ``ast`` (nothing in it runs) and every name it imports from the
+engine, from ``bench`` or from ``perfbench`` must exist:
+``from pdf_extractor_scripts_spark.x import name``, ``from bench import
+name``, ``from perfbench[.x] import name`` and the ``alias.<name>`` uses of
+an imported module (``P.run_pipeline``, ``host.build_session``). A
+refactor that removes or renames a name these files use then fails here
+instead of at the next manual run."""
 
 from __future__ import annotations
 
@@ -16,9 +18,10 @@ from pathlib import Path
 
 ROOT = Path(__file__).resolve().parents[1]
 PKG = "pdf_extractor_scripts_spark"
+CHECKED = {PKG, "bench", "perfbench"}  # top-level modules whose names resolve
 FILES = sorted(
     [*ROOT.glob("scripts/*.py"), *ROOT.glob("perfbench/*.py"),
-     ROOT / "bench.py", ROOT / "bench_extra.py", ROOT / "__spark_entry__.py"]
+     ROOT / "bench.py", ROOT / "__spark_entry__.py"]
 )
 
 
@@ -32,13 +35,13 @@ def _member(mod: types.ModuleType, name: str):
 
 
 def _check(path: Path) -> tuple[int, list[str]]:
-    """(engine names checked, the ones that do not resolve) for one file."""
+    """(names checked, the ones that do not resolve) for one file."""
     tree = ast.parse(path.read_text(), filename=str(path))
-    modules: dict[str, list[types.ModuleType]] = {}  # local name → engine modules
+    modules: dict[str, list[types.ModuleType]] = {}  # local name → checked modules
     checked, bad = 0, []
     for node in ast.walk(tree):
         if isinstance(node, ast.ImportFrom) and node.level == 0 and (
-            (node.module or "").split(".")[0] == PKG
+            (node.module or "").split(".")[0] in CHECKED
         ):
             mod = importlib.import_module(node.module)
             for a in node.names:
@@ -50,12 +53,12 @@ def _check(path: Path) -> tuple[int, list[str]]:
                     modules.setdefault(a.asname or a.name, []).append(obj)
         elif isinstance(node, ast.Import):
             for a in node.names:
-                if a.name.split(".")[0] == PKG:
+                top = a.name.split(".")[0]
+                if top in CHECKED:
                     checked += 1
                     mod = importlib.import_module(a.name)
-                    local = a.asname or PKG
-                    modules.setdefault(local, []).append(
-                        mod if a.asname else importlib.import_module(PKG)
+                    modules.setdefault(a.asname or top, []).append(
+                        mod if a.asname else importlib.import_module(top)
                     )
     for node in ast.walk(tree):
         if (
@@ -79,6 +82,28 @@ def test_every_engine_name_the_scripts_import_resolves():
         bad += b
     assert not bad, bad
     assert total > 100, total  # the walk really saw the imports
+
+
+def test_a_stale_bench_or_perfbench_name_is_reported(tmp_path):
+    script = tmp_path / "stale.py"
+    script.write_text(
+        "from bench import CPUS, make_session\n"
+        "from perfbench import host\n"
+        "from perfbench.trace import Tracer, _max_task_per_window\n"
+        "import bench as B\n"
+        "host.build_session(None, None)\n"
+        "host.jvm_peak_rss_kb()\n"
+        "B._skew_stats\n"
+        "B.make_session\n"
+    )
+    checked, bad = _check(script)
+    assert checked == 10, checked
+    assert sorted(bad) == [
+        "stale.py:1 bench.make_session",
+        "stale.py:3 perfbench.trace._max_task_per_window",
+        "stale.py:6 host.jvm_peak_rss_kb",
+        "stale.py:8 B.make_session",
+    ]
 
 
 def test_queries_doc_is_what_its_script_renders():
