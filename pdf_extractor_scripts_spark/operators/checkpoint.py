@@ -19,17 +19,19 @@ the committed plan does not read the checkpoint table it appends to.
 
 Output commit protocol (manifest pattern — what Iceberg snapshot commits give
 you natively in production): every out_spans row carries an ``attempt_id``;
-the checkpoint row recording that attempt is written LAST and is the commit
-point. It is the only bookkeeping record: it carries the bucket's extraction
-metrics, and committed_metrics() is its long form. A crash between the data
-write and the checkpoint write leaves orphan rows whose attempt_id no
-checkpoint mentions — invisible to readers, because
+the commit row recording that (run_id, partition_key, attempt_id) is written
+LAST and is the commit point. It records only that the attempt is done: the
+extraction runs once, inside the out_spans write, and committed_metrics()
+counts a bucket's docs/pages/ocr/validation numbers from its committed rows
+when someone reads them, so metrics cannot disagree with the data. A crash
+between the data write and the commit write leaves orphan rows whose
+attempt_id no commit row mentions — invisible to readers, because
 committed_outputs()/quality_report() semi-join outputs against committed
 (run_id, partition_key, attempt_id) keys. Physical writes are therefore
 at-least-once, but the VISIBLE table is exactly-once, and resume can safely
-re-process any bucket whose commit row is missing. A ``metrics/`` table
-beside the checkpoint rows comes from an older layout; it repeats their
-numbers and no reader opens it.
+re-process any bucket whose commit row is missing. Commit rows of older
+layouts carry metric columns and may sit beside a ``metrics/`` table; readers
+apply ``CHECKPOINT_SCHEMA``, so both are ignored.
 """
 
 from __future__ import annotations
@@ -97,10 +99,17 @@ def restore_backup(spark: SparkSession, backup_path: str) -> DataFrame:
 def committed_metrics(spark: SparkSession, ckpt_dir: str) -> DataFrame:
     """Per-bucket extraction metrics of committed attempts
     (``METRICS_SCHEMA``): one (metric, value) row per counter of each
-    checkpoint row — the long form of the manifest, so an uncommitted
-    attempt cannot double-count."""
+    committed (run_id, attempt_id, partition_key), counted from the
+    committed out_spans rows, so an uncommitted attempt cannot double-count."""
+    counts = committed_outputs(spark, ckpt_dir).groupBy(
+        "run_id", "attempt_id", "partition_key").agg(
+        F.count(F.lit(1)).alias("docs"),
+        F.sum("n_pages").cast("long").alias("pages"),
+        F.sum("ocr_used").cast("long").alias("ocr_fallbacks"),
+        F.sum("validation_failed").cast("long").alias("validation_failures"),
+    )
     pairs = ", ".join(f"'{m}', {m}" for m in _METRICS)
-    return _committed(spark, ckpt_dir).selectExpr(
+    return counts.selectExpr(
         "run_id", "attempt_id", "'extract' AS stage", "partition_key",
         f"stack({len(_METRICS)}, {pairs}) AS (metric, value)",
     )
@@ -211,49 +220,51 @@ def resume_filter(df: DataFrame, spark: SparkSession, ckpt_dir: str, run_id: str
     return df.filter(~F.col("partition_key").isin(keys))
 
 
-def write_outputs(result: DataFrame, spark: SparkSession, ckpt_dir: str, run_id: str) -> int:
-    """Write extracted spans, one file per write task, then the checkpoint
-    rows with their per-bucket metrics under ``commits/run_id=<run_id>/`` —
-    the checkpoint write is the COMMIT (see module docstring). Returns the
-    number of documents committed; an empty ``result`` writes nothing."""
+def commit(spark: SparkSession, extracted: DataFrame, ckpt_dir: str, run_id: str) -> int:
+    """Commit extracted rows (``with_partition_key(run_pipeline(...))``) under
+    ``run_id`` in one pass: skip the buckets its own commit rows mark done,
+    write the rest to out_spans (one file per write task) while observing
+    the doc count and the set of buckets written, then write one commit row
+    per observed bucket under ``commits/run_id=<run_id>/`` — the commit
+    point (see module docstring). Returns the number of documents committed.
+
+    Resume is a literal predicate on ``partition_key``, so over a plan that
+    still holds the extraction Catalyst pushes it below the UDF: committed
+    buckets are never extracted again. A ``foreachBatch`` micro-batch
+    arrives as an already-planned RDD, so there it filters extracted rows.
+    An attempt with no rows (a rerun whose buckets are all done) still runs
+    the write, which leaves one empty part file in out_spans and no commit
+    row, so no reader sees it. The observed metrics come from the write's
+    result stage, where Spark applies each partition's update once."""
     import datetime
     import uuid
 
-    # Materialize the per-bucket stats on the driver (one tiny row per
-    # bucket) and write the checkpoint rows from a FRESH DataFrame. Writing
-    # them lazily would re-evaluate ``result``'s lineage, which may read the
-    # checkpoint table this very call appends to — a self-referential plan
-    # that silently yields zero rows on recompute.
-    stat_rows = (
-        result.groupBy("partition_key")
-        .agg(
-            F.count(F.lit(1)).alias("docs"),
-            F.sum("n_pages").cast("long").alias("pages"),
-            F.sum("ocr_used").cast("long").alias("ocr_fallbacks"),
-            F.sum("validation_failed").cast("long").alias("validation_failures"),
-        )
-        .collect()
-    )
-    if not stat_rows:
-        return 0
+    from pyspark.sql import Observation
+
+    todo = resume_filter(extracted, spark, ckpt_dir, run_id)
     attempt_id = uuid.uuid4().hex
-    result.select(
+    seen = Observation()
+    todo.select(
         "partition_key", "doc_id", "vendor", "route", "out_spans",
         "validation_failed", "ocr_used", "n_pages", "extraction_confidence",
     ).withColumn("run_id", F.lit(run_id)).withColumn(
         "attempt_id", F.lit(attempt_id)
+    ).observe(
+        seen, F.count(F.lit(1)).alias("docs"),
+        F.collect_set("partition_key").alias("buckets"),
     ).write.mode("append").parquet(os.path.join(ckpt_dir, "out_spans"))
+    written = seen.get
+    if not written["docs"]:
+        return 0
 
     # aware UTC: Arrow would read a naive datetime in the session time zone
     now = datetime.datetime.now(datetime.timezone.utc)
-    ck_rows = [
-        {**r.asDict(), "run_id": run_id, "attempt_id": attempt_id,
-         "status": "done", "updated_at": now}
-        for r in stat_rows
-    ]
-    _local_rows(spark, ck_rows, CHECKPOINT_SCHEMA).write.mode("append").partitionBy(
+    rows = [{"run_id": run_id, "partition_key": b, "attempt_id": attempt_id,
+             "status": "done", "updated_at": now}
+            for b in sorted(written["buckets"])]
+    _local_rows(spark, rows, CHECKPOINT_SCHEMA).write.mode("append").partitionBy(
         "run_id").parquet(os.path.join(ckpt_dir, "commits"))
-    return sum(r["docs"] for r in stat_rows)
+    return written["docs"]
 
 
 def _local_rows(spark: SparkSession, rows: list[dict], schema: StructType) -> DataFrame:

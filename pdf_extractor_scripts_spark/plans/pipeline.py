@@ -8,7 +8,7 @@ reference's batch runner (SURVEY.md §3.1).
       → one Arrow extraction UDF (both route assemblies in; one result
         per doc out — the kernel resolves each route to one extraction)
       → deterministic span emission from that result (native HOFs)
-      → [optional] checkpoint/lineage/metrics writes + idempotent resume
+      → [optional] one-pass commit (out_spans + commit rows) + idempotent resume
 
 Stage boundaries (shuffles) occur ONLY at the salted repartition and any
 downstream groupBy a caller adds — everything else is a single mapper chain
@@ -25,7 +25,7 @@ from ..operators.detect import with_assembled_text, with_vendor, with_route
 from ..operators.extract import with_extraction
 from ..operators.merge import with_emission
 from ..operators.skew import with_weight, salted_repartition
-from ..operators.checkpoint import with_partition_key, resume_filter, write_outputs
+from ..operators.checkpoint import commit, with_partition_key
 
 RESULT_COLS = [
     "doc_id", "vendor", "route", "out_spans",
@@ -58,27 +58,10 @@ def run_pipeline(
     return df.select(*RESULT_COLS)
 
 
-def commit(spark: SparkSession, extracted: DataFrame, ckpt_dir: str, run_id: str) -> int:
-    """Commit extracted rows (``with_partition_key(run_pipeline(...))``) under
-    ``run_id``: skip buckets its own checkpoint rows mark done, write spans
-    (a file per task) + checkpoint rows for the rest. Returns docs committed.
-
-    Resume is a literal predicate on ``partition_key``, so over a plan that
-    still holds the extraction Catalyst pushes it below the UDF: committed
-    buckets are never extracted again. A ``foreachBatch`` micro-batch
-    arrives as an already-planned RDD, so there it filters extracted rows."""
-    todo = resume_filter(extracted, spark, ckpt_dir, run_id)
-    # localCheckpoint materializes the extraction once: the stats collect and
-    # the out_spans write below then read it instead of each re-running the UDF.
-    todo = todo.localCheckpoint(eager=True)
-    return write_outputs(todo, spark, ckpt_dir, run_id)
-
-
 def run_with_checkpoint(spark: SparkSession, docs: DataFrame, ckpt_dir: str, run_id: str) -> int:
     """Idempotent checkpointed run: skips completed buckets, writes spans +
     checkpoint rows for the rest. Returns number of docs processed."""
-    extracted = with_partition_key(run_pipeline(docs))
-    return commit(spark, extracted, ckpt_dir, run_id)
+    return commit(spark, with_partition_key(run_pipeline(docs)), ckpt_dir, run_id)
 
 
 def flagship(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -56,23 +56,20 @@ RESULT_SCHEMA = StructType(
 
 # checkpoint table (FIXTURES.md §4): stable hash-bucket partition ids so
 # N- and 4N-executor runs share checkpoints (SURVEY.md §7.3(4)). One row per
-# committed bucket, carrying that bucket's extraction metrics.
+# committed (run_id, bucket, attempt): the commit record, nothing more.
 CHECKPOINT_SCHEMA = StructType(
     [
         StructField("run_id", StringType(), False),
         StructField("partition_key", IntegerType(), False),
         StructField("attempt_id", StringType(), False),
         StructField("status", StringType(), False),
-        StructField("docs", LongType(), False),
-        StructField("pages", LongType(), False),
-        StructField("ocr_fallbacks", LongType(), False),
-        StructField("validation_failures", LongType(), False),
         StructField("updated_at", TimestampType(), False),
     ]
 )
 
-# operators.checkpoint.committed_metrics: the checkpoint rows' metrics in
-# long form, one (metric, value) row per counter
+# operators.checkpoint.committed_metrics: per committed bucket attempt, its
+# committed out_spans rows counted in long form, one (metric, value) row per
+# counter
 METRICS_SCHEMA = StructType(
     [
         StructField("run_id", StringType(), False),

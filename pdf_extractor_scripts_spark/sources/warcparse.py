@@ -45,28 +45,35 @@ _GZIP_MAGIC = b"\x1f\x8b"
 # record-level parsing
 
 
-def _iter_gunzip_members(data: bytes):
-    """Yield the decompressed bytes of each gzip member (the
+_FEED = 64 << 10  # compressed bytes handed to zlib per decompress call
+
+
+def _gzip_members(data: bytes):
+    """Yield (offset, length, decompressed bytes) of each gzip member (the
     record-at-time compression the WARC spec recommends) WITHOUT
     concatenating the whole archive into one buffer — a 1-GB Common
     Crawl segment decompresses to several GB, and the framing loop only
     ever needs one member (customarily one record) at a time. Record
     boundaries survive because WARC framing is length-delimited
-    (Content-Length), not member-delimited."""
+    (Content-Length), not member-delimited. Each member is fed in
+    ``_FEED``-byte views until it ends, so walking an archive copies no
+    remainder of it: the walk is linear in the archive size."""
+    view = memoryview(data)
     pos = 0
     while pos < len(data):
         d = zlib.decompressobj(wbits=31)
+        out, feed = [], pos
         try:
-            chunk = d.decompress(data[pos:])
+            while not d.eof and feed < len(data):
+                out.append(d.decompress(view[feed:feed + _FEED]))
+                feed += _FEED
         except zlib.error as e:
             raise ValueError(f"corrupt gzip member in WARC archive: {e}")
         if not d.eof:
             raise ValueError("truncated gzip member in WARC archive")
-        consumed = len(data) - pos - len(d.unused_data)
-        if consumed <= 0:  # defensive: zero-progress guard
-            raise ValueError("gzip member made no progress")
-        pos += consumed
-        yield chunk
+        end = min(feed, len(data)) - len(d.unused_data)
+        yield pos, end - pos, b"".join(out)
+        pos = end
 
 
 def _parse_headers(block: bytes) -> dict[str, str]:
@@ -143,7 +150,7 @@ def iter_warc_records(data: bytes):
     whole decompressed archive). Raises ValueError at the first
     malformed record; records already yielded are the salvageable
     prefix (callers decide the policy — see warc_documents)."""
-    members = (_iter_gunzip_members(data) if data[:2] == _GZIP_MAGIC
+    members = ((m for _, _, m in _gzip_members(data)) if data[:2] == _GZIP_MAGIC
                else iter((data,)))
     buf = b""
     pos = 0
@@ -561,22 +568,7 @@ def warc_member_index(data: bytes) -> list[tuple[int, int]]:
     length-delimited, so splitting it needs the full parse anyway."""
     if data[:2] != _GZIP_MAGIC:
         raise ValueError("member index requires record-at-time gzip")
-    index: list[tuple[int, int]] = []
-    pos = 0
-    while pos < len(data):
-        d = zlib.decompressobj(wbits=31)
-        try:
-            d.decompress(data[pos:])
-        except zlib.error as e:
-            raise ValueError(f"corrupt gzip member in WARC archive: {e}")
-        if not d.eof:
-            raise ValueError("truncated gzip member in WARC archive")
-        consumed = len(data) - pos - len(d.unused_data)
-        if consumed <= 0:
-            raise ValueError("gzip member made no progress")
-        index.append((pos, consumed))
-        pos += consumed
-    return index
+    return [(off, length) for off, length, _ in _gzip_members(data)]
 
 
 def _range_schema():

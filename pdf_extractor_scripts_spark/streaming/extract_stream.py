@@ -4,12 +4,13 @@ A production corpus is not static — new documents land continuously. The
 streaming query carries the SAME ``run_pipeline`` (identical semantics,
 identical span-equality contract): it is applied to the streaming DataFrame
 once, when the query starts, so each micro-batch arrives in ``foreachBatch``
-already extracted and is only committed there (``plans.pipeline.commit``):
+already extracted and is only committed there (``operators.checkpoint.commit``:
+one out_spans write, then one commit row per bucket it wrote):
 
 * Structured Streaming's source checkpoint gives exactly-once batch
   delivery (each input file processed once);
 * within a micro-batch the engine's own bucket checkpoint (operators/
-  checkpoint.py) records lineage + metrics, so a crashed micro-batch
+  checkpoint.py) records which buckets are done, so a crashed micro-batch
   resumes idempotently at bucket granularity when the stream restarts.
   ``foreachBatch`` hands the commit the micro-batch as an already-planned
   RDD, so on a replayed micro-batch the resume predicate filters the
@@ -26,8 +27,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from ..schemas import DOC_SCHEMA
-from ..operators.checkpoint import with_partition_key
-from ..plans.pipeline import commit, run_pipeline
+from ..operators.checkpoint import commit, with_partition_key
+from ..plans.pipeline import run_pipeline
 
 
 def _start(spark: SparkSession, stream: DataFrame, out_dir: str, run_id: str,

@@ -91,8 +91,7 @@ def test_resume_predicate_is_pushed_below_the_extraction_udf(spark, tmp_path):
     done = keys[: len(keys) // 2]
     now = datetime.datetime.now(datetime.timezone.utc)
     rows = [{"run_id": run_id, "partition_key": b, "attempt_id": attempt,
-             "status": "done", "docs": 1, "pages": 1, "ocr_fallbacks": 0,
-             "validation_failures": 0, "updated_at": now}
+             "status": "done", "updated_at": now}
             for run_id, attempt, buckets in (("r", "a1", done), ("r", "a2", done[:2]),
                                              ("other", "a3", keys))
             for b in buckets]
@@ -121,7 +120,6 @@ def test_commit_rows_are_a_one_partition_local_relation(spark):
 
     now = datetime.datetime.now(datetime.timezone.utc)
     rows = [{"run_id": "r", "partition_key": b, "attempt_id": "a", "status": "done",
-             "docs": 1, "pages": 2, "ocr_fallbacks": 0, "validation_failures": 0,
              "updated_at": now} for b in range(16)]
     key = "spark.sql.execution.arrow.pyspark.enabled"
     old = spark.conf.get(key)

@@ -166,10 +166,19 @@ def test_backup_sink_snapshots_committed_outputs(spark, ckpt_dir):
 _METRICS = ("docs", "pages", "ocr_fallbacks", "validation_failures")
 
 
-def _long_form(ck_rows) -> list:
-    """The checkpoint rows' metrics as sorted ``METRICS_SCHEMA`` tuples."""
-    return sorted((r["run_id"], r["attempt_id"], "extract", r["partition_key"], m, r[m])
-                  for r in ck_rows for m in _METRICS)
+def _recount(spark, ckpt_dir) -> list:
+    """committed_outputs counted per (run_id, attempt_id, partition_key) on
+    the driver, as sorted ``METRICS_SCHEMA`` tuples."""
+    counts: dict = {}
+    for r in committed_outputs(spark, ckpt_dir).select(
+            "run_id", "attempt_id", "partition_key", "n_pages", "ocr_used",
+            "validation_failed").collect():
+        c = counts.setdefault(tuple(r[:3]), [0, 0, 0, 0])
+        for i, v in enumerate((1, *r[3:])):
+            c[i] += v
+    return sorted((run_id, attempt, "extract", b, m, v)
+                  for (run_id, attempt, b), c in counts.items()
+                  for m, v in zip(_METRICS, c))
 
 
 def _assert_metrics_schema(df):
@@ -182,8 +191,8 @@ def _assert_metrics_schema(df):
 def test_commit_appends_one_file_per_bookkeeping_table(spark, ckpt_dir):
     """One commit appends exactly one parquet file to ``commits/``, in its
     run's directory, however many task slots the session has, and writes no
-    ``metrics/`` table: the checkpoint rows are exactly the commit's, and
-    committed_metrics is their long form."""
+    ``metrics/`` table: the commit rows are exactly the commit's buckets,
+    and committed_metrics is a recount of the committed rows."""
     import glob
     import os
     from collections import Counter
@@ -208,13 +217,48 @@ def test_commit_appends_one_file_per_bookkeeping_table(spark, ckpt_dir):
                      with_partition_key(docs).select("partition_key").distinct().collect())
     ck_rows = ck.collect()
     assert sorted(r["partition_key"] for r in ck_rows) == buckets
-    assert sum(r["docs"] for r in ck_rows) == n
     assert {(r["run_id"], r["status"]) for r in ck_rows} == {("r1", "done")}
     assert len({r["attempt_id"] for r in ck_rows}) == 1
 
-    mx_rows = mx.collect()
-    assert Counter(r["partition_key"] for r in mx_rows) == {b: 4 for b in buckets}
-    assert sorted(tuple(r) for r in mx_rows) == _long_form(ck_rows)
+    mx_rows = sorted(tuple(r) for r in mx.collect())
+    assert Counter(r[3] for r in mx_rows) == {b: 4 for b in buckets}
+    assert mx_rows == _recount(spark, ckpt_dir)
+    assert sum(r[5] for r in mx_rows if r[4] == "docs") == n
+
+
+def test_a_fresh_commit_is_one_pass(spark, ckpt_dir):
+    """A fresh run's commit runs the extraction once, inside the out_spans
+    write that also observes its doc count and buckets: two jobs (that write
+    and the commit-row write), and no stage materializes the extraction
+    with localCheckpoint."""
+    import time
+
+    docs = corpus_df(spark, n_docs=N_DOCS, seed=42)
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+
+    def in_group(group: str, fn):
+        sc.setJobGroup(group, group)
+        try:
+            return fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+
+    assert in_group("one-pass", lambda: run_with_checkpoint(
+        spark, docs, ckpt_dir, run_id="r1")) == N_DOCS
+    # listener events arrive in order: once a later job is seen, every job
+    # of the commit has been seen too
+    in_group("one-pass-after", lambda: sc.parallelize([1]).count())
+    deadline = time.time() + 30
+    while not tracker.getJobIdsForGroup("one-pass-after") and time.time() < deadline:
+        time.sleep(0.1)
+    assert tracker.getJobIdsForGroup("one-pass-after")
+    jobs = list(tracker.getJobIdsForGroup("one-pass"))
+    assert len(jobs) == 2, jobs
+    stages = [tracker.getStageInfo(s) for j in jobs for s in tracker.getJobInfo(j).stageIds]
+    names = [st.name for st in stages if st is not None]
+    assert names and not [n for n in names if n.startswith("localCheckpoint")], names
 
 
 def _ck_rows(run_buckets) -> list:
@@ -223,7 +267,6 @@ def _ck_rows(run_buckets) -> list:
 
     now = datetime.datetime.now(datetime.timezone.utc)
     return [{"run_id": run_id, "partition_key": b, "attempt_id": "a", "status": "done",
-             "docs": 1, "pages": 1, "ocr_fallbacks": 0, "validation_failures": 0,
              "updated_at": now}
             for run_id, buckets in run_buckets for b in buckets]
 
@@ -343,31 +386,38 @@ def test_commit_refuses_a_directory_of_the_older_flat_layout(spark, ckpt_dir):
 
 
 def test_committed_metrics_reads_the_checkpoint_rows_of_an_old_layout(spark, ckpt_dir):
-    """A directory from when metrics also had a ``metrics/`` table of their
-    own: that table (a committed attempt's rows plus an orphan attempt's) is
-    ignored, and committed_metrics is the long form of the checkpoint rows."""
-    import datetime
+    """A directory from when commit rows carried their bucket's metrics, and
+    metrics also had a ``metrics/`` table of their own: both are ignored,
+    and committed_metrics is still the recount of the committed rows."""
+    import shutil as _shutil
+
+    from pyspark.sql.types import LongType, StructField, StructType
 
     from pdf_extractor_scripts_spark.operators.checkpoint import _local_rows
     from pdf_extractor_scripts_spark.schemas import CHECKPOINT_SCHEMA, METRICS_SCHEMA
 
-    now = datetime.datetime.now(datetime.timezone.utc)
-    committed = {3: (5, 9, 1, 0), 11: (2, 2, 0, 1)}
-    orphan = {3: (5, 8, 2, 0), 20: (1, 1, 1, 1)}
-    ck_rows = [{"run_id": "r1", "partition_key": b, "attempt_id": "a1", "status": "done",
-                **dict(zip(_METRICS, vals)), "updated_at": now}
-               for b, vals in committed.items()]
-    mx_rows = [{"run_id": "r1", "attempt_id": a, "stage": "extract", "partition_key": b,
-                "metric": m, "value": v}
-               for a, stats in (("a1", committed), ("dead", orphan))
-               for b, vals in stats.items() for m, v in zip(_METRICS, vals)]
-    _local_rows(spark, ck_rows, CHECKPOINT_SCHEMA).write.partitionBy("run_id").parquet(
+    docs = corpus_df(spark, n_docs=16, seed=42)
+    assert run_with_checkpoint(spark, docs, ckpt_dir, run_id="r1") == 16
+    # rewrite the commit rows in the older layout, with metric columns that
+    # disagree with the data, and add an older metrics/ table
+    old_schema = StructType(CHECKPOINT_SCHEMA.fields[:4] + [
+        StructField(m, LongType(), False) for m in _METRICS] + CHECKPOINT_SCHEMA.fields[4:])
+    ck_rows = [{**r.asDict(), **{m: 999 for m in _METRICS}}
+               for r in spark.read.parquet(f"{ckpt_dir}/commits").collect()]
+    _shutil.rmtree(f"{ckpt_dir}/commits")
+    _local_rows(spark, ck_rows, old_schema).write.partitionBy("run_id").parquet(
         f"{ckpt_dir}/commits")
+    mx_rows = [{"run_id": "r1", "attempt_id": a, "stage": "extract", "partition_key": b,
+                "metric": m, "value": 999}
+               for a in (ck_rows[0]["attempt_id"], "dead")
+               for b in (3, 11) for m in _METRICS]
     _local_rows(spark, mx_rows, METRICS_SCHEMA).write.parquet(f"{ckpt_dir}/metrics")
 
     mx = committed_metrics(spark, ckpt_dir)
     _assert_metrics_schema(mx)
-    assert sorted(tuple(r) for r in mx.collect()) == _long_form(ck_rows)
+    got = sorted(tuple(r) for r in mx.collect())
+    assert got == _recount(spark, ckpt_dir)
+    assert sum(r[5] for r in got if r[4] == "docs") == 16
 
 
 def test_checkpoint_updated_at_is_the_commit_instant_in_any_session_zone(spark, ckpt_dir):

@@ -271,6 +271,46 @@ def test_member_cap_splits_hypercompressible_archives(spark, tmp_path):
     assert index_warc_archives(archives, max_members=8).count() == 4
 
 
+def test_gzip_member_walk_feeds_zlib_bounded_slices(monkeypatch):
+    """Walking a many-member archive hands zlib at most 64 KB per call —
+    never the archive's remainder — in both the record iterator and the
+    member index, so the walk is linear in the archive size."""
+    import hashlib
+
+    from pdf_extractor_scripts_spark.sources.warcparse import (
+        warc_member_index,
+    )
+
+    # incompressible payloads: ~1.6 MB of gzip over 401 members
+    docs = [{"url": f"https://x.test/{i}", "content_type": "text/plain",
+             "payload": b"".join(hashlib.sha256(b"%d-%d" % (i, j)).digest()
+                                 for j in range(256))} for i in range(200)]
+    data = build_warc(docs)
+    assert len(data) > 16 * (64 << 10)
+
+    fed = []
+    real = zlib.decompressobj
+
+    class Probe:
+        def __init__(self, *args, **kwargs):
+            self._d = real(*args, **kwargs)
+
+        def decompress(self, buf, *args):
+            fed.append(len(buf))
+            return self._d.decompress(buf, *args)
+
+        def __getattr__(self, name):
+            return getattr(self._d, name)
+
+    monkeypatch.setattr(zlib, "decompressobj", Probe)
+    index = warc_member_index(data)
+    assert len(index) == 401 and sum(n for _, n in index) == len(data)
+    bodies = [parse_http_response(b)[2] for h, b in iter_warc_records(data)
+              if h.get("warc-type") == "response"]
+    assert bodies == [d["payload"] for d in docs]
+    assert fed and max(fed) <= 64 << 10
+
+
 def test_member_index_rejects_plain_warc():
     from pdf_extractor_scripts_spark.sources.warcparse import (
         warc_member_index,
