@@ -56,9 +56,14 @@ def _committed(spark: SparkSession, ckpt_dir: str, run_id: str | None = None) ->
     path = os.path.join(ckpt_dir, "commits")
     reader = spark.read.schema(CHECKPOINT_SCHEMA).option("basePath", path)
     if run_id is not None:
-        utils = spark._jvm.org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-        path = os.path.join(path, utils.getPartitionPathString("run_id", run_id))
+        path = _run_dir(spark, ckpt_dir, run_id)
     return reader.parquet(path).filter(F.col("status") == "done").select(*CHECKPOINT_SCHEMA.names)
+
+
+def _run_dir(spark: SparkSession, ckpt_dir: str, run_id: str) -> str:
+    """``commits/run_id=<run_id>``, the value escaped as Spark writes it."""
+    utils = spark._jvm.org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+    return os.path.join(ckpt_dir, "commits", utils.getPartitionPathString("run_id", run_id))
 
 
 def committed_outputs(spark: SparkSession, ckpt_dir: str) -> DataFrame:
@@ -198,22 +203,23 @@ def resume_filter(df: DataFrame, spark: SparkSession, ckpt_dir: str, run_id: str
     """Drop rows in buckets already completed for ``run_id``. No run
     directory yet is a fresh run (no Spark job); an unreadable one raises, as
     do an old flat ``checkpoints/`` table, whose commits resume cannot see,
-    and an empty run_id, which Spark writes as a null partition value."""
-    from pyspark.errors import AnalysisException
+    and an empty run_id, which Spark writes as a null partition value.
 
+    A fresh run is found with ``exists``, not by a read that fails: once a
+    session has run an ``observe``, Spark's observation listener logs an
+    ERROR stack trace for every failed read."""
     if not run_id:
         raise ValueError("run_id must be a non-empty string")
-    old = spark._jvm.org.apache.hadoop.fs.Path(os.path.join(ckpt_dir, "checkpoints"))
-    if old.getFileSystem(spark._jsc.hadoopConfiguration()).exists(old):
+    Path = spark._jvm.org.apache.hadoop.fs.Path
+    old = Path(os.path.join(ckpt_dir, "checkpoints"))
+    fs = old.getFileSystem(spark._jsc.hadoopConfiguration())
+    if fs.exists(old):
         raise FileExistsError(
             f"{ckpt_dir} holds a checkpoints/ table of the older flat layout; "
             "resuming it would commit every bucket again: use a new directory")
-    try:
-        done = _committed(spark, ckpt_dir, run_id)
-    except AnalysisException as e:
-        if e.getCondition() == "PATH_NOT_FOUND":
-            return df
-        raise
+    if not fs.exists(Path(_run_dir(spark, ckpt_dir, run_id))):
+        return df
+    done = _committed(spark, ckpt_dir, run_id)
     keys = sorted(r[0] for r in done.select("partition_key").distinct().collect())
     if not keys:
         return df

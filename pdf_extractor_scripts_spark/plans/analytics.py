@@ -20,7 +20,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
-from .registry import register, load_table, _utc
+from .registry import register, register_sql, load_table, _utc
 
 
 # --------------------------------------------------------------------------
@@ -520,19 +520,14 @@ def _funnel_sql(dialect: str) -> str:
     """
 
 
-@register(
-    "funnel_conversion",
-    oracle=_funnel_sql("duckdb"),
+register_sql(
+    "funnel_conversion", _funnel_sql, ["events"],
     doc="Ordered funnel (signup → first view after → first purchase after): "
         "one groupBy(user) with conditional-min stage times, then ordering "
         "predicates — no self-joins, one shuffle.",
     gated=False,  # illustrative non-§2 row; vacated its driver slot for
                   # corpus_curation (r5) — still DuckDB-parity-checked locally
 )
-def funnel_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _utc(spark)
-    load_table(spark, sf_dir, "events").createOrReplaceTempView("events")
-    return spark.sql(_funnel_sql("spark"))
 
 
 # --------------------------------------------------------------------------
@@ -553,14 +548,9 @@ def _runtot_sql(dialect: str) -> str:
     """
 
 
-@register(
-    "running_total_per_customer",
-    oracle=_runtot_sql("duckdb"),
+register_sql(
+    "running_total_per_customer", _runtot_sql, ["orders"],
     doc="Cumulative spend per customer (running-sum window with explicit "
         "ROWS frame and orderkey tie-break): one shuffle on the partition "
         "key, then partition-local accumulation.",
 )
-def running_total_per_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _utc(spark)
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("orders")
-    return spark.sql(_runtot_sql("spark"))

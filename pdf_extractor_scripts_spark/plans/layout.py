@@ -18,9 +18,7 @@ runs inside a grouped Arrow UDF to avoid materializing per-character rows.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
-
-from .registry import register, load_table
+from .registry import register_sql
 
 
 def _toks_cte(dialect: str) -> str:
@@ -76,9 +74,8 @@ def _l2_sql(dialect: str) -> str:
     """
 
 
-@register(
-    "l2_reading_order",
-    oracle=_l2_sql("duckdb"),
+register_sql(
+    "l2_reading_order", _l2_sql, ["documents"],
     doc="Reading-order sort: sorted(chars, key=(-y0, x0)) at "
         "text_pdf_processor.py:852 → per-line ordered reassembly. "
         "Partition-local sort after one shuffle on doc_id.",
@@ -86,9 +83,6 @@ def _l2_sql(dialect: str) -> str:
                   # is the spine of gated l3_line_cluster; stays
                   # oracle-checked locally
 )
-def l2_reading_order(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_table(spark, sf_dir, "documents").createOrReplaceTempView("documents")
-    return spark.sql(_l2_sql("spark"))
 
 
 # --------------------------------------------------------------------------
@@ -121,18 +115,14 @@ def _l3_sql(dialect: str) -> str:
     """
 
 
-@register(
-    "l3_line_cluster",
-    oracle=_l3_sql("duckdb"),
+register_sql(
+    "l3_line_cluster", _l3_sql, ["documents"],
     doc="Bounding-box line clustering: new line when |y - current| > "
         "tolerance 2 (text_pdf_processor.py:838-881, duplicated in all "
         "vendor processors). Cumulative new-cluster flag over the reading-"
         "order window — the sessionization idiom; tokens get ±1 y-jitter so "
         "the tolerance logic is actually exercised.",
 )
-def l3_line_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_table(spark, sf_dir, "documents").createOrReplaceTempView("documents")
-    return spark.sql(_l3_sql("spark"))
 
 
 # --------------------------------------------------------------------------
@@ -165,17 +155,13 @@ def _l4_sql(dialect: str) -> str:
     """
 
 
-@register(
-    "l4_spacing_reconstruct",
-    oracle=_l4_sql("duckdb"),
+register_sql(
+    "l4_spacing_reconstruct", _l4_sql, ["documents"],
     doc="Spacing reconstruction: insert max(1, (Δx / char_width=6pt) - 1)-ish "
         "spaces between runs (text_pdf_processor.py:883-916). The exact "
         "space count feeds the span-equality contract, so the arithmetic is "
         "identical integer floor math on both engines.",
 )
-def l4_spacing_reconstruct(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_table(spark, sf_dir, "documents").createOrReplaceTempView("documents")
-    return spark.sql(_l4_sql("spark"))
 
 
 # --------------------------------------------------------------------------
@@ -207,16 +193,12 @@ def _l8_sql(dialect: str) -> str:
     """
 
 
-@register(
-    "l8_page_concat",
-    oracle=_l8_sql("duckdb"),
+register_sql(
+    "l8_page_concat", _l8_sql, ["documents"],
     doc="Page concatenation with '=== PAGE n ===' markers "
         "(text_pdf_processor.py:662-670, ceco_processor.py:223-233): two "
         "nested ordered string aggregations (tokens→pages→document).",
 )
-def l8_page_concat(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_table(spark, sf_dir, "documents").createOrReplaceTempView("documents")
-    return spark.sql(_l8_sql("spark"))
 
 
 # --------------------------------------------------------------------------
@@ -247,14 +229,10 @@ def _l6_sql(dialect: str) -> str:
     """
 
 
-@register(
-    "l6_table_extract",
-    oracle=_l6_sql("duckdb"),
+register_sql(
+    "l6_table_extract", _l6_sql, ["lineitem"],
     doc="Table extraction: first row = headers, remaining rows become "
         "header-keyed dicts (text_pdf_processor.py:918-954). Positional "
         "cells → map_from_arrays(headers, cells) → keyed lookup; downstream "
         "consumers explode the row maps.",
 )
-def l6_table_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_table(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem")
-    return spark.sql(_l6_sql("spark"))

@@ -10,13 +10,7 @@ prep.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
-
-from .registry import register, load_table
-
-
-def _doc_view(spark: SparkSession, sf_dir: str) -> None:
-    load_table(spark, sf_dir, "documents").createOrReplaceTempView("documents")
+from .registry import register_sql
 
 
 # --------------------------------------------------------------------------
@@ -46,18 +40,14 @@ def _j1_sql(dialect: str) -> str:
     """
 
 
-@register(
-    "j1_hybrid_merge",
-    oracle=_j1_sql("duckdb"),
+register_sql(
+    "j1_hybrid_merge", _j1_sql, ["documents"],
     doc="Hybrid route merge: full outer self-join on doc_id + per-section "
         "priority coalesce (header from text route, totals from OCR route) — "
         "fallback_processor.py:518-620 as a genuine join. The reference's "
         "only caller is dead code (audit §21), so the engine has no "
         "production merge: the kernel resolves each hybrid to one extraction.",
 )
-def j1_hybrid_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _doc_view(spark, sf_dir)
-    return spark.sql(_j1_sql("spark"))
 
 
 # --------------------------------------------------------------------------
@@ -84,16 +74,12 @@ def _j2_sql(dialect: str) -> str:
     """
 
 
-@register(
-    "j2_fallback_pick",
-    oracle=_j2_sql("duckdb"),
+register_sql(
+    "j2_fallback_pick", _j2_sql, ["documents"],
     doc="Fallback compare-and-pick: run the alternate method, keep whichever "
         "result has higher confidence (primary wins ties) — "
         "fallback_processor.py:342-390 as a left join + max_by cascade.",
 )
-def j2_fallback_pick(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _doc_view(spark, sf_dir)
-    return spark.sql(_j2_sql("spark"))
 
 
 # --------------------------------------------------------------------------
@@ -148,9 +134,8 @@ def _j3_sql(dialect: str) -> str:
     """
 
 
-@register(
-    "j3_consolidation_pick",
-    oracle=_j3_sql("duckdb"),
+register_sql(
+    "j3_consolidation_pick", _j3_sql, ["documents"],
     doc="Consolidation per document, the FULL reference flow (audit §8): "
         "quality = 0.5*accuracy + 0.3*completeness + 0.2*confidence picks "
         "the best candidate (output_consolidator.py:308-341); merging is "
@@ -160,9 +145,6 @@ def _j3_sql(dialect: str) -> str:
         "and lets a strictly LONGER list win (:381-410). merged_len / "
         "merged_field columns value-check both merge rules.",
 )
-def j3_consolidation_pick(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _doc_view(spark, sf_dir)
-    return spark.sql(_j3_sql("spark"))
 
 
 # --------------------------------------------------------------------------
@@ -192,9 +174,8 @@ def _a1_sql(dialect: str) -> str:
     """
 
 
-@register(
-    "a1_weighted_confidence",
-    oracle=_a1_sql("duckdb"),
+register_sql(
+    "a1_weighted_confidence", _a1_sql, ["documents"],
     doc="Overall confidence = weighted mean of ALL SEVEN section "
         "confidences (header/items .3, vendor/customer .15, totals .1, "
         "payment/shipping at the DEFAULT .05) normalized by the total "
@@ -203,9 +184,6 @@ def _a1_sql(dialect: str) -> str:
         "failures 0.0, so the denominator is constant; audit §10). Pure "
         "per-row column arithmetic — no shuffle until the tiny rollup.",
 )
-def a1_weighted_confidence(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _doc_view(spark, sf_dir)
-    return spark.sql(_a1_sql("spark"))
 
 
 # --------------------------------------------------------------------------
@@ -244,17 +222,13 @@ def _a2_sql(dialect: str) -> str:
     """
 
 
-@register(
-    "a2_completeness_score",
-    oracle=_a2_sql("duckdb"),
+register_sql(
+    "a2_completeness_score", _a2_sql, ["documents"],
     doc="Completeness scoring with the reference's exact point structure "
         "(data_validator.py:159-207): header 15+10, vendor 10+5, customer "
         "10+5, line items 20 + 15*complete-ratio (float, unrounded), "
         "totals 10, capped at 100 — bucketed distribution.",
 )
-def a2_completeness_score(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _doc_view(spark, sf_dir)
-    return spark.sql(_a2_sql("spark"))
 
 
 # --------------------------------------------------------------------------
@@ -281,17 +255,13 @@ def _t5_sql(dialect: str) -> str:
     """
 
 
-@register(
-    "t5_order_preserving_dedup",
-    oracle=_t5_sql("duckdb"),
+register_sql(
+    "t5_order_preserving_dedup", _t5_sql, ["documents"],
     doc="Order-preserving dedupe keeping the FIRST occurrence — the "
         "reference's seen-set filter for mark numbers / additional info "
         "(text_pdf_processor.py:3217-3234, schlage_processor.py:2003-2008). "
         "Spark's array_distinct preserves encounter order natively.",
 )
-def t5_order_preserving_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _doc_view(spark, sf_dir)
-    return spark.sql(_t5_sql("spark"))
 
 
 # --------------------------------------------------------------------------
@@ -330,16 +300,12 @@ def _p7_sql(dialect: str) -> str:
     """
 
 
-@register(
-    "p7_page_analysis",
-    oracle=_p7_sql("duckdb"),
+register_sql(
+    "p7_page_analysis", _p7_sql, ["documents"],
     doc="Per-page analysis then per-document rollup (has_text/has_images → "
         "mixed-content detection, pdf_text_detector.py:385-471, 690-722): "
         "explode pages → page-level flags → groupBy(doc).agg.",
 )
-def p7_page_analysis(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _doc_view(spark, sf_dir)
-    return spark.sql(_p7_sql("spark"))
 
 
 # --------------------------------------------------------------------------
@@ -368,16 +334,12 @@ def _p9_sql(dialect: str) -> str:
     """
 
 
-@register(
-    "p9_header_filter",
-    oracle=_p9_sql("duckdb"),
+register_sql(
+    "p9_header_filter", _p9_sql, ["documents"],
     doc="Repetitive page-header filtering: drop the ~35 known noise patterns "
         "before line-item scans (ceco_processor.py:376-426) — a NOT rlike "
         "filter over exploded lines, patterns broadcast as literals.",
 )
-def p9_header_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _doc_view(spark, sf_dir)
-    return spark.sql(_p9_sql("spark"))
 
 
 # --------------------------------------------------------------------------
@@ -406,16 +368,12 @@ def _p10_sql(dialect: str) -> str:
     """
 
 
-@register(
-    "p10_adequacy",
-    oracle=_p10_sql("duckdb"),
+register_sql(
+    "p10_adequacy", _p10_sql, ["documents"],
     doc="Adequacy predicate: result adequate iff validation passes OR "
         "(completeness >= 70% AND <= 1 missing critical field) — "
         "fallback_processor.py:392-422 as a boolean column expression.",
 )
-def p10_adequacy(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _doc_view(spark, sf_dir)
-    return spark.sql(_p10_sql("spark"))
 
 
 # --------------------------------------------------------------------------
@@ -441,18 +399,14 @@ def _o4_sql(dialect: str) -> str:
     """
 
 
-@register(
-    "o4_ocr_variant_select",
-    oracle=_o4_sql("duckdb"),
+register_sql(
+    "o4_ocr_variant_select", _o4_sql, ["documents"],
     doc="OCR preprocessing fan-out + best-variant selection: score each of "
         "the preprocessing variants (40% confidence, 20% length, 40% "
         "content indicators — image_pdf_processor.py:435-599) and keep the "
         "argmax per page. The fan-out is an explode; selection is max_by "
         "(rank window for cross-engine ties).",
 )
-def o4_ocr_variant_select(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _doc_view(spark, sf_dir)
-    return spark.sql(_o4_sql("spark"))
 
 
 # --------------------------------------------------------------------------
@@ -508,15 +462,11 @@ def _f8_sql(dialect: str) -> str:
     """
 
 
-@register(
-    "f8_header_mapping",
-    oracle=_f8_sql("duckdb"),
+register_sql(
+    "f8_header_mapping", _f8_sql, ["documents"],
     doc="Table-driven line-item extraction: score header↔field-name mapping "
         "by containment length-ratio; is_line_item_table iff >= 2 required "
         "fields map with score > 0.3 (text_pdf_processor.py:1351-1489). "
         "Headers derived from each doc's leading tokens; the mapping itself "
         "is the operator under test.",
 )
-def f8_header_mapping(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _doc_view(spark, sf_dir)
-    return spark.sql(_f8_sql("spark"))

@@ -6,6 +6,10 @@ SQL-checkable gets one named entry with
   (views pre-registered by the driver), or ``None`` for ops whose semantics
   are not SQL-expressible (driver then records a weaker rows-only check).
 
+A query that is one SQL statement in both dialects registers through
+``register_sql`` with its builder and the tables it reads; ``bind`` is the
+one place tables become temp views. DataFrame-API queries use ``@register``.
+
 Column names are aliased identically on both sides (the driver's comparator
 sorts columns by name and hash-compares values). Float outputs are rounded on
 both sides so parallel-summation order cannot flip the hash.
@@ -18,6 +22,7 @@ from dataclasses import dataclass
 from typing import Callable, Optional
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 
 @dataclass(frozen=True)
@@ -57,14 +62,46 @@ def register(name: str, oracle: Optional[str], doc: str = "", gated: bool = True
     return wrap
 
 
+def register_sql(name: str, sql: Callable[[str], str], tables: list[str],
+                 doc: str = "", gated: bool = True, spread: bool = False) -> None:
+    """Register a query that is one SQL statement in both dialects.
+
+    ``sql(dialect)`` builds the statement for ``"spark"`` or ``"duckdb"``;
+    the oracle is ``sql("duckdb")``. The Spark side binds ``tables`` (see
+    ``bind``) and runs ``sql("spark")``. The SQL reads nothing but the
+    tables named here."""
+
+    def run(spark: SparkSession, sf_dir: str) -> DataFrame:
+        bind(spark, sf_dir, tables, spread=spread)
+        return spark.sql(sql("spark"))
+
+    register(name, oracle=sql("duckdb"), doc=doc, gated=gated)(run)
+
+
+_schemas: dict[tuple[str, int], StructType] = {}
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one of the driver-generated parquet tables.
 
     At cluster scale these reads become Iceberg table scans; parquet here
     keeps the same pushdown/pruning behavior (Catalyst emits PushedFilters
     and ReadSchema against the parquet source).
-    """
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+
+    Inferring a parquet schema reads the footer in a one-task Spark job, so
+    each table's schema is remembered for the process, keyed by path and
+    modification time (a rewritten table is inferred again), and every
+    later read passes it."""
+    path = f"{sf_dir}/{name}.parquet"
+    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
+    key = (path, fs.getFileStatus(jpath).getModificationTime())
+    schema = _schemas.get(key)
+    if schema is None:
+        df = spark.read.parquet(path)
+        _schemas[key] = df.schema
+        return df
+    return spark.read.schema(schema).parquet(path)
 
 
 def spread(df: DataFrame) -> DataFrame:
@@ -79,11 +116,26 @@ def spread(df: DataFrame) -> DataFrame:
     at 100 TB this is a no-op, while the pathological single-file input
     pays one tiny shuffle (the table is by definition < one split) to light
     up the whole executor. Round-robin repartition is retry-deterministic
-    (sortBeforeRepartition stays on)."""
+    (sortBeforeRepartition stays on). SQL-form queries whose per-document
+    regex/HOF projection dominates take it through ``bind(spread=True)``."""
     target = df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() < target:
         return df.repartition(target)
     return df
+
+
+def bind(spark: SparkSession, sf_dir: str, tables: list[str], spread: bool = False) -> None:
+    """Bind each of ``tables`` as a temp view of the same name, widened by
+    ``spread()`` when ``spread=True``. Sets the session time zone to UTC
+    first: every registry query is defined against DuckDB's naive-UTC
+    epoch."""
+    _utc(spark)
+    for name in tables:
+        df = load_table(spark, sf_dir, name)
+        (_spread(df) if spread else df).createOrReplaceTempView(name)
+
+
+_spread = spread  # bind's ``spread`` flag shadows the function
 
 
 def _utc(spark: SparkSession) -> None:

@@ -7,7 +7,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from .registry import register, load_table, _utc
+from .registry import register, register_sql, load_table
 from .dedup import _emb_cte, _dot
 
 
@@ -48,9 +48,8 @@ def _ivf_sql(dialect: str) -> str:
     """
 
 
-@register(
-    "ann_ivf_topk",
-    oracle=_ivf_sql("duckdb"),
+register_sql(
+    "ann_ivf_topk", _ivf_sql, ["embeddings"],
     doc="IVF approximate nearest-neighbor: assign every vector to its "
         "nearest coarse centroid (the inverted file), probe only the "
         "query's cell. The cell id is the shuffle/cluster key — at scale "
@@ -61,9 +60,6 @@ def _ivf_sql(dialect: str) -> str:
                   # machinery, trained centroids); stays oracle-checked in
                   # the local suite but yields its driver row to it
 )
-def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_table(spark, sf_dir, "embeddings").createOrReplaceTempView("embeddings")
-    return spark.sql(_ivf_sql("spark"))
 
 
 # --------------------------------------------------------------------------
@@ -92,18 +88,13 @@ def _sess_sql(dialect: str) -> str:
     """
 
 
-@register(
-    "sessionize_events",
-    oracle=_sess_sql("duckdb"),
+register_sql(
+    "sessionize_events", _sess_sql, ["events"],
     doc="Gap-based sessionization (30-min inactivity): lag + cumulative "
         "new-session flag per user — the same sessionization idiom as the "
         "L3 line clustering, over event time. One shuffle on user_id; in "
         "streaming form this is applyInPandasWithState/session windows.",
 )
-def sessionize_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _utc(spark)
-    load_table(spark, sf_dir, "events").createOrReplaceTempView("events")
-    return spark.sql(_sess_sql("spark"))
 
 
 # --------------------------------------------------------------------------
@@ -124,9 +115,8 @@ def _quant_sql(dialect: str) -> str:
     """
 
 
-@register(
-    "a11_value_quantiles",
-    oracle=_quant_sql("duckdb"),
+register_sql(
+    "a11_value_quantiles", _quant_sql, ["events"],
     doc="Exact interpolated percentiles per group (p50/p90/p99) — the "
         "distribution rollup for quality-score monitoring. At 100 TB this "
         "becomes approx_percentile with a bounded error budget; exact here "
@@ -135,9 +125,6 @@ def _quant_sql(dialect: str) -> str:
                   # in test_scale_knobs.py uses it — driver row ceded to
                   # make room in the 50-row gate window
 )
-def a11_value_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_table(spark, sf_dir, "events").createOrReplaceTempView("events")
-    return spark.sql(_quant_sql("spark"))
 
 
 # --------------------------------------------------------------------------
@@ -302,9 +289,8 @@ def _hll_sql(dialect: str) -> str:
     """
 
 
-@register(
-    "sketch_portable_hll",
-    oracle=_hll_sql("duckdb"),
+register_sql(
+    "sketch_portable_hll", _hll_sql, ["events"],
     doc="From-scratch portable HyperLogLog (m=256 registers) per event_type "
         "— the custom mergeable sketch the built-ins can't oracle-check: "
         "Lehmer-hash each user_id (pure int arithmetic), bucket on the low "
@@ -317,9 +303,6 @@ def _hll_sql(dialect: str) -> str:
         "row counts; accuracy vs the exact count is bounded in "
         "test_scale_knobs.py.",
 )
-def sketch_portable_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_table(spark, sf_dir, "events").createOrReplaceTempView("events")
-    return spark.sql(_hll_sql("spark"))
 
 
 # --------------------------------------------------------------------------
@@ -421,9 +404,8 @@ def _ivf_kmeans_sql(dialect: str) -> str:
     """
 
 
-@register(
-    "ann_ivf_kmeans_topk",
-    oracle=_ivf_kmeans_sql("duckdb"),
+register_sql(
+    "ann_ivf_kmeans_topk", _ivf_kmeans_sql, ["embeddings"],
     doc="IVF with a TRAINED coarse quantizer: Lloyd's k-means (k=8, 2 "
         "iterations, deterministic first-k init; per-dimension means "
         "rounded to 6dp so both engines replay the exact trajectory), then "
@@ -434,6 +416,3 @@ def _ivf_kmeans_sql(dialect: str) -> str:
         "MapReduce form. Closes the round-1 'a trained k-means slots in' "
         "caveat with the actual trainer.",
 )
-def ann_ivf_kmeans_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_table(spark, sf_dir, "embeddings").createOrReplaceTempView("embeddings")
-    return spark.sql(_ivf_kmeans_sql("spark"))

@@ -16,7 +16,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
-from .registry import register, load_table, spread
+from .registry import bind, load_table, register, register_sql, spread
 from ..functions.portable import char_ratio, fingerprint_sql
 
 # ---------------------------------------------------------------------------
@@ -111,9 +111,8 @@ def _p2_select(dialect: str) -> str:
     """
 
 
-@register(
-    "p2_content_score",
-    oracle=_p2_select("duckdb"),
+register_sql(
+    "p2_content_score", _p2_select, ["documents"],
     doc="Content-based class detection: +0.3 per content-pattern hit, +0.1 "
         "per keyword, capped at 1.0, argmax class with a fixed tie-break "
         "order (vendor_detector.py:108-153). rlike sums + greatest — "
@@ -121,10 +120,6 @@ def _p2_select(dialect: str) -> str:
     gated=False,  # per-doc content_class/content_conf are gated inside
                   # p3_decision_combine's cascade row
 )
-def p2_content_score(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = load_table(spark, sf_dir, "documents")
-    d.createOrReplaceTempView("documents")
-    return spark.sql(_p2_select("spark"))
 
 
 # --------------------------------------------------------------------------
@@ -217,9 +212,7 @@ def _p3_spark_single() -> str:
         "every stage's per-doc columns (subsumes the former p1/p2 gates).",
 )
 def p3_decision_combine(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # r7: spread() widens the single-file scan so the per-doc regex/HOF
-    # projection parallelizes (no-op on already-wide inputs)
-    spread(load_table(spark, sf_dir, "documents")).createOrReplaceTempView("documents")
+    bind(spark, sf_dir, ["documents"], spread=True)
     return spark.sql(_p3_spark_single())
 
 
@@ -241,21 +234,16 @@ def _p4_sql(dialect: str) -> str:
     """
 
 
-@register(
-    "p4_text_density",
-    oracle=_p4_sql("duckdb"),
+register_sql(
+    "p4_text_density", _p4_sql, ["documents"],
     doc="The OCR gate: has_selectable_text iff text volume clears a "
         "per-vendor threshold (pdf_text_detector.py:117-159 with vendor "
         "thresholds 100/75/30/50 at :77-115). Broadcast threshold map → "
         "CASE literal.",
     gated=False,  # the identical n_chars >= per-vendor-threshold gate is
                   # the route split inside gated p8_routing
+    spread=True,
 )
-def p4_text_density(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # r7: spread() widens the single-file scan so the per-doc regex/HOF
-    # projection parallelizes (no-op on already-wide inputs)
-    spread(load_table(spark, sf_dir, "documents")).createOrReplaceTempView("documents")
-    return spark.sql(_p4_sql("spark"))
 
 
 # --------------------------------------------------------------------------
@@ -495,19 +483,14 @@ def _p8_sql(dialect: str) -> str:
     """
 
 
-@register(
-    "p8_routing",
-    oracle=_p8_sql("duckdb"),
+register_sql(
+    "p8_routing", _p8_sql, ["documents"],
     doc="Map (has_text, quality, vendor) → recommended processing route "
         "(pdf_text_detector.py:633-688). The route column is what splits "
         "the corpus into cheap/expensive paths so the OCR UDF only ever "
         "sees route='ocr' rows.",
+    spread=True,
 )
-def p8_routing(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # r7: spread() widens the single-file scan so the per-doc regex/HOF
-    # projection parallelizes (no-op on already-wide inputs)
-    spread(load_table(spark, sf_dir, "documents")).createOrReplaceTempView("documents")
-    return spark.sql(_p8_sql("spark"))
 
 
 # --------------------------------------------------------------------------
@@ -537,20 +520,15 @@ def _f1_sql(dialect: str) -> str:
     """
 
 
-@register(
-    "f1_pattern_extract",
-    oracle=_f1_sql("duckdb"),
+register_sql(
+    "f1_pattern_extract", _f1_sql, ["documents"],
     doc="Pattern-bank field extraction: ordered regex list, first match "
         "wins, confidence = base * (1 - 0.1*pattern_index) "
         "(DynamicPatternExtractor, text_pdf_processor.py:439-537). "
         "regexp_extract + coalesce — the single-field JVM-side form; the "
         "full ~30-field bank runs as one pandas UDF in operators/.",
+    spread=True,
 )
-def f1_pattern_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # r7: spread() widens the single-file scan so the per-doc regex/HOF
-    # projection parallelizes (no-op on already-wide inputs)
-    spread(load_table(spark, sf_dir, "documents")).createOrReplaceTempView("documents")
-    return spark.sql(_f1_sql("spark"))
 
 
 # --------------------------------------------------------------------------
@@ -572,20 +550,16 @@ def _f14_sql(dialect: str) -> str:
     """
 
 
-@register(
-    "f14_totals_roundtrip",
-    oracle=_f14_sql("duckdb"),
+register_sql(
+    "f14_totals_roundtrip", _f14_sql, ["orders"],
+    # spread() A/B-tested here and NOT taken: the codegen'd render+regex is
+    # fast enough that the repartition shuffle costs more than the
+    # parallelism buys at both bench scales.
     doc="Totals extractor: labeled-amount regex + safe float conversion "
         "(comma/$ strip, default 0 — text_pdf_processor.py:2560-2572; "
         "totals regexes ceco_processor.py:602-652). Rendered invoice lines "
         "→ regexp_extract → try_cast → corpus aggregate.",
 )
-def f14_totals_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # spread() A/B-tested here and NOT taken: the codegen'd render+regex is
-    # fast enough that the repartition shuffle costs more than the
-    # parallelism buys at both bench scales.
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("orders")
-    return spark.sql(_f14_sql("spark"))
 
 
 # --------------------------------------------------------------------------
@@ -612,20 +586,15 @@ def _langid_sql(dialect: str) -> str:
     """
 
 
-@register(
-    "text_langid",
-    oracle=_langid_sql("duckdb"),
+register_sql(
+    "text_langid", _langid_sql, ["documents"],
     doc="Language-ID heuristic by stopword-frequency thresholds + confusion "
         "matrix vs the labeled lang column. regexp_count keeps it "
         "JVM-side; at 100 TB this is a scan-only pass (no shuffle before "
         "the tiny confusion-matrix agg).",
     gated=False,  # per-doc pred_lang is gated inside text_profile
+    spread=True,
 )
-def text_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # r7: spread() widens the single-file scan so the per-doc regex/HOF
-    # projection parallelizes (no-op on already-wide inputs)
-    spread(load_table(spark, sf_dir, "documents")).createOrReplaceTempView("documents")
-    return spark.sql(_langid_sql("spark"))
 
 
 # --------------------------------------------------------------------------
@@ -650,19 +619,14 @@ def _tokcnt_sql(dialect: str) -> str:
     """
 
 
-@register(
-    "text_token_count",
-    oracle=_tokcnt_sql("duckdb"),
+register_sql(
+    "text_token_count", _tokcnt_sql, ["documents"],
     doc="Token counting two ways: whitespace split and a BPE-ish regex "
         "(letter-runs | digit-runs | single symbols). Core training-data "
         "pipeline metric; scan + map-side agg only.",
     gated=False,  # per-doc ws/bpe token counts are gated inside text_profile
+    spread=True,
 )
-def text_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # r7: spread() widens the single-file scan so the per-doc regex/HOF
-    # projection parallelizes (no-op on already-wide inputs)
-    spread(load_table(spark, sf_dir, "documents")).createOrReplaceTempView("documents")
-    return spark.sql(_tokcnt_sql("spark"))
 
 
 # --------------------------------------------------------------------------
@@ -808,17 +772,13 @@ def _mm_sql(dialect: str) -> str:
     """
 
 
-@register(
-    "multimodal_payload_stats",
-    oracle=_mm_sql("duckdb"),
+register_sql(
+    "multimodal_payload_stats", _mm_sql, ["documents"],
     doc="Multimodal columns are opaque binary + typed metadata; this is the "
         "metadata/bytes accounting pass. The decode/feature-extract UDF "
         "plumbing (mapInPandas over binary, stubbed decoders) lives in "
         "operators/multimodal.py with its own tests.",
 )
-def multimodal_payload_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_table(spark, sf_dir, "documents").createOrReplaceTempView("documents")
-    return spark.sql(_mm_sql("spark"))
 
 
 # --------------------------------------------------------------------------
@@ -848,21 +808,16 @@ def _f3_sql_real(dialect: str) -> str:
     """
 
 
-@register(
-    "f3_position_prior",
-    oracle=_f3_sql_real("duckdb"),
+register_sql(
+    "f3_position_prior", _f3_sql_real, ["documents"],
     doc="Adaptive (vendor-free) detection with position priors: confidence "
         "= 50 base + specificity (match length) + ideal-position score "
         "(enhanced_pattern_detector.py:54-356: position contributes up to "
         "20 points, prior peak near the document head). Match position via "
         "instr/strpos of the full match — identical leftmost semantics on "
         "both engines.",
+    spread=True,
 )
-def f3_position_prior(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # r7: spread() widens the single-file scan so the per-doc regex/HOF
-    # projection parallelizes (no-op on already-wide inputs)
-    spread(load_table(spark, sf_dir, "documents")).createOrReplaceTempView("documents")
-    return spark.sql(_f3_sql_real("spark"))
 
 
 # --------------------------------------------------------------------------
@@ -894,18 +849,13 @@ def _topterms_sql(dialect: str) -> str:
     """
 
 
-@register(
-    "text_top_terms",
-    oracle=_topterms_sql("duckdb"),
+register_sql(
+    "text_top_terms", _topterms_sql, ["documents"],
     doc="Stopword-filtered top-5 terms per language — explode + map-side-"
         "combined count + per-group rank; the wordcount shape every corpus "
         "profiling pass uses.",
+    spread=True,
 )
-def text_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # r7: spread() widens the single-file scan so the per-doc regex/HOF
-    # projection parallelizes (no-op on already-wide inputs)
-    spread(load_table(spark, sf_dir, "documents")).createOrReplaceTempView("documents")
-    return spark.sql(_topterms_sql("spark"))
 
 
 # --------------------------------------------------------------------------
@@ -1021,9 +971,8 @@ def _tfidf_sql(dialect: str) -> str:
     """
 
 
-@register(
-    "f16_tfidf_field_context",
-    oracle=_tfidf_sql("duckdb"),
+register_sql(
+    "f16_tfidf_field_context", _tfidf_sql, ["documents"],
     doc="TF-IDF field-context detector (schlage_processor.py:554-624 "
         "MLFieldDetector): per field type, vectorize the pattern bank + the "
         "text units with tf * (ln((1+N)/(1+df)) + 1) and l2 norms, score "
@@ -1033,9 +982,5 @@ def _tfidf_sql(dialect: str) -> str:
         "same shape). All joins/aggs native — the idf is a broadcast-sized "
         "dimension, the pattern-unit join is an equi-join on (field_type, "
         "token).",
+    spread=True,
 )
-def f16_tfidf_field_context(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # r7: spread() widens the single-file scan so the per-doc regex/HOF
-    # projection parallelizes (no-op on already-wide inputs)
-    spread(load_table(spark, sf_dir, "documents")).createOrReplaceTempView("documents")
-    return spark.sql(_tfidf_sql("spark"))

@@ -213,9 +213,9 @@ def _synthetic_result(spark, sf_dir: str) -> DataFrame:
     every JSON section and conditional path is exercised — a vendor field
     (evens), totals (%5=0), an unmapped key for additional_fields (%7=0),
     a second sparse item (%4=0), info (%6=1) and marks (%8=1)."""
-    from .registry import load_table
+    from .registry import bind
 
-    load_table(spark, sf_dir, "documents").createOrReplaceTempView("documents")
+    bind(spark, sf_dir, ["documents"])
     return spark.sql("""
     SELECT cast(doc_id AS string) AS doc_id,
            element_at(array('generic','ceco','schlage','steelcraft'),

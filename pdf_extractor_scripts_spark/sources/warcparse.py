@@ -686,8 +686,8 @@ def read_warc_docs_split(spark, path: str, target_bytes: int = 32 << 20,
                          max_members: int = 4096, error_acc=None):
     """Split (CDX-pattern) WARC reader: index archives into member-
     aligned chunks (~target_bytes compressed, ≤max_members records),
-    shuffle the chunk list so ranges of one monster archive land on
-    different tasks, then seek-read and decode each range
+    deal the chunk list round-robin so ranges of one monster archive land
+    on different tasks, then seek-read and decode each range
     independently. Output schema and salvage semantics match
     read_warc_docs; use when archive sizes are skewed or archives are
     few relative to task slots.
@@ -695,7 +695,10 @@ def read_warc_docs_split(spark, path: str, target_bytes: int = 32 << 20,
     The repartition pins an EXPLICIT partition count: range rows are a
     few hundred bytes, and an AQE bytes-based coalesce would fold the
     whole chunk list back into one task — exactly the straggler the
-    split exists to defuse."""
+    split exists to defuse. Round-robin, not a hash of (file, offset):
+    on few slots a hash places the chunks unevenly. It is
+    retry-deterministic while spark.sql.execution.sortBeforeRepartition
+    is on (the default)."""
     from .spans import read_binary_docs
 
     archives = read_binary_docs(spark, path, glob="*.warc*")
@@ -703,4 +706,4 @@ def read_warc_docs_split(spark, path: str, target_bytes: int = 32 << 20,
                                  max_members=max_members)
     n = spark.sparkContext.defaultParallelism
     return docs_from_warc_ranges(
-        ranges.repartition(n, "warc_file", "offset"), error_acc=error_acc)
+        ranges.repartition(n), error_acc=error_acc)

@@ -18,6 +18,8 @@ from pdf_extractor_scripts_spark.operators.checkpoint import (
 from pdf_extractor_scripts_spark.operators.skew import with_weight, salted_repartition
 from pdf_extractor_scripts_spark.plans.pipeline import run_with_checkpoint
 
+from .conftest import jobs_in_group
+
 N_DOCS = 60
 
 
@@ -231,34 +233,31 @@ def test_a_fresh_commit_is_one_pass(spark, ckpt_dir):
     write that also observes its doc count and buckets: two jobs (that write
     and the commit-row write), and no stage materializes the extraction
     with localCheckpoint."""
-    import time
-
     docs = corpus_df(spark, n_docs=N_DOCS, seed=42)
-    sc = spark.sparkContext
-    tracker = sc.statusTracker()
-
-    def in_group(group: str, fn):
-        sc.setJobGroup(group, group)
-        try:
-            return fn()
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-            sc.setLocalProperty("spark.job.description", None)
-
-    assert in_group("one-pass", lambda: run_with_checkpoint(
-        spark, docs, ckpt_dir, run_id="r1")) == N_DOCS
-    # listener events arrive in order: once a later job is seen, every job
-    # of the commit has been seen too
-    in_group("one-pass-after", lambda: sc.parallelize([1]).count())
-    deadline = time.time() + 30
-    while not tracker.getJobIdsForGroup("one-pass-after") and time.time() < deadline:
-        time.sleep(0.1)
-    assert tracker.getJobIdsForGroup("one-pass-after")
-    jobs = list(tracker.getJobIdsForGroup("one-pass"))
+    count, jobs = jobs_in_group(spark, "one-pass", lambda: run_with_checkpoint(
+        spark, docs, ckpt_dir, run_id="r1"))
+    assert count == N_DOCS
     assert len(jobs) == 2, jobs
+    tracker = spark.sparkContext.statusTracker()
     stages = [tracker.getStageInfo(s) for j in jobs for s in tracker.getJobInfo(j).stageIds]
     names = [st.name for st in stages if st is not None]
     assert names and not [n for n in names if n.startswith("localCheckpoint")], names
+
+
+def test_a_fresh_run_id_is_found_without_reading_its_commits(spark, ckpt_dir, monkeypatch):
+    """A fresh run_id is found by an ``exists`` on its commits directory,
+    not by a read that fails: once a session has run an ``observe``, Spark's
+    observation listener logs an ERROR stack trace for every failed read."""
+    from pdf_extractor_scripts_spark.operators import checkpoint
+
+    docs = corpus_df(spark, n_docs=8, seed=42)
+    assert run_with_checkpoint(spark, docs, ckpt_dir, run_id="r0") == 8
+
+    def read_commits(*args, **kwargs):
+        raise AssertionError("a fresh run_id read the commits table")
+
+    monkeypatch.setattr(checkpoint, "_committed", read_commits)
+    assert run_with_checkpoint(spark, docs, ckpt_dir, run_id="r1") == 8
 
 
 def _ck_rows(run_buckets) -> list:
@@ -291,8 +290,6 @@ def test_resume_reads_only_its_own_runs_checkpoint_rows(spark, ckpt_dir):
     """Resume does not grow with history: after 200 commits of other
     run_ids, resume for a fresh run_id runs no Spark job, and an existing
     run's completed buckets are read from that run's one file."""
-    import time
-
     from pdf_extractor_scripts_spark.operators.checkpoint import (
         _committed,
         _local_rows,
@@ -308,27 +305,11 @@ def test_resume_reads_only_its_own_runs_checkpoint_rows(spark, ckpt_dir):
         "append").partitionBy("run_id").parquet(f"{ckpt_dir}/commits")
     assert len(_committed(spark, ckpt_dir).inputFiles()) == 200
 
-    sc = spark.sparkContext
     keyed = with_partition_key(docs)
-
-    def resume(run_id: str):
-        sc.setJobGroup(f"resume-{run_id}", "resume")
-        try:
-            return resume_filter(keyed, spark, ckpt_dir, run_id)
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-            sc.setLocalProperty("spark.job.description", None)
-
-    assert resume("fresh") is keyed
-    todo = resume("r042")
-    # listener events arrive in order: once r042's resume job is seen, a job
-    # of the fresh run's resume would have been seen too
-    tracker = sc.statusTracker()
-    deadline = time.time() + 30
-    while not tracker.getJobIdsForGroup("resume-r042") and time.time() < deadline:
-        time.sleep(0.1)
-    assert tracker.getJobIdsForGroup("resume-r042")
-    assert list(tracker.getJobIdsForGroup("resume-fresh")) == []
+    fresh, jobs = jobs_in_group(
+        spark, "resume-fresh", lambda: resume_filter(keyed, spark, ckpt_dir, "fresh"))
+    assert fresh is keyed and jobs == []
+    todo = resume_filter(keyed, spark, ckpt_dir, "r042")
 
     files = _committed(spark, ckpt_dir, "r042").inputFiles()
     assert len(files) == 1 and "/run_id=r042/" in files[0], files

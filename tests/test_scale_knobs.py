@@ -223,11 +223,13 @@ def test_portable_hll_accuracy_and_hash_quality(spark):
     buckets → linear counting overestimates ~50%, measured r4)."""
     import math
 
+    from pdf_extractor_scripts_spark.plans.registry import all_specs
     from pdf_extractor_scripts_spark.plans.scalepath import (
-        _HLL_ALPHA, _HLL_M, _HLL_P, _HLL_WORD, sketch_portable_hll,
+        _HLL_ALPHA, _HLL_M, _HLL_P, _HLL_WORD,
     )
 
-    got = {r["event_type"]: r for r in sketch_portable_hll(spark, SF_DIR).collect()}
+    hll = all_specs()["sketch_portable_hll"].spark(spark, SF_DIR)
+    got = {r["event_type"]: r for r in hll.collect()}
     exact = {
         r["event_type"]: r["n"]
         for r in spark.sql(
